@@ -1249,7 +1249,7 @@ def _pagerank_k3_sql(
     ``id`` (reference make_personalization_vector, pagerank.py:81-97 —
     L1-normalized; None → uniform 1/n); wt_sql is an optional edge-weight
     expression over ``e`` — P is then row-normalized over the weights
-    (operators/pagerank.weighted_edges extension) instead of 1/outdeg."""
+    (operators/pagerank.build_graph extension) instead of 1/outdeg."""
     e_sql = e_sql or CS_EDGES_SQL
     v_sql = v_sql or "SELECT DISTINCT id FROM (SELECT src AS id FROM e UNION ALL SELECT dst FROM e)"
     vraw = pv_pred_sql or "1.0"

@@ -12,9 +12,9 @@ all expressed Spark-first: DataFrame joins + vectorized pandas/Arrow UDFs,
 no per-row Python.
 """
 
-from pagerank_project_spark.config import PageRankConfig, EngineConfig
+from pagerank_project_spark.config import PageRankConfig
 from pagerank_project_spark.session import get_spark
 
-__all__ = ["PageRankConfig", "EngineConfig", "get_spark"]
+__all__ = ["PageRankConfig", "get_spark"]
 
 __version__ = "0.1.0"

@@ -21,7 +21,7 @@ point does not depend on x0.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 _MODES: dict[str, tuple[str, str]] = {
     "reference": ("l1", "l2"),
@@ -62,9 +62,7 @@ class PageRankConfig:
     num_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     salt_buckets: int = 8  # salt replication factor for hub vertices
     hub_degree_threshold: int | None = None  # None → auto (mean*32, min 256)
-    checkpoint_dir: str | None = None  # None → localCheckpoint only
-    checkpoint_every: int = 1  # write state every k iterations when dir set
-    local_checkpoint_every: int = 8  # lineage truncation cadence
+    checkpoint_every: int = 1  # write state every k iterations to a checkpoint store
 
     @property
     def norm_x(self) -> str:
@@ -74,13 +72,3 @@ class PageRankConfig:
     def norm_v(self) -> str:
         return mode_norms(self.mode)[1]
 
-
-@dataclass
-class EngineConfig:
-    """Top-level knobs shared by all graph algorithms."""
-
-    num_partitions: int | None = None
-    checkpoint_dir: str | None = None
-    local_checkpoint_every: int = 8
-    max_iterations: int = 100
-    pagerank: PageRankConfig = field(default_factory=PageRankConfig)

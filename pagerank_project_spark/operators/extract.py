@@ -93,9 +93,12 @@ def extract_edges(files: DataFrame, verify_sha: bool = True) -> DataFrame:
             F.when(F.col("lang").isin(*DOTTED_LANGS), F.translate("ref", ".", "/")).otherwise(F.col("ref")),
         )
     )
+    # both sides descend from ``files``: alias them so the repo predicate
+    # resolves per side instead of through Spark's self-join rewrite
+    r, d = refs.alias("r"), dim.alias("d")
     imports = (
-        refs.join(dim, on=[refs.repo == dim.repo, refs.ref_stem == dim.stem], how="inner")
-        .select(F.col("src"), F.col("vid").alias("dst"), F.lit("import").alias("kind"))
+        r.join(d, on=[F.col("r.repo") == F.col("d.repo"), F.col("r.ref_stem") == F.col("d.stem")], how="inner")
+        .select(F.col("r.src"), F.col("d.vid").alias("dst"), F.lit("import").alias("kind"))
     )
 
     # --- requires edges (cross-repo → target repo entry file) -----------

@@ -7,7 +7,8 @@ the normalization mode parameterized (SURVEY.md §5.2): per-iteration
 mode = (l1, l2), the committed-code semantics.
 
 Architecture (SURVEY.md §3.3): the driver composes one DataFrame DAG per
-superstep; Catalyst/AQE pick the physical plan. Per iteration:
+superstep; Catalyst picks the physical plan (AQE is off for the whole
+call, see ``pagerank``). Per iteration:
 
   d  = Σ rank_i over dangling i                  (folded into prev stats)
   q_i = (α·d + (1−α)) · v_i                      (expression)
@@ -16,6 +17,12 @@ superstep; Catalyst/AQE pick the physical plan. Per iteration:
                                                   left join + coalesce)
   x' /= ‖x'‖                                     (scalar from stats action)
   stop when ‖x'−x‖₂ < ε                          (decomposed: one agg row)
+
+The build (``build_graph``) makes ONE driver action before the loop: a
+single aggregate over the persisted vertex map returns every scalar the
+loop needs (n, the endpoint and collision checks, the v sums, the dangling
+count, the edge count). The encoded edge cache is persisted lazily and
+filled by the first superstep.
 
 Exactly ONE action per iteration in the hot loop: the residual
 ``‖x'/s − x‖₂`` is decomposed as ``√(Σx'²/s² − 2Σx'x/s + Σx²)`` so norms,
@@ -32,10 +39,10 @@ Scale notes (100 TB / 1000-executor design):
   else shuffle join co-partitioned with the persisted edges.
 - the groupBy(dst) scatter is shuffle-reduced (map-side partial agg), so a
   high in-degree hub contributes one partial row per partition — skew-safe
-  without salting; AQE skew-join handles the join side (see
-  operators/superstep_csr.py for the explicitly salted CSR path).
-- lineage is truncated via localCheckpoint every ``local_checkpoint_every``
-  iterations (iterative-plan-growth failure mode, SURVEY.md §4).
+  without salting (see operators/superstep_csr.py for the explicitly
+  salted CSR path).
+- lineage is truncated via a lazy localCheckpoint every superstep
+  (iterative-plan-growth failure mode, SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -101,50 +108,165 @@ def apply_filter_ratio(edges: DataFrame, n_vertices: int, ratio: float) -> DataF
     )
 
 
-def weighted_edges(
-    edges: DataFrame, n_vertices: int | None = None, weight_col: str | None = None
-) -> DataFrame:
-    """Transition weights per edge (pagerank.py:50-61).
-
-    Default (reference semantics): w = 1/outdeg(src); parallel edges each
-    carry 1/outdeg — their additive coalescing (torch COO semantics,
-    pagerank.py:63-67) falls out of the Σ in the superstep.
-
-    ``weight_col`` (engine extension beyond the reference's uniform
-    column-stochastic P): w_ij = weight_ij / Σ_j weight_ij — a weighted
-    link graph (click counts, anchor multiplicities) row-normalized the
-    same way. Weights must be strictly positive: a zero/negative weight
-    would silently corrupt the stochasticity of P, so it raises at the
-    first action (raise_error riding the projection). A src whose edges
-    exist only with weight 0 can't occur under that guard, so dangling
-    detection (no surviving out-edge) is unchanged.
-
-    Physical shape is identical either way: one map-side-combined groupBy
-    on src for the normalizer, then a join that broadcasts only when |V|
-    permits.
-    """
-    if weight_col is None:
-        outdeg = edges.groupBy("src").agg(F.count("*").alias("_outdeg"))
-        e = edges
-    else:
-        wt = F.when(
-            F.col(weight_col) > 0, F.col(weight_col).cast("double")
-        ).otherwise(F.raise_error(F.format_string(
-            "weighted pagerank requires strictly positive weights; got %s", F.col(weight_col)
-        )))
-        e = edges.select("src", "dst", wt.alias("_wt"))
-        outdeg = e.groupBy("src").agg(F.sum("_wt").alias("_outdeg"))
+def weighted_edges(edges: DataFrame, n_vertices: int | None = None) -> DataFrame:
+    """w = 1/outdeg(src) per edge (pagerank.py:50-61): one map-side-combined
+    groupBy on src, then a join that broadcasts only when |V| permits.
+    PageRank folds the same normalizer into its vertex map (``build_graph``)."""
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("_outdeg"))
     if n_vertices is None or n_vertices <= BROADCAST_VERTEX_LIMIT:
         outdeg = F.broadcast(outdeg)
-    if weight_col is None:
-        return (
-            e.join(outdeg, "src", "inner")
-            .select("src", "dst", (F.lit(1.0) / F.col("_outdeg")).alias("w"))
-        )
     return (
-        e.join(outdeg, "src", "inner")
-        .select("src", "dst", (F.col("_wt") / F.col("_outdeg")).alias("w"))
+        edges.join(outdeg, "src", "inner")
+        .select("src", "dst", (F.lit(1.0) / F.col("_outdeg")).alias("w"))
     )
+
+
+@dataclass
+class GraphBuild:
+    """PageRank's build side and every scalar the loop needs from it."""
+
+    vmap: DataFrame  # (id, vid, dang, v_raw, …) persisted, hash-partitioned by id
+    edges: DataFrame  # (src: vid, dst: vid, w: double), encoded + weighted, lazy
+    n: int
+    m: int | None  # None → count the edge cache (unvalidated vertex table)
+    v_l1: float  # Σ v_raw
+    v_l2: float  # ‖v_raw‖₂
+    dang: float  # Σ dang (number of dangling vertices)
+
+
+def _v_raw(v_expr: Column | None) -> Column:
+    # personalization indicator (pagerank.py:81-97); None → uniform
+    return F.lit(1.0) if v_expr is None else F.when(v_expr, 1.0).otherwise(0.0).cast("double")
+
+
+def _v_sums() -> list[Column]:
+    return [
+        F.sum("v_raw").alias("l1"),
+        F.sqrt(F.sum(F.pow("v_raw", 2))).alias("l2"),
+        F.sum("dang").alias("dang"),
+    ]
+
+
+def _guard(vmap: DataFrame, n: int, l1: float | None, missing: int = 0) -> None:
+    """The set-up guards in their historical order; the persisted map is
+    released before raising."""
+    from pagerank_project_spark.operators.vids import endpoints_missing_error
+
+    err = None
+    if n == 0:
+        err = ValueError("empty graph")
+    elif missing:
+        err = endpoints_missing_error(missing)
+    elif not l1 or l1 <= 0:
+        err = AssertionError("personalization vector is all-zero (pagerank.py:94)")
+    if err is not None:
+        vmap.unpersist()
+        raise err
+
+
+def build_graph(
+    spark: SparkSession,
+    edges: DataFrame,
+    vertices: DataFrame | None = None,
+    num_partitions: int | None = None,
+    validate_vertices: bool = True,
+    filter_ratio: float | None = None,
+    weight_col: str | None = None,
+    v_expr: Column | None = None,
+) -> GraphBuild:
+    """The encoded, weighted edge table plus its vertex map, in ONE driver
+    action (plus one vertex count when ``filter_ratio`` is set).
+
+    One ``groupBy(src)`` over the (filtered) edges gives each source its
+    out-weight and out-degree; left-joined onto the vertex universe it also
+    marks the danglers (no surviving out-edge, pagerank.py:104-107). ONE
+    aggregate over the persisted map returns n, the endpoints missing from
+    a supplied vertex table, the vid collision check, the v sums, Σdang
+    and Σdeg.
+
+    Weights: w = 1/outdeg(src) (reference semantics, pagerank.py:50-61);
+    with ``weight_col`` (engine extension) w_ij = weight_ij / Σ_j weight_ij.
+    Weights must be strictly positive — a zero/negative one would silently
+    corrupt the stochasticity of P, so it raises at the first action
+    (raise_error riding the projection).
+
+    Endpoint check: endpoints missing from a user-supplied vertex table
+    would be dropped by the encode joins AFTER the out-weights count them
+    (sub-stochastic rows, unmarked danglers: silently wrong ranks). With
+    ``validate_vertices`` the universe is endpoints (known=0) ∪ vertices
+    (known=1) grouped by id, so ``count(*) − Σknown`` counts them.
+
+    Encoding: long vids halve shuffle bytes and double measured superstep
+    speed (4.0 → 2.0 s/iter at 1M vertices / 4M edges, local[8]). vid =
+    xxhash64(id) is DETERMINISTIC under partition recompute (unlike
+    monotonically_increasing_id, which corrupted encoded edges after an
+    executor OOM). Collisions (birthday bound ~2e-7 at 4M vertices) fall
+    back to the string-sorted rank, the only branch that adds jobs.
+    """
+    from pagerank_project_spark.operators import vids
+
+    nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    e = edges
+    if filter_ratio is not None:
+        # the filter's threshold needs n before the build can start
+        e = apply_filter_ratio(e, build_vertices(edges, vertices).count(), filter_ratio)
+    wt = F.lit(1.0) if weight_col is None else F.when(
+        F.col(weight_col) > 0, F.col(weight_col).cast("double")
+    ).otherwise(F.raise_error(F.format_string(
+        "weighted pagerank requires strictly positive weights; got %s", F.col(weight_col)
+    )))
+    e = e.select("src", "dst", wt.alias("_wt"))
+    out = e.groupBy(F.col("src").alias("id")).agg(
+        F.sum("_wt").alias("_outw"), F.count("*").alias("_deg")
+    )
+
+    if vertices is not None and validate_vertices:
+        ends = edges.select(F.col("src").alias("id")).unionByName(edges.select(F.col("dst").alias("id")))
+        universe = (
+            ends.select("id", F.lit(0).alias("_known"))
+            .unionByName(vertices.select("id", F.lit(1).alias("_known")))
+            .groupBy("id")
+            .agg(F.max("_known").alias("_known"))
+        )
+    else:
+        universe = build_vertices(edges, vertices).withColumn("_known", F.lit(1))
+    vmap = (
+        vids.hashed_vids(universe.join(out, "id", "left"))
+        .select(
+            "id", "vid", F.when(F.col("_outw").isNull(), 1.0).otherwise(0.0).alias("dang"),
+            _v_raw(v_expr).alias("v_raw"), "_outw", "_deg", "_known",
+        )
+        .repartition(nparts, "id")
+        .persist()
+    )
+    s = vmap.agg(
+        F.count("*").alias("rows"),
+        F.sum("_known").alias("n"),
+        F.count_distinct("vid").alias("nv"),
+        F.sum("_deg").alias("deg"),
+        *_v_sums(),
+    ).first()
+    n = s["n"] or 0
+    _guard(vmap, n, s["l1"], missing=s["rows"] - n)
+    if s["nv"] != n:  # hash collision → deterministic fallback
+        # distributed string-sorted rank (range exchange + per-partition
+        # sort + offsets — no single-task global sort even at 10^12 ids)
+        sorted_map = vids.string_sorted_vids(vmap.select("id"), "id", nparts)
+        fallback = vmap.drop("vid").join(sorted_map, "id").repartition(nparts, "id").persist()
+        fallback.count()
+        vmap.unpersist()
+        sorted_map.unpersist()
+        vmap = fallback
+
+    ew = (
+        e.join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s"), "_outw"), "src")
+        .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
+        .select(F.col("_s").alias("src"), F.col("_t").alias("dst"), (F.col("_wt") / F.col("_outw")).alias("w"))
+    )
+    # every edge survives the encode joins when the universe holds all its
+    # endpoints; an unvalidated vertex table may drop some, so count those
+    m = int(s["deg"] or 0) if vertices is None or validate_vertices else None
+    return GraphBuild(vmap, ew, n, m, s["l1"], s["l2"], s["dang"])
 
 
 def pagerank(
@@ -164,7 +286,7 @@ def pagerank(
     (pagerank.py:81-97). None → uniform.
     weight_col: optional strictly-positive edge-weight column —
     P becomes the row-normalized WEIGHTED transition matrix
-    (see ``weighted_edges``); None keeps reference 1/outdeg semantics.
+    (see ``build_graph``); None keeps reference 1/outdeg semantics.
     checkpoint_store: optional plans.checkpoint.CheckpointStore — iteration
     state + metrics written per superstep; pass a store with a populated
     latest iteration to RESUME mid-run.
@@ -175,7 +297,6 @@ def pagerank(
     filter is baked at prepare time, so cfg.filter_ratio must be unset.
     """
     cfg = cfg or PageRankConfig()
-    sc = spark.sparkContext
     t_start = time.time()
 
     if (edges is None) == (prepared is None):
@@ -188,150 +309,69 @@ def pagerank(
                          "pass weight_col to prepare_graph, not the query")
 
     nparts = cfg.num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # AQE's per-stage re-planning costs ~30% per superstep (measured at sf1)
+    # and a Spark job per shuffle stage, and buys nothing in a call whose
+    # shape and partitioning are fixed — disable it for the build and the
+    # hot loop, restore the caller's setting after (also when a step
+    # raises: AQE must not stay disabled for the caller's session).
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        if prepared is None:
+            g = build_graph(
+                spark, edges, vertices, nparts, cfg.validate_vertices, cfg.filter_ratio, weight_col, v_expr
+            )
+        else:
+            # encode, weights and dangling flags already on disk: one
+            # aggregate for the query-time v sums, zero joins
+            vmap = (
+                prepared.base.select(
+                    "id", "vid", F.col("dang").cast("double").alias("dang"), _v_raw(v_expr).alias("v_raw")
+                )
+                .repartition(nparts, "id")
+                .persist()
+            )
+            s = vmap.agg(*_v_sums()).first()
+            _guard(vmap, prepared.n, s["l1"])
+            g = GraphBuild(vmap, prepared.edges, prepared.n, prepared.m, s["l1"], s["l2"], s["dang"])
+        bucketed = prepared is not None and prepared.buckets == nparts
+        return _run_loop(spark, cfg, g, nparts, t_start, checkpoint_store, bucketed)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
-    if prepared is not None:
-        n = prepared.n
-        if n == 0:
-            raise ValueError("empty graph")
-        state = prepared.base.select("id", "vid", F.col("dang").cast("double").alias("dang"))
-    else:
-        verts = build_vertices(edges, vertices)
-        n = verts.count()
-        if n == 0:
-            raise ValueError("empty graph")
 
-        if vertices is not None and cfg.validate_vertices:
-            # Endpoints missing from a user-supplied vertex table would be
-            # silently dropped by the encode join below — but 1/outdeg weights
-            # are computed BEFORE that drop, leaving sub-stochastic rows and
-            # unmarked danglers (silently wrong ranks). One setup-time guard.
-            from pagerank_project_spark.operators.vids import assert_endpoints_covered
-
-            assert_endpoints_covered(edges, verts)
-
-        e = (
-            edges.select("src", "dst")
-            if weight_col is None
-            else edges.select("src", "dst", weight_col)
-        )
-        if cfg.filter_ratio is not None:
-            e = apply_filter_ratio(e, n, cfg.filter_ratio)
-
-        ew_str = weighted_edges(e, n, weight_col=weight_col)
-
-        # dangling indicator: vertices with no surviving out-edge (pagerank.py:104-107)
-        dang = verts.join(ew_str.select("src").distinct(), verts.id == F.col("src"), "left_anti")
-        state = verts.join(dang.select(F.col("id").alias("_d")), verts.id == F.col("_d"), "left").select(
-            "id", F.when(F.col("_d").isNotNull(), 1.0).otherwise(0.0).alias("dang")
-        )
-
-    # personalization vector v (pagerank.py:81-97): L1-normalized indicator,
-    # then re-normalized by norm_v inside power_method (pagerank.py:93-95,:113)
-    if v_expr is not None:
-        state = state.withColumn("v_raw", F.when(v_expr, 1.0).otherwise(0.0).cast("double"))
-    else:
-        state = state.withColumn("v_raw", F.lit(1.0))
-    v_sums = state.agg(
-        F.sum("v_raw").alias("l1"), F.sqrt(F.sum(F.pow("v_raw", 2))).alias("l2")
-    ).first()
-    if not v_sums["l1"] or v_sums["l1"] <= 0:
-        raise AssertionError("personalization vector is all-zero (pagerank.py:94)")
-    v_l1 = v_sums["l1"]
+def _run_loop(spark, cfg, g, nparts, t_start, checkpoint_store, bucketed) -> PageRankResult:
+    """The shared tail of the build-in-run and prepared-graph paths: persist
+    the edge cache, init/resume the iteration state and run the hot loop."""
+    vmap, n = g.vmap, g.n
     # reference: v /= sum(v) (L1, :95) then v /= torch.norm(v) (L2, :113).
     # norm_v selects the final normalization; composition: v_raw/l1 then /‖·‖.
-    v_after_l1_l2 = v_sums["l2"] / v_l1  # L2 norm of (v_raw / l1)
-    v_scale = 1.0 / (v_l1 * (v_after_l1_l2 if cfg.norm_v == "l2" else 1.0))
+    v_after_l1_l2 = g.v_l2 / g.v_l1  # L2 norm of (v_raw / l1)
+    v_scale = 1.0 / (g.v_l1 * (v_after_l1_l2 if cfg.norm_v == "l2" else 1.0))
 
-    if prepared is not None:
-        # encode already on disk: (id, vid, dang) + v_raw from the v block —
-        # zero joins, zero shuffles beyond the one id-repartition
-        vmap = state.select("id", "vid", "dang", "v_raw").repartition(nparts, "id").persist()
-        ew_enc = prepared.edges
-        hubs = None
-        if cfg.strategy == "csr":
-            from pagerank_project_spark.operators.superstep_csr import prepare_salted_edges
-
-            ew, hubs = prepare_salted_edges(ew_enc, nparts, cfg.salt_buckets, cfg.hub_degree_threshold)
-            ew = ew.persist()
-            hubs = hubs.persist()
-            hubs.count()
-        elif prepared.buckets == nparts:
-            # the bucketed scan already reports HashPartitioning(src, nparts)
-            # and per-bucket sorted output — the in-run repartition+sort
-            # setup shuffle vanishes entirely
-            ew = ew_enc.persist()
-        else:
-            ew = ew_enc.repartition(nparts, "src").sortWithinPartitions("src").persist()
-        m = ew.count()
-        return _run_loop(
-            spark, cfg, vmap, ew, hubs, n, m, nparts, t_start,
-            checkpoint_store, v_scale,
-        )
-
-    # --- internal dictionary encoding: string id → long vid ----------------
-    # Long join keys halve shuffle bytes and double measured superstep speed
-    # (4.0 → 2.0 s/iter at 1M vertices / 4M edges, local[8]). vid =
-    # xxhash64(id): DETERMINISTIC under partition loss/recompute —
-    # monotonically_increasing_id is not, and a recomputed cache partition
-    # with reshuffled row order silently corrupts every already-encoded
-    # edge (observed as garbage convergence after an executor OOM in
-    # local-cluster testing). Collisions are checked (birthday bound ~2e-7
-    # at 4M vertices) and fall back to a sorted row_number; at 10^12
-    # vertices swap the fallback for a range-partitioned rank. String ids
-    # reappear only at the API and checkpoint boundaries.
-    vmap = (
-        state.withColumn("vid", F.xxhash64("id"))
-        .select("id", "vid", "dang", "v_raw")
-        .repartition(nparts, "id")
-        .persist()
-    )
-    counts = vmap.agg(F.count("*").alias("n"), F.count_distinct("vid").alias("nv")).first()
-    if counts["nv"] != counts["n"]:  # hash collision → deterministic fallback
-        # distributed string-sorted rank (range exchange + per-partition
-        # sort + offsets — no single-task global sort even at 10^12 ids)
-        from pagerank_project_spark.operators.vids import string_sorted_vids
-
-        vmap.unpersist()
-        sorted_map = string_sorted_vids(state.select("id"), "id", nparts)
-        vmap = (
-            state.join(sorted_map, "id")
-            .select("id", "vid", "dang", "v_raw")
-            .repartition(nparts, "id")
-            .persist()
-        )
-        vmap.count()
-        sorted_map.unpersist()
-    ew_enc = (
-        ew_str.join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
-        .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
-        .select(F.col("_s").alias("src"), F.col("_t").alias("dst"), "w")
-    )
+    # the edge cache is persisted lazily: the first superstep fills it
     hubs = None
     if cfg.strategy == "csr":
         from pagerank_project_spark.operators.superstep_csr import prepare_salted_edges
 
-        ew, hubs = prepare_salted_edges(ew_enc, nparts, cfg.salt_buckets, cfg.hub_degree_threshold)
+        ew, hubs = prepare_salted_edges(g.edges, nparts, cfg.salt_buckets, cfg.hub_degree_threshold)
         ew = ew.persist()
         hubs = hubs.persist()
         hubs.count()
+    elif bucketed:
+        # the bucketed scan already reports HashPartitioning(src, nparts)
+        # and per-bucket sorted output — the in-run repartition+sort
+        # setup shuffle vanishes entirely
+        ew = g.edges.persist()
     else:
         # sortWithinPartitions: the cached InMemoryRelation then reports an
         # outputOrdering on the join key, so the per-iteration sort-merge
         # join sorts ONLY the (|V|-row) rank side — the edges are sorted
         # once here, never again (measured: edge-side per-iteration sort is
         # the single largest superstep cost at sf≥1 without this).
-        ew = ew_enc.repartition(nparts, "src").sortWithinPartitions("src").persist()
-    m = ew.count()  # materialize the partitioned, weighted, encoded edges once
-    return _run_loop(
-        spark, cfg, vmap, ew, hubs, n, m, nparts, t_start, checkpoint_store, v_scale,
-    )
+        ew = g.edges.repartition(nparts, "src").sortWithinPartitions("src").persist()
+    m = g.m if g.m is not None else ew.count()
 
-
-def _run_loop(
-    spark, cfg, vmap, ew, hubs, n, m, nparts, t_start, checkpoint_store, v_scale,
-) -> PageRankResult:
-    """Init/resume the iteration state from a built (vmap, ew) pair and run
-    the hot loop — shared by the build-in-run and prepared-graph paths."""
     start_iter = 0
     resumed = False
     if checkpoint_store is not None:
@@ -354,9 +394,12 @@ def _run_loop(
         )
     cur = cur.repartition(nparts, "id").localCheckpoint(eager=False)
 
-    # initial dangling mass d = x·a (pagerank.py:125); the agg also
-    # materializes the lazily-checkpointed initial state
-    d = cur.agg(F.sum(F.col("rank") * F.col("dang"))).first()[0] or 0.0
+    # initial dangling mass d = x·a (pagerank.py:125): x0 is uniform 1/√n on
+    # a fresh start; a resume aggregates the checkpointed state (the agg
+    # also materializes it)
+    d = g.dang / math.sqrt(n)
+    if resumed:
+        d = cur.agg(F.sum(F.col("rank") * F.col("dang"))).first()[0] or 0.0
 
     alpha = cfg.alpha
     residuals: list[float] = []
@@ -365,21 +408,10 @@ def _run_loop(
     setup_sec = time.time() - t_start
     iter_secs: list[float] = []
 
-    # AQE's per-stage re-planning costs ~30% per superstep (measured at sf1)
-    # and buys nothing in a loop whose shape/partitioning is fixed — disable
-    # it for the hot loop only, restore the caller's setting after.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-
-    try:
-        converged, it, cur = _iterate(
-            spark, cfg, cur, ew, hubs, n, d, alpha, start_iter, residuals, iter_secs,
-            checkpoint_store, vmap,
-        )
-    finally:
-        # restore even when a superstep raises (job failure, non-finite
-        # stats) — AQE must not stay disabled for the caller's session
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+    converged, it, cur = _iterate(
+        spark, cfg, cur, ew, hubs, n, d, alpha, start_iter, residuals, iter_secs,
+        checkpoint_store, vmap,
+    )
 
     # decode back to string vertex ids (op-9, pagerank.py:68,77-78)
     result = (

@@ -97,6 +97,14 @@ def string_sorted_vids(
     return out
 
 
+def endpoints_missing_error(missing: int) -> ValueError:
+    return ValueError(
+        f"{missing} edge endpoint(s) are not in the supplied vertices table; "
+        "pass vertices=None to derive the universe from the edges, or fix the table "
+        "(validate_vertices=False skips this check)"
+    )
+
+
 def assert_endpoints_covered(edges: DataFrame, verts: DataFrame) -> None:
     """Guard against the silent-subgraph failure: endpoints missing from a
     user-supplied vertex table would be dropped by the encode joins, and
@@ -110,23 +118,4 @@ def assert_endpoints_covered(edges: DataFrame, verts: DataFrame) -> None:
         .count()
     )
     if missing:
-        raise ValueError(
-            f"{missing} edge endpoint(s) are not in the supplied vertices table; "
-            "pass vertices=None to derive the universe from the edges, or fix the table "
-            "(validate_vertices=False skips this check)"
-        )
-
-
-def encode_or_fallback(
-    verts: DataFrame, id_col: str = "id", num_partitions: int | None = None
-) -> DataFrame:
-    """hashed_vids with collision check; collision → string_sorted_vids.
-    Returns a persisted, materialized (id, vid) map."""
-    spark = SparkSession.getActiveSession()
-    nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    vmap = hashed_vids(verts.select(id_col)).repartition(nparts, id_col).persist()
-    counts = vmap.agg(F.count("*").alias("n"), F.count_distinct("vid").alias("nv")).first()
-    if counts["nv"] != counts["n"]:
-        vmap.unpersist()
-        return string_sorted_vids(verts, id_col, nparts)
-    return vmap
+        raise endpoints_missing_error(missing)

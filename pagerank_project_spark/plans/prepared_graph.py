@@ -8,8 +8,8 @@ vectors, different modes, CC, LPA) over one slowly-changing graph, so the
 build belongs in a prepare step whose output is a persistent table:
 
 - ``{path}/vertices``: parquet ``(id string, vid long, dang double)`` —
-  the dictionary encoding (xxhash64 with the collision fallback of
-  ``vids.encode_or_fallback``) plus the dangling indicator.
+  the dictionary encoding (xxhash64 with the string-sorted collision
+  fallback of ``pagerank.build_graph``) plus the dangling indicator.
 - ``{path}/edges``: a BUCKETED, per-bucket-SORTED parquet table
   ``(src long, dst long, w double)``, ``CLUSTERED BY (src) … INTO n
   BUCKETS``. A bucketed scan reports ``HashPartitioning(src, n)`` (Spark's
@@ -68,46 +68,21 @@ def prepare_graph(
 ) -> PreparedGraph:
     """Build and persist the query-independent graph state; returns the
     loaded PreparedGraph (reading back what was written, so callers hold
-    the exact artifact later sessions will see)."""
-    from pagerank_project_spark.operators.pagerank import (
-        apply_filter_ratio,
-        build_vertices,
-        weighted_edges,
-    )
-    from pagerank_project_spark.operators.vids import assert_endpoints_covered, encode_or_fallback
+    the exact artifact later sessions will see). The build is PageRank's
+    own (``build_graph``), with the supplied vertex table always validated."""
+    from pagerank_project_spark.operators.pagerank import build_graph
 
     buckets = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = build_vertices(edges, vertices)
-    n = verts.count()
-    if n == 0:
-        raise ValueError("empty graph")
-    if vertices is not None:
-        assert_endpoints_covered(edges, verts)
-
-    e = edges.select("src", "dst") if weight_col is None else edges.select("src", "dst", weight_col)
-    if filter_ratio is not None:
-        e = apply_filter_ratio(e, n, filter_ratio)
-    ew_str = weighted_edges(e, n, weight_col=weight_col)
-
-    vmap = encode_or_fallback(verts, "id", buckets)
-    dang = verts.join(ew_str.select("src").distinct(), verts.id == F.col("src"), "left_anti")
-    base = (
-        vmap.join(dang.select(F.col("id").alias("_d")), vmap.id == F.col("_d"), "left")
-        .select("id", "vid", F.when(F.col("_d").isNotNull(), 1.0).otherwise(0.0).alias("dang"))
-    )
-    ew_enc = (
-        ew_str.join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
-        .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
-        .select(F.col("_s").alias("src"), F.col("_t").alias("dst"), "w")
-    )
+    g = build_graph(spark, edges, vertices, buckets, filter_ratio=filter_ratio, weight_col=weight_col)
 
     os.makedirs(path, exist_ok=True)
-    base.repartition(buckets, "id").write.mode("overwrite").parquet(f"{path}/vertices")
+    # the map is already hash-partitioned by id into ``buckets`` partitions
+    g.vmap.select("id", "vid", "dang").write.mode("overwrite").parquet(f"{path}/vertices")
 
     tbl = _edges_table_name(path)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     (
-        ew_enc.repartition(buckets, "src")  # same hash as the bucket spec → ONE file per bucket
+        g.edges.repartition(buckets, "src")  # same hash as the bucket spec → ONE file per bucket
         .write.format("parquet")
         .bucketBy(buckets, "src")
         .sortBy("src")
@@ -115,13 +90,12 @@ def prepare_graph(
         .mode("overwrite")
         .saveAsTable(tbl)
     )
-    m = spark.table(tbl).count()
-    manifest = {"version": PREPARED_VERSION, "n": n, "m": m, "buckets": buckets, "table": tbl}
+    manifest = {"version": PREPARED_VERSION, "n": g.n, "m": g.m, "buckets": buckets, "table": tbl}
     tmp = f"{path}/manifest.json.tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
     os.replace(tmp, f"{path}/manifest.json")  # manifest-last: partial writes are invisible
-    vmap.unpersist()
+    g.vmap.unpersist()
     return load_prepared(spark, path)
 
 

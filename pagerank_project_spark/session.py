@@ -16,6 +16,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _quarter_of_memory() -> str:
+    """A quarter of the machine's physical memory, as a Spark size string."""
+    return f"{os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') // (4 << 20)}m"
+
+
 def get_spark(
     app_name: str = "pagerank_project_spark",
     cores: int | None = None,
@@ -43,7 +48,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _quarter_of_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

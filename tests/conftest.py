@@ -1,10 +1,11 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pagerank_project_spark.session import get_spark
 
@@ -23,10 +24,15 @@ def sf0001_fixture():
 
 
 @pytest.fixture(scope="session")
-def small_rows():
-    """The reference small.csv.gz edge rows (FIXTURES.md §F1)."""
-    import csv
-    import gzip
+def small_csv():
+    """The F1 edge list (FIXTURES.md §F1) as a ``source,target`` CSV."""
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)), "data", "small.csv")
 
-    with gzip.open("/root/reference/Data/small.csv.gz", "rt") as f:
+
+@pytest.fixture(scope="session")
+def small_rows(small_csv):
+    """The F1 edge rows in file order."""
+    import csv
+
+    with open(small_csv, newline="") as f:
         return [(r["source"], r["target"]) for r in csv.DictReader(f)]

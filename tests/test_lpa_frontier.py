@@ -75,14 +75,14 @@ def test_frontier_threshold_zero_never_filters(spark):
     assert _labels(fr) == _labels(full)
 
 
-def test_cli_ppr_sample_and_frontier(capsys):
+def test_cli_ppr_sample_and_frontier(capsys, small_csv):
     """--algorithm ppr/sample and --lpa_frontier over the reference edge
     list: ppr prints per-seed ranked lines with the seed holding >= 1-alpha
     restart mass, sample prints per-hop counts, frontier LPA reports its
     shrinking changed sets."""
     from pagerank_project_spark.cli import main
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "ppr", "--seeds_like", "4",
                "--power", "3", "--max_results", "3", "--cores", "4"])
     out = capsys.readouterr().out
@@ -90,14 +90,14 @@ def test_cli_ppr_sample_and_frontier(capsys):
     lines = [ln for ln in out.splitlines() if ln.startswith("seed=4")]
     assert lines and "rnk=1" in lines[0]
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "sample", "--seeds_like", "4",
                "--fanouts", "2,2", "--cores", "4"])
     out = capsys.readouterr().out
     assert rc == 0
     assert any(ln.startswith("hop=1 n_edges=") for ln in out.splitlines())
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz",
+    rc = main(["--data", small_csv,
                "--algorithm", "lpa", "--lpa_iterations", "8",
                "--lpa_frontier", "--cores", "4"])
     out = capsys.readouterr().out

@@ -192,13 +192,13 @@ def test_corpus_synonyms_expand_search(spark):
 
 # --- CLI end-to-end ----------------------------------------------------------
 
-def test_cli_end_to_end_small_graph(capsys):
+def test_cli_end_to_end_small_graph(capsys, small_csv):
     """cli.main on the reference's small.csv.gz: committed-code semantics —
     README.md:137-142 goldens (+ the search() sum_weight boost) in l2l2
     mode, 6 results in the pinned order."""
     from pagerank_project_spark.cli import main
 
-    rc = main(["--data", "/root/reference/Data/small.csv.gz", "--mode", "l2l2", "--cores", "4"])
+    rc = main(["--data", small_csv, "--mode", "l2l2", "--cores", "4"])
     out = capsys.readouterr().out
     assert rc == 0
     lines = [ln for ln in out.splitlines() if ln.startswith("rank=")]

@@ -237,7 +237,7 @@ def test_lpa_int_vid_narrowing_bitwise_and_schema(spark, tmp_path, monkeypatch):
     assert dict(narrow.labels.dtypes) == {"id": "string", "label": "string"}
 
 
-def test_cli_lpa_prepare_and_run_from_artifact(spark, tmp_path, capsys):
+def test_cli_lpa_prepare_and_run_from_artifact(spark, tmp_path, capsys, small_csv):
     """Round-5 CLI surface: --algorithm lpa --prepare bakes the undirected
     artifact (slots-bucketing deployment rule), and --prepared_dir runs the
     loop from it (with --lpa_warm_start) producing labels identical to the
@@ -246,7 +246,7 @@ def test_cli_lpa_prepare_and_run_from_artifact(spark, tmp_path, capsys):
 
     from pagerank_project_spark.cli import main
 
-    data = "/root/reference/Data/small.csv.gz"
+    data = small_csv
     pdir = str(tmp_path / "pu")
     rc = main(["--data", data, "--algorithm", "lpa", "--prepare",
                "--prepared_dir", pdir, "--num_partitions", "4", "--cores", "4"])
