@@ -27,18 +27,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    # window fingerprint BEFORE spark starts: the sandbox's aggregate DRAM
-    # bandwidth fluctuates >5x between quiet and noisy-neighbor windows
-    # (tools/membw.py), and every memory-bound query tracks that ceiling —
-    # the probe lets a round-over-round BENCH diff distinguish a code
-    # regression from a degraded measurement window.
-    try:
-        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-        from tools.membw import probe
+    # host-noise fingerprint: the CPU steal fraction over the whole run (the
+    # /proc/stat counter perfbench reports), so a round-over-round BENCH diff
+    # can tell a code regression from a stolen host
+    from perfbench.run import cpu_steal
 
-        membw = probe(ways=(1, 16))
-    except Exception:
-        membw = {}
+    steal0 = cpu_steal()
 
     from __spark_entry__ import (
         _sf_of,
@@ -241,6 +235,7 @@ def main() -> None:
         dup_ngram_profile(spark.read.parquet(f"{sf_dir}/documents.parquet"), n=8).count()
 
     total = round(time.time() - t_all, 3)
+    steal1 = cpu_steal()
     print(
         json.dumps(
             {
@@ -252,7 +247,7 @@ def main() -> None:
                 "cpus": cpus,
                 "n_vertices": n_verts,
                 "n_edges": n_edges,
-                "membw_gbps": membw,
+                "steal_frac": round((steal1[1] - steal0[1]) / max(1, steal1[0] - steal0[0]), 4),
                 **extra,
             }
         )

@@ -112,6 +112,13 @@ def main(argv: list[str] | None = None) -> int:
               "re-prepare with the desired ratio instead of passing it at query time",
               file=sys.stderr)
         return 2
+    if args.prepare and args.algorithm == "lpa" and args.filter_ratio is not None:
+        # the undirected artifact has no spam filter: a filtered request
+        # would silently get an unfiltered graph
+        print("--filter_ratio is not applied to the undirected (lpa) artifact; "
+              "prepare without it, or prepare the pagerank artifact to bake the filter",
+              file=sys.stderr)
+        return 2
     if not args.data and not use_prepared:
         print("--data is required (or pass --prepared_dir to run from a prepared graph)",
               file=sys.stderr)

@@ -76,8 +76,10 @@ per-algorithm, because the two modes make different promises about
 intermediate state:
 
 - ``propagation`` (and any caller-supplied ``vmap``): dense STRING-SORTED
-  vids (operators/vids.string_sorted_vids — range exchange + parallel
-  per-partition sort; no global single-task sort). min over vids is then
+  vids from ``vids.undirected_build`` — the one undirected build, shared
+  with LPA and ``prepare_undirected`` (range exchange + parallel
+  per-partition sort; no global single-task sort; the endpoint guard,
+  ranking and offsets in ONE driver action). min over vids is then
   EXACTLY min over string ids at every intermediate superstep, so
   fixed-iteration results and mid-run checkpoints match a string-space
   oracle on ANY graph — not only those that converge within the budget.
@@ -95,6 +97,15 @@ intermediate state:
 Checkpoint state is algorithm-specific (labels for propagation, the
 contracted edge set for star); a store written by one algorithm refuses
 to resume under the other.
+
+The whole call, build included, runs with AQE off (restored in
+``finally``): re-planning per stage made every build shuffle its own
+Spark job, so a star call is now three (collision check, canonical-edge
+fill, driver finish). Cost at scale: AQE's skew-join no longer splits a
+hub partition of the sorted path's encode joins. A warm call (same
+graph, same session) compiles no generated class, because
+``session.get_spark`` sizes Spark's codegen cache to the engine; sessions
+built elsewhere keep Spark's 100-entry default.
 """
 
 from __future__ import annotations
@@ -105,7 +116,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pagerank_project_spark.operators.vids import string_sorted_vids
+from pagerank_project_spark.operators.vids import (
+    canonical_pairs,
+    symmetric_pairs,
+    undirected_build,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -523,7 +538,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     max_iterations: int = 200,
     num_partitions: int | None = None,
-    local_checkpoint_every: int = 8,  # kept for API compat; truncation is per-iteration
     checkpoint_store=None,
     algorithm: str = "star",  # star (contraction, default) | propagation (fixed-iteration oracle)
     validate_vertices: bool = True,
@@ -550,7 +564,6 @@ def connected_components(
     actually contends with; setting ``driver_finish_edges=0`` forces
     fully-distributed rounds."""
     from pagerank_project_spark.operators.pagerank import build_vertices
-    from pagerank_project_spark.operators.vids import assert_endpoints_covered
 
     if algorithm not in ("star", "propagation"):
         raise ValueError(f"unknown algorithm {algorithm!r}; one of ['star', 'propagation']")
@@ -558,79 +571,65 @@ def connected_components(
 
     phases: dict = {}
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = build_vertices(edges, vertices)
     do_validate = vertices is not None and validate_vertices
-
-    # Encode (see module doc): star mode hashes inline (zero setup
-    # shuffles) unless the collision check fails or the caller supplied a
-    # vmap; propagation needs order-preserving string-sorted vids.
-    t_ph = _time.time()
-    order_preserving = True
-    if algorithm == "star" and vmap is None:
-        chk = verts.agg(
-            F.count("*").alias("n"), F.count_distinct(F.xxhash64("id")).alias("nv")
-        ).first()
-        if chk["nv"] == chk["n"]:
-            order_preserving = False
-            vmap = verts.select("id", F.xxhash64("id").alias("vid"))
-            enc = edges.select(
-                F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
-            )
-    if order_preserving:
-        if do_validate:
-            # the encode joins below are INNER — missing endpoints would
-            # silently drop edges, so guard before encoding
-            t_v = _time.time()
-            assert_endpoints_covered(edges, verts)
-            phases["validate"] = round(_time.time() - t_v, 3)
-        if vmap is None:
-            vmap = string_sorted_vids(verts, "id", nparts)
-        enc = (
-            edges.select("src", "dst")
-            .join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
-            .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
-            .select(F.col("_s").alias("src"), F.col("_t").alias("dst"))
-        )
-    phases["encode"] = round(_time.time() - t_ph, 3)
-    # ONE setup shuffle: canonical (max→min) orientation dedup'd on LONG
-    # pairs (the old string-pair symmetrize+distinct shuffled 2× the rows
-    # at ~5× the bytes). The symmetric view propagation needs is derived
-    # from this — canon is distinct and self-loop-free, so canon ∪
-    # reverse(canon) IS the symmetric distinct edge set, no second dedup.
-    canon = (
-        enc.select(F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    t_ph = _time.time()
-    stats0 = _edge_stats(canon)  # materializes the cache (and the first fingerprint)
-    phases["setup_materialize"] = round(_time.time() - t_ph, 3)
-    # Hash-path endpoint-coverage guard: the hash encode never drops edges
-    # (no join), but endpoints absent from `vertices` would be silently
-    # MISSING from the label output (labels are built off the vertex
-    # table). Instead of a standalone anti-join (measured 36-89 s at sf32
-    # — a whole setup phase), the check is FUSED into the final decode
-    # join: it becomes a full_outer there and any active vertex without a
-    # vmap match trips F.raise_error at the caller's first action (see
-    # _run_star). Star contraction preserves non-isolated vertex support
-    # every round, so the final active_map still contains every
-    # non-isolated endpoint — the fused check is complete, not a sample.
-    validate_fused = do_validate and not order_preserving
-
-    stored_algo = None
-    start_iter = 0
-    if checkpoint_store is not None and checkpoint_store.latest_iteration() is not None:
-        start_iter = checkpoint_store.latest_iteration()
-        stored_algo = checkpoint_store.metrics()[start_iter].get("algorithm", "propagation")
-        if stored_algo != algorithm:
-            raise ValueError(
-                f"checkpoint store holds {stored_algo!r} state; cannot resume with algorithm={algorithm!r}"
-            )
-
+    # the whole call runs with AQE off: its per-stage re-planning makes
+    # every build shuffle its own Spark job and buys nothing in a call
+    # whose shape and partitioning are fixed. Restored even when a step
+    # raises — AQE must not stay disabled for the caller's session.
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
+        # Encode (see module doc): star mode hashes inline (zero setup
+        # shuffles) unless the collision check fails or the caller supplied
+        # a vmap; propagation needs order-preserving string-sorted vids.
+        t_ph = _time.time()
+        canon = None
+        if algorithm == "star" and vmap is None:
+            verts = build_vertices(edges, vertices)
+            chk = verts.agg(
+                F.count("*").alias("n"), F.count_distinct(F.xxhash64("id")).alias("nv")
+            ).first()
+            if chk["nv"] == chk["n"]:
+                vmap = verts.select("id", F.xxhash64("id").alias("vid"))
+                canon = canonical_pairs(
+                    edges.select(F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst"))
+                )
+        order_preserving = canon is None
+        if order_preserving:
+            # the encode joins are INNER — the build guards missing
+            # endpoints before anything is encoded
+            ub = undirected_build(edges, vertices, nparts, validate_vertices, vmap, narrow=False)
+            vmap, canon = ub.vmap, ub.canon
+        phases["encode"] = round(_time.time() - t_ph, 3)
+        # ONE setup shuffle: canonical (max→min) orientation dedup'd on LONG
+        # pairs (the old string-pair symmetrize+distinct shuffled 2× the rows
+        # at ~5× the bytes). The symmetric view propagation needs is derived
+        # from this, with no second dedup (vids.symmetric_pairs).
+        canon = canon.persist()
+        t_ph = _time.time()
+        stats0 = _edge_stats(canon)  # materializes the cache (and the first fingerprint)
+        phases["setup_materialize"] = round(_time.time() - t_ph, 3)
+        # Hash-path endpoint-coverage guard: the hash encode never drops edges
+        # (no join), but endpoints absent from `vertices` would be silently
+        # MISSING from the label output (labels are built off the vertex
+        # table). Instead of a standalone anti-join (measured 36-89 s at sf32
+        # — a whole setup phase), the check is FUSED into the final decode
+        # join: it becomes a full_outer there and any active vertex without a
+        # vmap match trips F.raise_error at the caller's first action (see
+        # _run_star). Star contraction preserves non-isolated vertex support
+        # every round, so the final active_map still contains every
+        # non-isolated endpoint — the fused check is complete, not a sample.
+        validate_fused = do_validate and not order_preserving
+
+        start_iter = 0
+        if checkpoint_store is not None and checkpoint_store.latest_iteration() is not None:
+            start_iter = checkpoint_store.latest_iteration()
+            stored_algo = checkpoint_store.metrics()[start_iter].get("algorithm", "propagation")
+            if stored_algo != algorithm:
+                raise ValueError(
+                    f"checkpoint store holds {stored_algo!r} state; cannot resume with algorithm={algorithm!r}"
+                )
+
         if algorithm == "star":
             labels, it, converged, iter_secs = _run_star(
                 spark, canon, stats0, vmap, order_preserving, nparts, max_iterations,
@@ -888,11 +887,7 @@ def _run_propagation(spark, canon, vmap, nparts, max_iterations, checkpoint_stor
     t_ph = _time.time()
     # symmetric view, pre-partitioned on src so the per-superstep join
     # reuses this exchange (the edge side never re-shuffles in the loop)
-    und = (
-        canon.unionByName(canon.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(nparts, "src")
-        .persist()
-    )
+    und = symmetric_pairs(canon).repartition(nparts, "src").persist()
     und.count()
     phases["symmetrize"] = round(_time.time() - t_ph, 3)
     if start_iter:

@@ -13,11 +13,22 @@ part 3):
 
 Physical design (same substrate as PageRank/CC):
 - ids AND labels are dictionary-encoded in the loop, with vids assigned
-  in STRING-sorted order (operators/vids.string_sorted_vids — a range
-  exchange + parallel per-partition sort + broadcast offsets; NO
-  single-task global sort) so long-vid comparisons ARE string-order
-  comparisons — the min-label tie-break stays oracle-exact while the
-  loop shuffles only 8-byte keys.
+  in STRING-sorted order by ``vids.undirected_build`` — the one
+  undirected build, shared with CC's sorted path and
+  ``prepare_undirected`` — so vid comparisons ARE string-order
+  comparisons: the min-label tie-break stays oracle-exact while the loop
+  shuffles only fixed-width keys.
+- the build is ONE driver action: one collect of per-range-partition
+  (count, Σknown) gives the sorted offsets, n and the endpoints missing
+  from a supplied vertex table. The encode joins, the symmetrize and the
+  edge cache are lazy; superstep 1 fills the cache.
+- the whole call runs with AQE off (restored in ``finally``): re-planning
+  per stage made every build shuffle its own Spark job. Cost at scale:
+  AQE's skew-join no longer splits a hub partition of the encode joins.
+- a warm call (same graph, same session) compiles no generated class:
+  ``session.get_spark`` sizes Spark's codegen cache to the engine
+  (``CODEGEN_CACHE_ENTRIES``). Sessions built elsewhere keep Spark's
+  100-entry default, which a cold PageRank + CC + LPA pass overflows.
 - when the dense sorted vids fit int32 (n < vids.INT_VID_LIMIT) the
   symmetric cache and the whole loop state narrow to 4-byte vids — an
   order-preserving cast (labels bitwise unchanged, pinned by test) that
@@ -29,7 +40,11 @@ Physical design (same substrate as PageRank/CC):
   so isolated vertices keep their label and occupied vertices never beat
   a real neighbor count) → groupBy(vid, lbl).sum → argmax via one Window
   partitionBy(vid) ordered by (count desc, lbl asc). Two shuffles.
-- per-iteration lazy localCheckpoint truncates lineage; one action each.
+- per-superstep lazy localCheckpoint truncates lineage; one action each.
+  With a checkpoint_store that action is the snapshot write itself, and
+  the returned labels are the committed final snapshot (byte-for-byte
+  the decode of the final state), so the caller's action reads parquet
+  instead of running a second decode plan.
 - resumable: with a checkpoint_store, the latest written iteration is
   re-encoded and the loop continues from latest+1 (symmetric with
   connected_components) — a restarted run never replays or duplicates
@@ -38,12 +53,18 @@ Physical design (same substrate as PageRank/CC):
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 
-from pagerank_project_spark.operators.vids import string_sorted_vids
+from pagerank_project_spark.operators.vids import (
+    assert_endpoints_covered,
+    canonical_pairs,
+    symmetric_pairs,
+    undirected_build,
+)
 
 # frontier mode only engages its filtered gather when the touched set is
 # small enough to broadcast as a semi-join filter over the edge cache
@@ -56,8 +77,8 @@ FRONTIER_BROADCAST_LIMIT = 5_000_000
 class LPAResult:
     labels: DataFrame  # (id: string, label: string)
     iterations: int  # actual final superstep index (resume: includes checkpointed supersteps)
-    iter_secs: list[float] | None = None  # wall per superstep
-    phase_secs: dict | None = None  # one-time tails: validate/encode/cache_fill
+    iter_secs: list[float] | None = None  # wall per superstep, its checkpoint write included
+    phase_secs: dict | None = None  # one-time tails: encode (the build), warm_start
     frontier_sizes: list[int] | None = None  # frontier mode: |changed| per superstep
 
 
@@ -67,7 +88,6 @@ def label_propagation(
     vertices: DataFrame | None = None,
     iterations: int = 10,
     num_partitions: int | None = None,
-    local_checkpoint_every: int = 8,  # kept for API compat
     checkpoint_store=None,
     validate_vertices: bool = True,
     vmap: DataFrame | None = None,
@@ -77,7 +97,11 @@ def label_propagation(
     prepared_und=None,
     warm_start: bool = False,
 ) -> LPAResult:
-    """``prepared_und``: a plans.prepared_graph.PreparedUndirected — the
+    """``checkpoint_store``: a plans.checkpoint.CheckpointStore — every
+    superstep writes its (id, label) snapshot, and the returned labels
+    READ the final one (keep its files while the labels are in use).
+
+    ``prepared_und``: a plans.prepared_graph.PreparedUndirected — the
     prepare-once artifact holding the STRING-SORTED vid map and the baked
     canonical symmetric edge table (bucketed by src, so the per-superstep
     cache persists with ZERO shuffle). Mutually exclusive with ``edges``/
@@ -89,7 +113,8 @@ def label_propagation(
 
     ``vmap``: optional pre-built (id, vid) map from
     ``vids.string_sorted_vids`` over the same vertex universe, so callers
-    running CC + LPA on one graph pay the encode jobs once.
+    running CC + LPA on one graph pay the ranking jobs once (the endpoint
+    check and n are then separate counts).
 
     ``vid_mode``: 'sorted' (default) assigns vids in STRING-sorted order —
     the min-label tie-break is then exactly min-STRING, which the SQL
@@ -163,7 +188,6 @@ def label_propagation(
     scale (the oracle/driver-contract shape) don't amortize the pilot;
     recommended for production-length runs on large caches."""
     from pagerank_project_spark.operators.pagerank import build_vertices
-    from pagerank_project_spark.operators.vids import assert_endpoints_covered
 
     if vid_mode not in ("sorted", "hash"):
         raise ValueError(f"unknown vid_mode {vid_mode!r}; one of ['sorted', 'hash']")
@@ -172,97 +196,67 @@ def label_propagation(
     if prepared_und is not None and (vmap is not None or vid_mode == "hash"):
         raise ValueError("prepared_und bakes the sorted vid map; "
                          "vmap/vid_mode='hash' cannot be combined with it")
-    import time as _time
-
     phases: dict = {}
+    # the whole call runs with AQE off: its per-stage re-planning makes
+    # every build shuffle its own Spark job and buys nothing in a call
+    # whose shape and partitioning are fixed. Restored even when a step
+    # raises — AQE must not stay disabled for the caller's session.
+    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        if prepared_und is not None:
+            # prepare-once path: encode/symmetrize/repartition are baked; the
+            # bucketed scan's HashPartitioning(src, buckets) means the persist
+            # below is a straight read — no shuffle anywhere before superstep 1
+            nparts = num_partitions or prepared_und.buckets
+            und = prepared_und.und
+            if nparts != prepared_und.buckets:
+                # the deployment rule from the prepared-PageRank A/B
+                # (BENCH/BASELINE.md): a cluster smaller than the bucket count
+                # repartitions at load — ONE shuffle buys a slots-matched loop
+                # (the fixed-bucket task count measured 0.55 N→4N for the LPA
+                # loop; slots-matched recovers direct superstep speed)
+                und = und.repartition(nparts, "src")
+            return _run_loop(
+                spark, und.persist(), prepared_und.vmap, None, prepared_und.n, nparts, iterations,
+                checkpoint_store, frontier, frontier_threshold, phases, warm_start,
+            )
 
-    if prepared_und is not None:
-        # prepare-once path: encode/symmetrize/repartition are baked; the
-        # bucketed scan's HashPartitioning(src, buckets) means the persist
-        # below is a straight read — no shuffle anywhere before superstep 1
-        nparts = num_partitions or prepared_und.buckets
-        vmap = prepared_und.vmap
-        t_ph = _time.time()
-        und = prepared_und.und
-        if nparts != prepared_und.buckets:
-            # the deployment rule from the prepared-PageRank A/B
-            # (BENCH/BASELINE.md): a cluster smaller than the bucket count
-            # repartitions at load — ONE shuffle buys a slots-matched loop
-            # (the fixed-bucket task count measured 0.55 N→4N for the LPA
-            # loop; slots-matched recovers direct superstep speed)
-            und = und.repartition(nparts, "src")
-        und = und.persist()
-        und.count()
-        phases["cache_fill"] = round(_time.time() - t_ph, 3)
+        nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+        t_ph = time.time()
+        canon = cache = None
+        n = 0
+        if vid_mode == "hash" and vmap is None:
+            verts = build_vertices(edges, vertices)
+            if vertices is not None and validate_vertices:
+                assert_endpoints_covered(edges, verts)
+                validate_vertices = False  # the collision fallback must not re-check
+            chk = verts.agg(
+                F.count("*").alias("n"), F.count_distinct(F.xxhash64("id")).alias("nv")
+            ).first()
+            if chk["nv"] == chk["n"]:  # no collision → inline encode, zero joins
+                n = chk["n"]
+                vmap = verts.select("id", F.xxhash64("id").alias("vid"))
+                canon = canonical_pairs(
+                    edges.select(F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst"))
+                )
+        if canon is None:
+            # vids in STRING-sorted order so vid tie-breaks ≡ min-string
+            # tie-breaks; narrowed to int32 when the dense vids fit
+            ub = undirected_build(edges, vertices, nparts, validate_vertices, vmap)
+            vmap, canon, cache, n = ub.vmap, ub.canon, ub.cache, ub.n
+        phases["encode"] = round(time.time() - t_ph, 3)
+        # Symmetrize AFTER the encode, canonically, on vid pairs: the
+        # string-side symmetrize shuffled 2× the rows at ~5× the bytes
+        # through its distinct (measured as the dominant cache_fill term at
+        # sf16). Persisted lazily: superstep 1 fills the cache.
+        und = symmetric_pairs(canon).repartition(nparts, "src").persist()
         return _run_loop(
-            spark, und, vmap, nparts, iterations, checkpoint_store, frontier,
+            spark, und, vmap, cache, n, nparts, iterations, checkpoint_store, frontier,
             frontier_threshold, phases, warm_start,
         )
-
-    nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = build_vertices(edges, vertices)
-    if vertices is not None and validate_vertices:
-        t_ph = _time.time()
-        assert_endpoints_covered(edges, verts)
-        phases["validate"] = round(_time.time() - t_ph, 3)
-    t_ph = _time.time()
-
-    hashed = False
-    if vid_mode == "hash" and vmap is None:
-        chk = verts.agg(
-            F.count("*").alias("n"), F.count_distinct(F.xxhash64("id")).alias("nv")
-        ).first()
-        if chk["nv"] == chk["n"]:  # no collision → inline encode, zero joins
-            hashed = True
-            vmap = verts.select("id", F.xxhash64("id").alias("vid"))
-            enc = edges.select(F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst"))
-    if not hashed:
-        # one-time encoding with vids in STRING-sorted order so long-vid
-        # tie-breaks ≡ min-string tie-breaks (distributed; no global sort).
-        if vmap is None:
-            vmap = string_sorted_vids(verts, "id", nparts)
-        enc = (
-            edges.select("src", "dst")
-            .join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
-            .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
-            .select(F.col("_s").alias("src"), F.col("_t").alias("dst"))
-        )
-    if not hashed:
-        # dense sorted vids are ranks 1..n — when n fits int32, narrow the
-        # edge pairs BEFORE the symmetrize: the distinct shuffle, the
-        # long-lived symmetric cache (the engine's largest per-superstep
-        # DRAM stream — the measured late-superstep bandwidth cap,
-        # BENCH/BASELINE.md) and the whole loop state then carry 4-byte
-        # vids. Order-preserving cast → labels bitwise equal (pinned by
-        # test); xxhash64 vids never narrow.
-        from pagerank_project_spark.operators.vids import INT_VID_LIMIT
-
-        if (vmap.agg(F.max("vid")).first()[0] or 0) < INT_VID_LIMIT:
-            enc = enc.select(F.col("src").cast("int").alias("src"),
-                             F.col("dst").cast("int").alias("dst"))
-    # Symmetrize AFTER the encode, canonically, on LONG pairs (the CC
-    # round-3 lesson): the old string-side undirected_edges() shuffled the
-    # symmetrized multiset (2× the rows at ~5× the bytes) through its
-    # distinct BEFORE the vids existed — measured as the dominant
-    # cache_fill term at sf16. canon is distinct and self-loop-free, so
-    # canon ∪ reverse(canon) IS the symmetric distinct edge set.
-    canon = (
-        enc.select(F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    und = canon.unionByName(
-        canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    phases["encode"] = round(_time.time() - t_ph, 3)
-    t_ph = _time.time()
-    und = und.repartition(nparts, "src").persist()
-    und.count()
-    phases["cache_fill"] = round(_time.time() - t_ph, 3)
-    return _run_loop(
-        spark, und, vmap, nparts, iterations, checkpoint_store, frontier,
-        frontier_threshold, phases, warm_start,
-    )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
 
 def _pilot_superstep(und: DataFrame, vmap: DataFrame, nparts: int) -> None:
@@ -299,6 +293,8 @@ def _run_loop(
     spark: SparkSession,
     und: DataFrame,
     vmap: DataFrame,
+    cache: DataFrame | None,
+    n_verts: int,
     nparts: int,
     iterations: int,
     checkpoint_store,
@@ -307,6 +303,8 @@ def _run_loop(
     phases: dict,
     warm_start: bool = False,
 ) -> LPAResult:
+    """``cache``: the persisted table under ``vmap`` when this call built
+    it; released at the end when the returned labels no longer read it."""
     # the label state carries the CACHE's vid dtype (int when the dense
     # sorted vids were narrowed, long otherwise) so every loop join/shuffle
     # stays narrow and exchange-compatible with the cache's partitioning
@@ -327,149 +325,149 @@ def _run_loop(
         )
     labels = labels.repartition(nparts, "vid").localCheckpoint(eager=False)
 
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     it = start_iter
     iter_secs: list[float] = []
     frontier_sizes: list[int] = []
-    n_verts = vmap.count() if frontier else 0
     changed = None  # (vid) rows whose label changed last superstep; None = all/unknown
     changed_count = n_verts
-    try:
-        import time
-
-        if warm_start:
-            t_ws = time.time()
-            _pilot_superstep(und, vmap, nparts)
-            labels.count()  # materialize the initial checkpoint pre-superstep-1
-            phases["warm_start"] = round(time.time() - t_ws, 3)
-        w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("lbl"))
-        for it in range(start_iter + 1, iterations + 1):
-            t_it = time.time()
-            if (
-                frontier
-                and changed is not None
-                and changed_count <= frontier_threshold * n_verts
-                and changed_count <= FRONTIER_BROADCAST_LIMIT
-            ):
-                # --- frontier superstep (exact; see docstring) -------------
-                touched = (
-                    und.join(
-                        changed.select(F.col("vid").alias("src")).hint("shuffle_hash"), "src"
-                    )
-                    .select(F.col("dst").alias("vid"))
-                    .distinct()
-                    .persist()
-                )
-                tc = touched.count()
-                if tc <= FRONTIER_BROADCAST_LIMIT:
-                    filt = und.join(
-                        F.broadcast(touched.select(F.col("vid").alias("dst"))), "dst", "semi"
-                    )
-                    # build side = the filtered Σ indeg(touched)-row edge set;
-                    # the vid-partitioned label state streams exchange-free
-                    nbr = (
-                        labels.select(F.col("vid").alias("_sv"), "lbl")
-                        .join(
-                            filt.select(F.col("src").alias("_sv"), "dst").hint("shuffle_hash"),
-                            "_sv",
-                        )
-                        .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
-                    )
-                    # no keeper rows: touched vertices are non-isolated by
-                    # construction (they have the edge from the changed
-                    # neighbor), and a cnt-0 own-label row can never beat a
-                    # cnt>=1 neighbor row — identical winner either way
-                    freq = nbr.groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
-                    winner = (
-                        freq.withColumn("_rn", F.row_number().over(w))
-                        .filter(F.col("_rn") == 1)
-                        .select("vid", "lbl")
-                    )
-                    new_aff = winner.join(
-                        labels.select("vid", F.col("lbl").alias("_old")).hint("shuffle_hash"),
-                        "vid",
-                    ).select("vid", "lbl", (F.col("lbl") != F.col("_old")).alias("chg"))
-                    carry = labels.join(
-                        F.broadcast(touched), "vid", "anti"
-                    ).select("vid", "lbl", F.lit(False).alias("chg"))
-                    labels = (
-                        new_aff.unionByName(carry)
-                        .repartition(nparts, "vid")
-                        .localCheckpoint(eager=False)
-                    )
-                    changed_count = labels.filter("chg").count()  # materializes
-                    changed = labels.filter("chg").select("vid")
-                    labels = labels.select("vid", "lbl")
-                    touched.unpersist()
-                    frontier_sizes.append(changed_count)
-                    iter_secs.append(round(time.time() - t_it, 3))
-                    if checkpoint_store is not None:
-                        checkpoint_store.write_iteration(
-                            _decode(labels, vmap), iteration=it, metrics={}
-                        )
-                    if changed_count == 0:
-                        break  # fixpoint: every further superstep is identity
-                    continue
-                touched.unpersist()  # too big to broadcast → full gather
-            # shuffle_hash on the LABEL side (pagerank.py's superstep rule):
-            # un-hinted, Catalyst either auto-broadcasts the checkpointed
-            # |V|-row label vector (driver-serial HashedRelation build per
-            # superstep — the round-1 pagerank non-scaling bug) or falls to
-            # an SMJ that re-SORTS the cached symmetric edge multiset every
-            # superstep. The hash join streams the pre-partitioned cache
-            # and shuffles only the label rows.
-            nbr = (
+    if warm_start:
+        t_ws = time.time()
+        _pilot_superstep(und, vmap, nparts)
+        labels.count()  # materialize the initial checkpoint pre-superstep-1
+        phases["warm_start"] = round(time.time() - t_ws, 3)
+    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("lbl"))
+    for it in range(start_iter + 1, iterations + 1):
+        t_it = time.time()
+        if (
+            frontier
+            and changed is not None
+            and changed_count <= frontier_threshold * n_verts
+            and changed_count <= FRONTIER_BROADCAST_LIMIT
+        ):
+            # --- frontier superstep (exact; see docstring) -------------
+            touched = (
                 und.join(
-                    labels.select(F.col("vid").alias("_sv"), "lbl").hint("shuffle_hash"),
-                    und.src == F.col("_sv"),
+                    changed.select(F.col("vid").alias("src")).hint("shuffle_hash"), "src"
                 )
-                .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
+                .select(F.col("dst").alias("vid"))
+                .distinct()
+                .persist()
             )
-            keeper = labels.select("vid", "lbl", F.lit(0).alias("c"))  # isolated keep own
-            freq = nbr.unionByName(keeper).groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
-            # winner pick stays the row_number Window ON PURPOSE: Spark 4
-            # compiles row_number + (rn = 1) into WindowGroupLimit with a
-            # PARTIAL stage before the exchange — ≤1 candidate row per vid
-            # per map partition crosses the wire already. A packed-bigint
-            # max(cnt<<32 | ~lbl) HashAggregate rewrite was built and
-            # A/B-measured at sf16 1x4/4x4 and was SLOWER at both legs
-            # (sec/iter 71.7->76.5 @1x4, 22.7->40.1 @4x4): it re-buys the
-            # reduction WindowGroupLimit provides and pays an extra hash
-            # table over the full freq table for it (BENCH/BASELINE.md).
-            winner = (
-                freq.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .select("vid", "lbl")
-            )
-            if frontier:
-                # both sides leave vid-partitioned operators → zero-exchange
-                # hash join; chg feeds the next superstep's frontier test
-                labels = winner.join(
+            tc = touched.count()
+            if tc <= FRONTIER_BROADCAST_LIMIT:
+                filt = und.join(
+                    F.broadcast(touched.select(F.col("vid").alias("dst"))), "dst", "semi"
+                )
+                # build side = the filtered Σ indeg(touched)-row edge set;
+                # the vid-partitioned label state streams exchange-free
+                nbr = (
+                    labels.select(F.col("vid").alias("_sv"), "lbl")
+                    .join(
+                        filt.select(F.col("src").alias("_sv"), "dst").hint("shuffle_hash"),
+                        "_sv",
+                    )
+                    .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
+                )
+                # no keeper rows: touched vertices are non-isolated by
+                # construction (they have the edge from the changed
+                # neighbor), and a cnt-0 own-label row can never beat a
+                # cnt>=1 neighbor row — identical winner either way
+                freq = nbr.groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
+                winner = (
+                    freq.withColumn("_rn", F.row_number().over(w))
+                    .filter(F.col("_rn") == 1)
+                    .select("vid", "lbl")
+                )
+                new_aff = winner.join(
                     labels.select("vid", F.col("lbl").alias("_old")).hint("shuffle_hash"),
                     "vid",
-                ).select(
-                    "vid", "lbl", (F.col("lbl") != F.col("_old")).alias("chg")
-                ).localCheckpoint(eager=False)
+                ).select("vid", "lbl", (F.col("lbl") != F.col("_old")).alias("chg"))
+                carry = labels.join(
+                    F.broadcast(touched), "vid", "anti"
+                ).select("vid", "lbl", F.lit(False).alias("chg"))
+                labels = (
+                    new_aff.unionByName(carry)
+                    .repartition(nparts, "vid")
+                    .localCheckpoint(eager=False)
+                )
                 changed_count = labels.filter("chg").count()  # materializes
                 changed = labels.filter("chg").select("vid")
                 labels = labels.select("vid", "lbl")
+                touched.unpersist()
                 frontier_sizes.append(changed_count)
-            else:
-                labels = winner.localCheckpoint(eager=False)
+                if checkpoint_store is not None:
+                    checkpoint_store.write_iteration(
+                        _decode(labels, vmap), iteration=it, metrics={}
+                    )
+                iter_secs.append(round(time.time() - t_it, 3))
+                if changed_count == 0:
+                    break  # fixpoint: every further superstep is identity
+                continue
+            touched.unpersist()  # too big to broadcast → full gather
+        # shuffle_hash on the LABEL side (pagerank.py's superstep rule):
+        # un-hinted, Catalyst either auto-broadcasts the checkpointed
+        # |V|-row label vector (driver-serial HashedRelation build per
+        # superstep — the round-1 pagerank non-scaling bug) or falls to
+        # an SMJ that re-SORTS the cached symmetric edge multiset every
+        # superstep. The hash join streams the pre-partitioned cache
+        # and shuffles only the label rows.
+        nbr = (
+            und.join(
+                labels.select(F.col("vid").alias("_sv"), "lbl").hint("shuffle_hash"),
+                und.src == F.col("_sv"),
+            )
+            .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
+        )
+        keeper = labels.select("vid", "lbl", F.lit(0).alias("c"))  # isolated keep own
+        freq = nbr.unionByName(keeper).groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
+        # winner pick stays the row_number Window ON PURPOSE: Spark 4
+        # compiles row_number + (rn = 1) into WindowGroupLimit with a
+        # PARTIAL stage before the exchange — ≤1 candidate row per vid
+        # per map partition crosses the wire already. A packed-bigint
+        # max(cnt<<32 | ~lbl) HashAggregate rewrite was built and
+        # A/B-measured at sf16 1x4/4x4 and was SLOWER at both legs
+        # (sec/iter 71.7->76.5 @1x4, 22.7->40.1 @4x4): it re-buys the
+        # reduction WindowGroupLimit provides and pays an extra hash
+        # table over the full freq table for it (BENCH/BASELINE.md).
+        winner = (
+            freq.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .select("vid", "lbl")
+        )
+        if frontier:
+            # both sides leave vid-partitioned operators → zero-exchange
+            # hash join; chg feeds the next superstep's frontier test
+            labels = winner.join(
+                labels.select("vid", F.col("lbl").alias("_old")).hint("shuffle_hash"),
+                "vid",
+            ).select(
+                "vid", "lbl", (F.col("lbl") != F.col("_old")).alias("chg")
+            ).localCheckpoint(eager=False)
+            changed_count = labels.filter("chg").count()  # materializes
+            changed = labels.filter("chg").select("vid")
+            labels = labels.select("vid", "lbl")
+            frontier_sizes.append(changed_count)
+        else:
+            labels = winner.localCheckpoint(eager=False)
+            if checkpoint_store is None:
                 labels.count()  # materialize + truncate each superstep
-            iter_secs.append(round(time.time() - t_it, 3))
-            if checkpoint_store is not None:
-                checkpoint_store.write_iteration(_decode(labels, vmap), iteration=it, metrics={})
-            if frontier and changed_count == 0:
-                break  # fixpoint: every further superstep is identity
-    finally:
-        # restore even when a superstep raises — AQE must not stay disabled
-        # for the caller's whole session
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
+        if checkpoint_store is not None:
+            # without frontier, this write is the superstep's one
+            # materializing action: it fills the label checkpoint
+            checkpoint_store.write_iteration(_decode(labels, vmap), iteration=it, metrics={})
+        iter_secs.append(round(time.time() - t_it, 3))
+        if frontier and changed_count == 0:
+            break  # fixpoint: every further superstep is identity
 
-    out = _decode(labels, vmap)
     und.unpersist()
+    if checkpoint_store is not None and it > 0:
+        # the committed final snapshot IS _decode(labels, vmap), already
+        # computed: reading it back saves the caller a second decode plan
+        out = checkpoint_store.read_state(spark, it)
+        if cache is not None:
+            cache.unpersist()
+    else:
+        out = _decode(labels, vmap)
     return LPAResult(
         labels=out,
         iterations=it,

@@ -1,6 +1,6 @@
 """Distributed dictionary encoding: string vertex id → dense long vid.
 
-Two encoders, shared by every graph operator:
+Two encoders and the undirected build, shared by every graph operator:
 
 - ``hashed_vids``: vid = xxhash64(id) — zero extra jobs, deterministic
   under partition recompute, order-AGNOSTIC. Right for PageRank's
@@ -10,16 +10,20 @@ Two encoders, shared by every graph operator:
 - ``string_sorted_vids``: vid = 1-based rank of id in ascending string
   order, 1..n DENSE, computed WITHOUT a global single-task sort:
 
-      range-exchange by id  →  per-partition sort (row_number over a
-      Window partitioned by the physical partition id — parallel)  →
-      + per-partition offset (tiny driver-side cumulative sum, broadcast
-      joined back).
+      range-exchange by id  →  per-partition sort, rank = record number
+      inside the partition (parallel)  →  + per-partition offset (one
+      tiny collect of per-partition counts; the offsets ride the plan as
+      a literal array indexed by the partition id).
 
   The range boundaries are sampled once when the exchange first
   materializes and live in the shuffle's partitioner, so a recomputed
-  partition sees the same boundaries (the persisted DataFrame is counted
-  eagerly here for exactly that reason). At 10^12 vertices every stage of
-  this is parallel: no task ever sees more than one range partition.
+  partition sees the same boundaries (the ranked table is persisted and
+  filled by the count collect for exactly that reason). At 10^12
+  vertices every stage of this is parallel: no task ever sees more than
+  one range partition.
+- ``undirected_build``: the one undirected build (LPA, CC's string-sorted
+  path, ``prepare_undirected``) — universe, endpoint guard, sorted vids,
+  encode joins, int32 narrowing and canonical pairs in ONE driver action.
 
 Why string-sorted DENSE vids matter (not just any unique longs):
 
@@ -38,7 +42,9 @@ valid UTF-8 (byte order ≡ code-point order in UTF-8).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 # string_sorted_vids assigns DENSE ranks 1..n, so whenever n fits int32 a
 # propagation loop's long-lived edge cache and label state can store 4-byte
@@ -58,43 +64,152 @@ def hashed_vids(verts: DataFrame, id_col: str = "id") -> DataFrame:
     return verts.withColumn("vid", F.xxhash64(id_col))
 
 
+def _ranked(rows: DataFrame, nparts: int) -> DataFrame:
+    """(id, _known) rows → the distinct ids, range-partitioned by id and
+    sorted within each partition, as a persisted (id, _known, _pid, _rn)
+    table: ``_pid`` is the range partition, ``_rn`` the 0-based rank inside
+    it. The range boundaries are sampled once, when the exchange first
+    materializes, and live in the shuffle's partitioner; a recomputed
+    partition re-sorts the same ids, so ``_rn`` is stable. The caller's
+    first action over the table fills it."""
+    pid = F.spark_partition_id()
+    return (
+        rows.groupBy("id")
+        .agg(F.max("_known").alias("_known"))
+        .repartitionByRange(nparts, F.col("id").asc())
+        .sortWithinPartitions("id")
+        .select(
+            "id", "_known", pid.alias("_pid"),
+            # record number within the partition (the low 33 bits)
+            (F.monotonically_increasing_id() - F.shiftleft(pid.cast("long"), 33)).alias("_rn"),
+        )
+        .persist()
+    )
+
+
+def _rank_stats(ranked: DataFrame, nparts: int) -> tuple[Column, int, int]:
+    """ONE collect of per-range-partition (count, Σknown): returns the vid
+    column (rank in string order, 1..rows), the row count and Σknown."""
+    stats = {
+        r["_pid"]: (r["cnt"], r["known"])
+        for r in ranked.groupBy("_pid")
+        .agg(F.count("*").alias("cnt"), F.sum("_known").alias("known"))
+        .collect()
+    }
+    offsets, acc = [], 1
+    for pid in range(nparts):
+        offsets.append(F.lit(acc).cast("long"))
+        acc += stats.get(pid, (0, 0))[0]
+    vid = (F.col("_rn") + F.element_at(F.array(*offsets), F.col("_pid") + 1)).alias("vid")
+    return vid, acc - 1, sum(k for _, k in stats.values())
+
+
 def string_sorted_vids(
     verts: DataFrame, id_col: str = "id", num_partitions: int | None = None
 ) -> DataFrame:
     """(id_col) → (id_col, vid) with vid = rank of id in ascending string
     order (1..n, dense). Distributed: range exchange + parallel
-    per-partition sort + broadcast offsets; no single-task global sort.
+    per-partition sort + per-partition offsets; no single-task global sort.
 
-    ``verts`` must have distinct ids (vertex universes do). The returned
-    DataFrame is persisted and materialized (the caller unpersists).
+    The returned DataFrame is persisted and materialized (the caller
+    unpersists)."""
+    spark = SparkSession.getActiveSession()
+    nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    ranked = _ranked(verts.select(F.col(id_col).alias("id"), F.lit(1).alias("_known")), nparts)
+    vid, _, _ = _rank_stats(ranked, nparts)
+    out = ranked.select(F.col("id").alias(id_col), vid).persist()
+    out.count()
+    ranked.unpersist()
+    return out
+
+
+def canonical_pairs(enc: DataFrame) -> DataFrame:
+    """Encoded (src, dst) → the canonical undirected edge set: (max, min)
+    pairs, distinct, self-loops dropped. canon ∪ reverse(canon) is then
+    the symmetric distinct edge set with no second dedup."""
+    return (
+        enc.select(F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
+def symmetric_pairs(canon: DataFrame) -> DataFrame:
+    return canon.unionByName(canon.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
+@dataclass
+class UndirectedBuild:
+    vmap: DataFrame  # (id string, vid long): string-sorted dense vids 1..n
+    canon: DataFrame  # canonical_pairs of the encoded edges; int vids when narrowed
+    n: int
+    cache: DataFrame | None  # the persisted rank table under vmap; None for a supplied vmap
+
+
+def undirected_build(
+    edges: DataFrame,
+    vertices: DataFrame | None = None,
+    num_partitions: int | None = None,
+    validate_vertices: bool = True,
+    vmap: DataFrame | None = None,
+    narrow: bool = True,
+    require_vertices: bool = False,
+) -> UndirectedBuild:
+    """The undirected graph build shared by LPA, CC's string-sorted path
+    and ``prepare_undirected``: string-sorted vids, the encode joins, the
+    optional int32 narrowing and the canonical pairs — in ONE driver action.
+
+    The universe is endpoints (known=0) ∪ vertices (known=1) when a
+    supplied vertex table is validated, as in ``pagerank.build_graph``.
+    One collect of per-range-partition (count, Σknown) gives the offsets,
+    n = Σknown and the missing endpoints (count − Σknown). Nothing else is
+    materialized: the rank table under ``vmap`` is filled by that collect,
+    and the encode joins and the caller's edge cache run inside the
+    caller's first superstep.
+
+    ``vmap``: a caller-built map over the same universe (from
+    ``string_sorted_vids``); the endpoint check is then a separate count.
+    ``narrow``: store dense vids as int32 when n < INT_VID_LIMIT — an
+    order-preserving cast, so labels stay bitwise the long path's.
+    ``require_vertices``: raise "empty graph" when n == 0 (checked before
+    the endpoint guard, the order ``prepare_undirected`` has always had).
     """
     spark = SparkSession.getActiveSession()
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ranged = (
-        verts.select(id_col)
-        .repartitionByRange(nparts, F.col(id_col).asc())
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    cache = None
+    if vmap is not None:
+        if vertices is not None and validate_vertices:
+            assert_endpoints_covered(edges, vertices.select("id").distinct())
+        n = vmap.count()
+    else:
+        ends = edges.select(F.col("src").alias("id")).unionByName(edges.select(F.col("dst").alias("id")))
+        if vertices is None:
+            rows = ends.select("id", F.lit(1).alias("_known"))
+        elif validate_vertices:
+            rows = ends.select("id", F.lit(0).alias("_known")).unionByName(
+                vertices.select("id", F.lit(1).alias("_known"))
+            )
+        else:
+            rows = vertices.select("id", F.lit(1).alias("_known"))
+        cache = _ranked(rows, nparts)
+        vid, n_rows, n = _rank_stats(cache, nparts)
+        err = None
+        if require_vertices and n == 0:
+            err = ValueError("empty graph")
+        elif n_rows != n:
+            err = endpoints_missing_error(n_rows - n)
+        if err is not None:
+            cache.unpersist()
+            raise err
+        vmap = cache.select("id", vid)
+    enc = (
+        edges.select("src", "dst")
+        .join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
+        .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
     )
-    # one pass: per-range-partition row counts (tiny result, ≤ nparts rows).
-    # Materializing here also pins the sampled range boundaries into the
-    # exchange's partitioner before the second pass reads the cache.
-    pid_counts = {r["_pid"]: r["cnt"] for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = [], 0
-    for pid in range(nparts):
-        offsets.append((pid, acc))
-        acc += pid_counts.get(pid, 0)
-    off_df = spark.createDataFrame(offsets, "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(F.col(id_col).asc())
-    vmap = (
-        ranged.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(off_df), "_pid")
-        .select(id_col, (F.col("_rn") + F.col("_off")).cast("long").alias("vid"))
-    )
-    out = vmap.persist()
-    out.count()
-    ranged.unpersist()
-    return out
+    vid_t = "int" if narrow and n < INT_VID_LIMIT else "long"
+    enc = enc.select(F.col("_s").cast(vid_t).alias("src"), F.col("_t").cast(vid_t).alias("dst"))
+    return UndirectedBuild(vmap, canonical_pairs(enc), n, cache)
 
 
 def endpoints_missing_error(missing: int) -> ValueError:

@@ -99,16 +99,24 @@ def prepare_graph(
     return load_prepared(spark, path)
 
 
-def _catalog_entry_matches(spark: SparkSession, tbl: str, path: str, buckets: int) -> bool:
-    """True iff the registered table's LOCATION resolves to {path}/edges and
-    its bucket count matches the manifest being loaded."""
+def _catalog_entry_matches(
+    spark: SparkSession, tbl: str, path: str, buckets: int, vid_type: str = "bigint"
+) -> bool:
+    """True iff the registered table's LOCATION resolves to {path}/edges,
+    its bucket count matches the manifest being loaded and its src/dst
+    columns have the artifact's vid type ("int" or "bigint")."""
     rows = spark.sql(f"DESCRIBE FORMATTED {tbl}").collect()
     meta = {r["col_name"].strip(): (r["data_type"] or "").strip() for r in rows}
     loc = meta.get("Location", "")
     want = os.path.abspath(f"{path}/edges")
     got = os.path.abspath(loc.removeprefix("file:"))
     n_buckets = meta.get("Num Buckets", "")
-    return got == want and n_buckets == str(buckets)
+    return (
+        got == want
+        and n_buckets == str(buckets)
+        and meta.get("src") == vid_type
+        and meta.get("dst") == vid_type
+    )
 
 
 def load_prepared(spark: SparkSession, path: str) -> PreparedGraph:
@@ -177,50 +185,17 @@ def prepare_undirected(
     per-bucket-sorted table whose scan reports HashPartitioning(src, n) —
     a querying session persists it with ZERO shuffle and starts
     superstepping."""
-    from pagerank_project_spark.operators.pagerank import build_vertices
-    from pagerank_project_spark.operators.vids import assert_endpoints_covered, string_sorted_vids
+    from pagerank_project_spark.operators.vids import symmetric_pairs, undirected_build
 
     buckets = buckets or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = build_vertices(edges, vertices)
-    n = verts.count()
-    if n == 0:
-        raise ValueError("empty graph")
-    if vertices is not None:
-        assert_endpoints_covered(edges, verts)
-    vmap = string_sorted_vids(verts, "id", buckets)
-    enc = (
-        edges.select("src", "dst")
-        .join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
-        .join(vmap.select(F.col("id").alias("dst"), F.col("vid").alias("_t")), "dst")
-        .select(F.col("_s").alias("src"), F.col("_t").alias("dst"))
-    )
-    # narrow the vids BEFORE the canonical distinct: the symmetrize shuffle,
-    # the bucketed files AND the loop's persisted cache all carry 4-byte keys
-    # when the dense sorted vids fit int32 (order-preserving cast — labels
-    # stay bitwise the long path's; pinned by test)
-    from pagerank_project_spark.operators.vids import INT_VID_LIMIT
-
-    # sorted vids are DENSE ranks 1..n, so whenever n fits int32 the symmetric
-    # cache (and the whole LPA loop state) stores 4-byte vids — the cache is
-    # the engine's largest per-superstep DRAM stream (131M rows × 12
-    # supersteps at sf16; BENCH/BASELINE.md), and halving its bytes halves
-    # exactly the memory-bandwidth-bound term the round-4/5 scaling analysis
-    # measured as the whole-run cap. Above the limit the artifact falls back
-    # to bigint — the 10^12-vertex deployment keeps working, it just pays the
-    # wide keys.
-    dtype = "int" if n < INT_VID_LIMIT else "bigint"
-    if dtype == "int":
-        enc = enc.select(F.col("src").cast("int").alias("src"),
-                         F.col("dst").cast("int").alias("dst"))
-    canon = (
-        enc.select(F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    und = canon.unionByName(canon.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    ub = undirected_build(edges, vertices, buckets, require_vertices=True)
+    und = symmetric_pairs(ub.canon)
+    # int when the dense sorted vids fit int32 (vids.INT_VID_LIMIT): the
+    # bucketed files and the querying loop's cache then carry 4-byte keys
+    dtype = "int" if und.schema["src"].dataType.simpleString() == "int" else "bigint"
 
     os.makedirs(path, exist_ok=True)
-    vmap.write.mode("overwrite").parquet(f"{path}/vertices")
+    ub.vmap.write.mode("overwrite").parquet(f"{path}/vertices")
 
     tbl = _und_table_name(path)
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -239,13 +214,13 @@ def prepare_undirected(
     m_und = spark.table(tbl).count()
     manifest = {
         "version": UND_VERSION, "kind": "undirected_sorted",
-        "n": n, "m_und": m_und, "buckets": buckets, "table": tbl, "dtype": dtype,
+        "n": ub.n, "m_und": m_und, "buckets": buckets, "table": tbl, "dtype": dtype,
     }
     tmp = f"{path}/manifest.json.tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f)
     os.replace(tmp, f"{path}/manifest.json")
-    vmap.unpersist()
+    ub.cache.unpersist()
     return load_prepared_undirected(spark, path)
 
 
@@ -262,7 +237,9 @@ def load_prepared_undirected(spark: SparkSession, path: str) -> PreparedUndirect
     dtype = manifest.get("dtype", "bigint")
     sql_t = "INT" if dtype == "int" else "BIGINT"
     sort_spec = "src, dst" if manifest.get("version", 1) >= 2 else "src"
-    if spark.catalog.tableExists(tbl) and not _catalog_entry_matches(spark, tbl, path, buckets):
+    if spark.catalog.tableExists(tbl) and not _catalog_entry_matches(spark, tbl, path, buckets, dtype):
+        # a stale entry (another location, bucket count or vid type — e.g.
+        # registered before this path was re-prepared with other vids)
         spark.sql(f"DROP TABLE {tbl}")
     if not spark.catalog.tableExists(tbl):
         spark.sql(

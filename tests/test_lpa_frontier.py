@@ -4,6 +4,10 @@ from __future__ import annotations
 
 import random
 
+import pandas as pd
+import pytest
+
+from pagerank_project_spark.operators import labelprop as lp_mod
 from pagerank_project_spark.operators.labelprop import label_propagation
 
 
@@ -14,6 +18,37 @@ def _labels(res):
 def _random_edges(seed, n, m):
     rng = random.Random(seed)
     return list({(f"v{rng.randrange(n)}", f"v{rng.randrange(n)}") for _ in range(m)})
+
+
+def _duckdb_lpa(rows, iterations):
+    """Synchronous LPA as unrolled DuckDB SQL (the driver contract's
+    oracle shape): most frequent neighbor label, ties → min string label,
+    isolated vertices keep their own."""
+    import duckdb
+
+    sql = """
+WITH ed AS (SELECT DISTINCT src, dst FROM e_in WHERE src <> dst),
+und AS (SELECT src, dst FROM ed UNION SELECT dst, src FROM ed),
+l0 AS (SELECT id, id AS lbl FROM (SELECT src AS id FROM e_in UNION SELECT dst FROM e_in))"""
+    for k in range(iterations):
+        sql += f""",
+f{k} AS (
+  SELECT id, lbl, SUM(cnt) AS cnt FROM (
+    SELECT u.dst AS id, x.lbl AS lbl, 1 AS cnt FROM und u JOIN l{k} x ON u.src = x.id
+    UNION ALL SELECT id, lbl, 0 AS cnt FROM l{k}
+  ) GROUP BY id, lbl
+),
+l{k + 1} AS (
+  SELECT id, lbl FROM (
+    SELECT id, lbl, row_number() OVER (PARTITION BY id ORDER BY cnt DESC, lbl ASC) AS rn FROM f{k}
+  ) WHERE rn = 1
+)"""
+    con = duckdb.connect()
+    try:
+        con.register("e_in", pd.DataFrame(rows, columns=["src", "dst"]))
+        return set(con.execute(sql + f" SELECT id, lbl FROM l{iterations}").fetchall())
+    finally:
+        con.close()
 
 
 def test_frontier_bitwise_equal_random_graphs(spark):
@@ -73,6 +108,22 @@ def test_frontier_threshold_zero_never_filters(spark):
     full = label_propagation(spark, edges, iterations=4)
     fr = label_propagation(spark, edges, iterations=4, frontier=True, frontier_threshold=0.0)
     assert _labels(fr) == _labels(full)
+
+
+@pytest.mark.parametrize("limit", [0, 3])
+def test_frontier_broadcast_limit_fallback_matches_oracle(spark, monkeypatch, limit):
+    """FRONTIER_BROADCAST_LIMIT gates the filtered gather twice: on the
+    changed count (0 keeps every superstep on the full gather) and on the
+    touched set (3: this graph's changed sets shrink to 3 and 2 in
+    supersteps 6-7, and their neighborhoods are too big to broadcast, so
+    the full gather runs instead). Both fallbacks must give the
+    non-frontier labels and the DuckDB oracle's."""
+    rows = _random_edges(7, 30, 80)
+    edges = spark.createDataFrame(rows, "src string, dst string")
+    full = label_propagation(spark, edges, iterations=8)
+    monkeypatch.setattr(lp_mod, "FRONTIER_BROADCAST_LIMIT", limit)
+    fr = label_propagation(spark, edges, iterations=8, frontier=True, frontier_threshold=1.0)
+    assert _labels(fr) == _labels(full) == _duckdb_lpa(rows, 8)
 
 
 def test_cli_ppr_sample_and_frontier(capsys, small_csv):

@@ -92,3 +92,68 @@ def test_mutual_exclusion_and_baked_filter(spark, graph, prepared):
         pagerank(spark, cfg=PageRankConfig(filter_ratio=0.3), prepared=pg)
     with pytest.raises(ValueError):
         pagerank(spark)
+
+
+def _lpa_labels(res):
+    return {(r.id, r.label) for r in res.labels.collect()}
+
+
+def test_undirected_vid_type_change_reregisters(spark, tmp_path, monkeypatch):
+    """The catalog entry of an undirected artifact carries its vid type.
+    Re-preparing a path with wide vids (INT_VID_LIMIT = 0) after an int
+    artifact re-registers the table as bigint, and an entry left with the
+    old type over the new files is dropped and re-created on load instead
+    of served."""
+    import json
+
+    from pagerank_project_spark.operators import vids as vids_mod
+    from pagerank_project_spark.operators.labelprop import label_propagation
+    from pagerank_project_spark.plans.prepared_graph import (
+        _catalog_entry_matches,
+        load_prepared_undirected,
+        prepare_undirected,
+    )
+
+    rng = random.Random(5)
+    edges = spark.createDataFrame(
+        list({(f"v{rng.randrange(40)}", f"v{rng.randrange(40)}") for _ in range(120)}),
+        "src string, dst string",
+    )
+    want = _lpa_labels(label_propagation(spark, edges, iterations=3))
+    d = str(tmp_path / "und")
+    pg = prepare_undirected(spark, edges, d, buckets=4)
+    assert pg.und.schema["src"].dataType.simpleString() == "int"
+    tbl = json.load(open(f"{d}/manifest.json"))["table"]
+
+    monkeypatch.setattr(vids_mod, "INT_VID_LIMIT", 0)
+    pg = prepare_undirected(spark, edges, d, buckets=4)
+    assert pg.und.schema["src"].dataType.simpleString() == "bigint"
+    assert _catalog_entry_matches(spark, tbl, d, 4, "bigint")
+    assert not _catalog_entry_matches(spark, tbl, d, 4, "int")
+    assert _lpa_labels(label_propagation(spark, iterations=3, prepared_und=pg)) == want
+
+    # a stale entry: the int registration survives over the bigint files
+    spark.sql(f"DROP TABLE {tbl}")
+    spark.sql(
+        f"CREATE TABLE {tbl} (src INT, dst INT) USING PARQUET CLUSTERED BY (src) "
+        f"SORTED BY (src, dst) INTO 4 BUCKETS LOCATION '{d}/edges'"
+    )
+    pg = load_prepared_undirected(spark, d)
+    assert pg.und.schema["src"].dataType.simpleString() == "bigint"
+    assert _lpa_labels(label_propagation(spark, iterations=3, prepared_und=pg)) == want
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+def test_cli_lpa_prepare_rejects_filter_ratio(tmp_path, capsys, small_csv):
+    """The undirected artifact has no spam filter, so --prepare --algorithm
+    lpa must reject --filter_ratio instead of silently dropping it."""
+    import os
+
+    from pagerank_project_spark.cli import main
+
+    pdir = str(tmp_path / "pu")
+    rc = main(["--data", small_csv, "--algorithm", "lpa", "--prepare", "--prepared_dir", pdir,
+               "--filter_ratio", "0.5", "--cores", "4"])
+    assert rc == 2
+    assert "--filter_ratio" in capsys.readouterr().err
+    assert not os.path.exists(pdir)

@@ -13,7 +13,7 @@ This driver de-noises the ratio structurally instead of statistically:
     sides of the ratio instead of one;
   * MEDIAN over n pairs, reported with per-leg spreads, so one
     throttled leg cannot set the headline number;
-  * every leg carries its tools/membw.py window fingerprint.
+  * every leg carries its CPU steal fraction (perfbench's host-noise fingerprint).
 
 Usage: python tools/bench_interleaved.py <sf> <op> <n_pairs> [iters]
 Writes BENCH/interleaved_<op>_sf<sf>.json and prints the medians.
@@ -44,7 +44,7 @@ for i in range(n_pairs):
         legs[nexec].append(cell)
         print(
             f"  wall={cell.get('wall_sec')}s sec/iter={cell.get('sec_per_iter')}"
-            f" membw={cell.get('membw_gbps')}",
+            f" steal={cell.get('steal_frac')}",
             flush=True,
         )
 

@@ -34,13 +34,10 @@ from pagerank_project_spark.operators.extract import vertices_from_files
 sf = float(sys.argv[1]); nexec = int(sys.argv[2]); iters = int(sys.argv[3]); op = sys.argv[4]
 cc_pin = int(sys.argv[5]) if len(sys.argv) > 5 else 8_000_000
 prep_buckets = int(sys.argv[6]) if len(sys.argv) > 6 else 0  # 0 = task slots
-# window fingerprint: the sandbox is a shared VM whose aggregate DRAM
-# bandwidth fluctuates >5x between quiet and noisy-neighbor windows
-# (tools/membw.py docstring); every memory-bound phase tracks that
-# ceiling, so each leg records the window it ran in — an N-vs-4N pair is
-# trusted only when both legs' probes agree (BENCH/BASELINE.md).
-from tools.membw import probe as _membw_probe
-membw = _membw_probe()
+# host-noise fingerprint: the CPU steal fraction of the leg (the /proc/stat
+# counter perfbench reports), so a leg run on a stolen host is visible
+from perfbench.run import cpu_steal
+steal0 = cpu_steal()
 cores_per = 4
 tot = nexec * cores_per
 # REAL separate executor JVMs (spark standalone local-cluster): the faithful
@@ -89,7 +86,7 @@ files = spark.read.parquet(f"{fix}/source_table/data")
 verts = vertices_from_files(files).persist(); n_verts = verts.count()  # column-pruned scan (repo, path)
 
 out = {"executors": nexec, "cores_per_executor": cores_per, "sf": sf, "op": op,
-       "n_edges": n_edges, "n_vertices": n_verts, "membw_gbps": membw}
+       "n_edges": n_edges, "n_vertices": n_verts}
 t0 = time.time()
 if op in ("relational", "csr"):
     from pagerank_project_spark.operators.pagerank import pagerank
@@ -320,6 +317,8 @@ elif op in ("ppr", "ppr_dense"):
     out.update({"iters": ppr_iters, "n_seeds": n_seeds, "n_out_rows": n_out,
                 "wall_sec": round(dt, 2),
                 "whole_run_eps": round(n_edges * ppr_iters / dt, 1)})
+steal1 = cpu_steal()
+out["steal_frac"] = (steal1[1] - steal0[1]) / max(1, steal1[0] - steal0[0])
 print(json.dumps(out))
 """
 
