@@ -102,7 +102,8 @@ def q_inlink_ratio_filter(spark, sf_dir):
     """ONE count action for n (the filter threshold is ratio·n), then total
     and kept edge counts fold into the single returned plan — the driver's
     collect is the only other action."""
-    from pagerank_project_spark.operators.pagerank import apply_filter_ratio, build_vertices
+    from pagerank_project_spark.operators.pagerank import apply_filter_ratio
+    from pagerank_project_spark.operators.vids import build_vertices
 
     e = _cs_edges(spark, sf_dir)
     n = build_vertices(e, None).count()
@@ -231,24 +232,6 @@ def _supplier_pairs(spark, sf_dir):
         )
         .distinct()
     )
-
-
-def q_triangle_count(spark, sf_dir):
-    from pagerank_project_spark.operators.triangles import triangle_count
-
-    res = triangle_count(spark, _supplier_pairs(spark, sf_dir))
-    return spark.createDataFrame([(res.total,)], "n_triangles long")
-
-
-def q_clustering_coeff(spark, sf_dir):
-    """Per-vertex local clustering coefficient on the supplier co-occurrence
-    graph. The coefficient is an exact integer ratio evaluated once in
-    float64 (no summation-order sensitivity), so Spark and DuckDB agree
-    bitwise before the defensive round."""
-    from pagerank_project_spark.operators.triangles import clustering_coefficient
-
-    out = clustering_coefficient(spark, _supplier_pairs(spark, sf_dir))
-    return out.select("id", F.round("coeff", 6).alias("coeff"))
 
 
 def q_hits_k3(spark, sf_dir):
@@ -553,30 +536,6 @@ def q_code_pagerank_k3(spark, sf_dir):
     return res.ranks.select("id", F.round("rank", 6).alias("rank"))
 
 
-def q_code_cc_iter5(spark, sf_dir):
-    """Exactly 5 min-label propagation supersteps over the code graph —
-    intermediate (unconverged) labels, oracle-exact thanks to the
-    string-sorted vid encoding."""
-    from pagerank_project_spark.operators.components import connected_components
-
-    edges, verts = _code_graph(spark, sf_dir)
-    res = connected_components(spark, edges, vertices=verts, max_iterations=5, algorithm="propagation")
-    return res.labels.select("id", "component")
-
-
-def q_code_cc_sizes(spark, sf_dir):
-    from pagerank_project_spark.operators.components import connected_components
-
-    edges, verts = _code_graph(spark, sf_dir)
-    res = connected_components(spark, edges, vertices=verts)
-    return (
-        res.labels.groupBy("component")
-        .agg(F.count("*").alias("size"))
-        .groupBy("size")
-        .agg(F.count("*").alias("n_components"))
-    )
-
-
 def q_code_lpa_communities(spark, sf_dir):
     from pagerank_project_spark.operators.labelprop import label_propagation
 
@@ -726,41 +685,6 @@ def q_code_bowtie(spark, sf_dir):
     edges, verts = _code_graph(spark, sf_dir)
     seeds = verts.filter(F.col("id").like(BFS_SEED_LIKE))
     return bowtie_membership(spark, edges, seeds, vertices=verts, max_iterations=8)
-
-
-def q_code_scc(spark, sf_dir):
-    """Strongly connected components of one repo's intra-repo import graph
-    (103 files / 491 edges at sf0.01: a giant 87-file cycle cluster + DAG
-    periphery — the Broder-bowtie core shape in miniature). Scoped to a
-    single repo because the DuckDB oracle is a recursive-CTE transitive
-    closure: exact, but quadratic in reachable pairs (the full sf0.01
-    graph's closure is 61M pairs; the subgraph's is thousands). The
-    operator itself runs the distributed FW-Trim coloring — the pytest
-    suite pins it against networkx on whole random digraphs."""
-    from pagerank_project_spark.operators.scc import strongly_connected_components
-
-    edges, verts = _code_graph(spark, sf_dir)
-    sub_e = edges.filter(
-        F.col("src").like("org0/repo0:%") & F.col("dst").like("org0/repo0:%")
-    )
-    sub_v = verts.filter(F.col("id").like("org0/repo0:%"))
-    res = strongly_connected_components(spark, sub_e, vertices=sub_v)
-    return res.labels.select("id", "scc")
-
-
-def q_code_condensation(spark, sf_dir):
-    """Condensation DAG of the repo0 subgraph: SCC labels → inter-SCC
-    weighted edges (acyclic by construction — the dependency-layer view
-    of a cyclic import graph)."""
-    from pagerank_project_spark.operators.scc import condensation, strongly_connected_components
-
-    edges, verts = _code_graph(spark, sf_dir)
-    sub_e = edges.filter(
-        F.col("src").like("org0/repo0:%") & F.col("dst").like("org0/repo0:%")
-    )
-    sub_v = verts.filter(F.col("id").like("org0/repo0:%"))
-    res = strongly_connected_components(spark, sub_e, vertices=sub_v)
-    return condensation(sub_e, res.labels)
 
 
 def q_code_dep_layers(spark, sf_dir):

@@ -249,7 +249,7 @@ def main(argv: list[str] | None = None) -> int:
         if not args.seeds_like:
             print(f"--algorithm {args.algorithm} requires --seeds_like", file=sys.stderr)
             return 2
-        from pagerank_project_spark.operators.pagerank import build_vertices
+        from pagerank_project_spark.operators.vids import build_vertices
 
         verts = build_vertices(edges, vertices)
         seeds = verts.filter(F.col("id").like(args.seeds_like))

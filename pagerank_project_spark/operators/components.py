@@ -70,29 +70,29 @@ Two algorithms over the same substrate:
   changed-count needs no join. Exactly k supersteps of min-label
   propagation ≡ the unrolled SQL oracle (cc_iter5), because…
 
-…vertex ids are dictionary-encoded ONCE to longs; the loop shuffles only
-8-byte keys/labels (strings measured 2× slower). The ENCODING is
-per-algorithm, because the two modes make different promises about
-intermediate state:
+…vertex ids are dictionary-encoded ONCE to longs by the vid layer
+(``operators/vids.py``); the loop shuffles only 8-byte keys/labels
+(strings measured 2× slower). The ENCODING is per-algorithm, because the
+two modes make different promises about intermediate state:
 
-- ``propagation`` (and any caller-supplied ``vmap``): dense STRING-SORTED
-  vids from ``vids.undirected_build`` — the one undirected build, shared
-  with LPA and ``prepare_undirected`` (range exchange + parallel
-  per-partition sort; no global single-task sort; the endpoint guard,
-  ranking and offsets in ONE driver action). min over vids is then
-  EXACTLY min over string ids at every intermediate superstep, so
-  fixed-iteration results and mid-run checkpoints match a string-space
-  oracle on ANY graph — not only those that converge within the budget.
+- ``propagation``: dense STRING-SORTED vids from ``vids.undirected_build``
+  — the one undirected build, shared with LPA and ``prepare_undirected``
+  (range exchange + parallel per-partition sort; no global single-task
+  sort; the endpoint guard, ranking and offsets in ONE driver action).
+  min over vids is then EXACTLY min over string ids at every
+  intermediate superstep, so fixed-iteration results and mid-run
+  checkpoints match a string-space oracle on ANY graph — not only those
+  that converge within the budget.
 - ``star`` runs to the FIXED POINT, where only the component PARTITION
   matters — the root in vid space is renamed to the component's min
-  string id by one trailing groupBy(root).min(id) + join. Intermediate
-  vid order is therefore free, and the encode is inline
-  ``xxhash64(id)``: ZERO setup shuffles (no vmap sort, no encode joins —
-  at sf16 those were ~80% of the measured setup wall), guarded by a
-  one-job collision check over the vertex universe that falls back to
-  the string-sorted encode on a collision (birthday bound ~1e-5 at 16M
-  vertices, ~0.05 at 1B — the fallback is not theoretical at web scale,
-  which is why it stays a tested path).
+  string id by ``vids.relabel_min_id``. Intermediate vid order is
+  therefore free, and the encode is ``vids.hash_encode``: ZERO setup
+  shuffles (no vmap sort, no encode joins — at sf16 those were ~80% of
+  the measured setup wall), one collision-check job over the vertex
+  universe, and the string-sorted build on a collision (birthday bound
+  ~1e-5 at 16M vertices, ~0.05 at 1B — the fallback is not theoretical
+  at web scale, which is why it stays a tested path). The same relabel
+  serves both encodings.
 
 Checkpoint state is algorithm-specific (labels for propagation, the
 contracted edge set for star); a store written by one algorithm refuses
@@ -118,6 +118,10 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pagerank_project_spark.operators.vids import (
     canonical_pairs,
+    decode_pair,
+    encode_pair,
+    hash_encode,
+    relabel_min_id,
     symmetric_pairs,
     undirected_build,
 )
@@ -543,35 +547,25 @@ def connected_components(
     validate_vertices: bool = True,
     skew_threshold: int | None = None,
     driver_finish_edges: int = 4_000_000,
-    hub_broadcast_limit: int = HUB_BROADCAST_LIMIT,
-    vmap: DataFrame | None = None,
 ) -> ComponentsResult:
-    """``vmap``: an optional pre-built (id, vid) map from
-    ``vids.string_sorted_vids`` over the same vertex universe — lets
-    callers running several graph ops on one graph (bench, CLI) pay the
-    encode jobs once.
-
-    ``validate_vertices`` (with a supplied ``vertices``): the string-sorted
+    """``validate_vertices`` (with a supplied ``vertices``): the string-sorted
     path raises ValueError HERE on endpoints missing from the vertex table;
     the hash-vid star path fuses the same complete guard into the label
     decode (zero cost on valid input) and raises at the caller's FIRST
     ACTION on ``labels`` instead — either way no silently-wrong result can
-    be observed. ``skew_threshold``/``driver_finish_edges``/
-    ``hub_broadcast_limit`` tune the star path only (see module doc);
-    ``skew_threshold=None`` (default) re-derives the hub cutoff every
-    round as ``SKEW_TASK_RATIO × 2·|E|/nparts`` — relative to the
-    round's rows-per-task, which is the quantity window-buffering
-    actually contends with; setting ``driver_finish_edges=0`` forces
-    fully-distributed rounds."""
-    from pagerank_project_spark.operators.pagerank import build_vertices
-
+    be observed. ``skew_threshold``/``driver_finish_edges`` tune the star
+    path only (see module doc; the hub broadcast budget is
+    ``HUB_BROADCAST_LIMIT``); ``skew_threshold=None`` (default) re-derives
+    the hub cutoff every round as ``SKEW_TASK_RATIO × 2·|E|/nparts`` —
+    relative to the round's rows-per-task, which is the quantity
+    window-buffering actually contends with; setting
+    ``driver_finish_edges=0`` forces fully-distributed rounds."""
     if algorithm not in ("star", "propagation"):
         raise ValueError(f"unknown algorithm {algorithm!r}; one of ['star', 'propagation']")
     import time as _time
 
     phases: dict = {}
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    do_validate = vertices is not None and validate_vertices
     # the whole call runs with AQE off: its per-stage re-planning makes
     # every build shuffle its own Spark job and buys nothing in a call
     # whose shape and partitioning are fixed. Restored even when a step
@@ -579,26 +573,17 @@ def connected_components(
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        # Encode (see module doc): star mode hashes inline (zero setup
-        # shuffles) unless the collision check fails or the caller supplied
-        # a vmap; propagation needs order-preserving string-sorted vids.
+        # Encode (see module doc): star mode hashes (zero setup shuffles)
+        # unless the collision check fails; propagation needs
+        # order-preserving string-sorted vids.
         t_ph = _time.time()
-        canon = None
-        if algorithm == "star" and vmap is None:
-            verts = build_vertices(edges, vertices)
-            chk = verts.agg(
-                F.count("*").alias("n"), F.count_distinct(F.xxhash64("id")).alias("nv")
-            ).first()
-            if chk["nv"] == chk["n"]:
-                vmap = verts.select("id", F.xxhash64("id").alias("vid"))
-                canon = canonical_pairs(
-                    edges.select(F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst"))
-                )
-        order_preserving = canon is None
-        if order_preserving:
+        enc = hash_encode(edges, vertices) if algorithm == "star" else None
+        if enc is not None:
+            vmap, canon = enc[0], canonical_pairs(enc[1])
+        else:
             # the encode joins are INNER — the build guards missing
             # endpoints before anything is encoded
-            ub = undirected_build(edges, vertices, nparts, validate_vertices, vmap, narrow=False)
+            ub = undirected_build(edges, vertices, nparts, validate_vertices, narrow=False)
             vmap, canon = ub.vmap, ub.canon
         phases["encode"] = round(_time.time() - t_ph, 3)
         # ONE setup shuffle: canonical (max→min) orientation dedup'd on LONG
@@ -619,7 +604,7 @@ def connected_components(
         # _run_star). Star contraction preserves non-isolated vertex support
         # every round, so the final active_map still contains every
         # non-isolated endpoint — the fused check is complete, not a sample.
-        validate_fused = do_validate and not order_preserving
+        validate_fused = enc is not None and vertices is not None and validate_vertices
 
         start_iter = 0
         if checkpoint_store is not None and checkpoint_store.latest_iteration() is not None:
@@ -632,10 +617,9 @@ def connected_components(
 
         if algorithm == "star":
             labels, it, converged, iter_secs = _run_star(
-                spark, canon, stats0, vmap, order_preserving, nparts, max_iterations,
+                spark, canon, stats0, vmap, nparts, max_iterations,
                 checkpoint_store, start_iter,
-                skew_threshold, driver_finish_edges, hub_broadcast_limit, phases,
-                validate_fused,
+                skew_threshold, driver_finish_edges, phases, validate_fused,
             )
         else:
             labels, it, converged, iter_secs = _run_propagation(
@@ -652,9 +636,9 @@ def connected_components(
 
 
 def _run_star(
-    spark, canon, stats0, vmap, order_preserving, nparts, max_iterations,
+    spark, canon, stats0, vmap, nparts, max_iterations,
     checkpoint_store, start_iter, skew_threshold, driver_finish_edges,
-    hub_broadcast_limit, phases=None, validate_fused=False,
+    phases=None, validate_fused=False,
 ):
     import time
 
@@ -666,9 +650,7 @@ def _run_star(
         # re-canonicalize internally and peeling only engages post-round.
         st = checkpoint_store.read_state(spark, start_iter)
         e = (
-            st.join(vmap.select(F.col("id"), F.col("vid").alias("_s")), "id")
-            .join(vmap.select(F.col("id").alias("component"), F.col("vid").alias("_t")), "component")
-            .select(F.col("_s").alias("src"), F.col("_t").alias("dst"))
+            encode_pair(st, vmap).toDF("src", "dst")
             .repartition(nparts, "src")
             .localCheckpoint(eager=False)
         )
@@ -688,7 +670,7 @@ def _run_star(
         iter_secs.append(round(time.time() - t0, 3))
         if checkpoint_store is not None:
             checkpoint_store.write_iteration(
-                _decode_edges(out, vmap), iteration=at_iter,
+                decode_pair(out, vmap, "component"), iteration=at_iter,
                 metrics={"algorithm": "star", "converged": True, "driver_finish": True},
             )
         return out
@@ -721,7 +703,7 @@ def _run_star(
             # re-key by center anyway
             e2, scratch = _star_round(
                 e, thr, spark, safe_large, safe_small,
-                salted=est_nhubs > hub_broadcast_limit,
+                salted=est_nhubs > HUB_BROADCAST_LIMIT,
             )
             e2 = e2.localCheckpoint(eager=False)
             stats2 = _edge_stats(e2)  # the ONE materializing action per round
@@ -739,7 +721,7 @@ def _run_star(
                 converged = True
                 if checkpoint_store is not None:
                     checkpoint_store.write_iteration(
-                        _decode_edges(e, vmap), iteration=it,
+                        decode_pair(e, vmap, "component"), iteration=it,
                         metrics={"algorithm": "star", "n_edges": stats2[0], "converged": True},
                     )
                 break
@@ -789,7 +771,7 @@ def _run_star(
                 for p in settled_parts:
                     st = st.unionByName(p)
                 checkpoint_store.write_iteration(
-                    _decode_edges(st, vmap), iteration=it,
+                    decode_pair(st, vmap, "component"), iteration=it,
                     metrics={
                         "algorithm": "star", "n_edges": stats2[0], "converged": False,
                         "path": "safe" if (safe_large or safe_small) else "window",
@@ -800,21 +782,15 @@ def _run_star(
     active_map = e.groupBy("src").agg(F.min("dst").alias("_root"))
     if settled_parts:
         active_map = active_map.unionByName(_resolve_settled(settled_parts, active_map))
-    if order_preserving:
-        labels = (
-            vmap.select("vid")
-            .join(active_map, vmap.vid == F.col("src"), "left")
-            .select("vid", F.coalesce(F.col("_root"), F.col("vid")).alias("lbl"))
-        )
-        return _decode(labels, vmap), it, converged, iter_secs
-    # hash vids: the root is the component's min HASH — rename each
-    # component to its min STRING id with one groupBy + join-back (the
-    # partition into components is encoding-invariant; only labels rename).
-    # lab feeds BOTH the groupBy and the join — localCheckpoint so the
-    # vmap⋈active_map subtree (and the settled resolution under it)
-    # computes once, not twice (no subtree reuse across a self-join).
-    # shuffle_hash hints: both label joins would otherwise SMJ-sort
-    # |V|-sized sides; hashing the smaller side keeps the decode sort-free.
+    # the root is the component's min vid (a HASH unless the collision
+    # fallback sorted the vids) — rename each component to its min STRING
+    # id with one groupBy + join-back (the partition into components is
+    # encoding-invariant; only labels rename). lab feeds BOTH the groupBy
+    # and the join — localCheckpoint so the vmap⋈active_map subtree (and
+    # the settled resolution under it) computes once, not twice (no
+    # subtree reuse across a self-join). shuffle_hash hints: both label
+    # joins would otherwise SMJ-sort |V|-sized sides; hashing the smaller
+    # side keeps the decode sort-free.
     # validate_fused: the endpoint-coverage guard rides this join — active
     # vertices with no vmap row (an edge endpoint missing from the
     # supplied vertex table) surface as null-id rows of the full_outer and
@@ -871,13 +847,7 @@ def _run_star(
         .select("id", F.coalesce(F.col("_root"), F.col("vid")).alias("lbl"))
         .localCheckpoint(eager=False)
     )
-    comp = lab.groupBy("lbl").agg(F.min("id").alias("component"))
-    return (
-        lab.join(comp.hint("shuffle_hash"), "lbl").select("id", "component"),
-        it,
-        converged,
-        iter_secs,
-    )
+    return relabel_min_id(lab, "component"), it, converged, iter_secs
 
 
 def _run_propagation(spark, canon, vmap, nparts, max_iterations, checkpoint_store, start_iter, phases=None):
@@ -891,15 +861,7 @@ def _run_propagation(spark, canon, vmap, nparts, max_iterations, checkpoint_stor
     und.count()
     phases["symmetrize"] = round(_time.time() - t_ph, 3)
     if start_iter:
-        st = checkpoint_store.read_state(spark, start_iter)
-        labels = (
-            st.join(vmap.select("id", "vid"), "id")
-            .join(
-                vmap.select(F.col("id").alias("component"), F.col("vid").alias("lbl")),
-                "component",
-            )
-            .select("vid", "lbl")
-        )
+        labels = encode_pair(checkpoint_store.read_state(spark, start_iter), vmap)
     else:
         labels = vmap.select("vid", F.col("vid").alias("lbl"))
     labels = labels.repartition(nparts, "vid").localCheckpoint(eager=False)
@@ -930,31 +892,11 @@ def _run_propagation(spark, canon, vmap, nparts, max_iterations, checkpoint_stor
         labels = new_labels.select("vid", "lbl")
         if checkpoint_store is not None:
             checkpoint_store.write_iteration(
-                _decode(labels, vmap), iteration=it,
+                decode_pair(labels, vmap, "component"), iteration=it,
                 metrics={"algorithm": "propagation", "changed_labels": int(changed)},
             )
         if changed == 0:
             converged = True
             break
     und.unpersist()  # labels are localCheckpoint-materialized; lineage cut
-    return _decode(labels, vmap), it, converged, iter_secs
-
-
-def _decode(labels: DataFrame, vmap: DataFrame) -> DataFrame:
-    """(vid, lbl) → (id, component). vids are string-sorted, so the min-vid
-    label IS the lexicographic-min string id — a direct two-join decode."""
-    return (
-        labels.join(vmap.select("vid", "id"), "vid")
-        .join(vmap.select(F.col("vid").alias("lbl"), F.col("id").alias("component")), "lbl")
-        .select("id", "component")
-    )
-
-
-def _decode_edges(e: DataFrame, vmap: DataFrame) -> DataFrame:
-    """Star-mode checkpoint state: the contracted edge set as string pairs
-    (column names match the labels shape so the store stays uniform)."""
-    return (
-        e.join(vmap.select(F.col("vid").alias("src"), F.col("id")), "src")
-        .join(vmap.select(F.col("vid").alias("dst"), F.col("id").alias("component")), "dst")
-        .select("id", "component")
-    )
+    return decode_pair(labels, vmap, "component"), it, converged, iter_secs

@@ -39,6 +39,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from pagerank_project_spark.operators.vids import assert_endpoints_covered, build_vertices
+
 
 @dataclass
 class HITSResult:
@@ -76,8 +78,6 @@ def hits(
     iterations: int = 3,
     validate_vertices: bool = True,
 ) -> HITSResult:
-    from pagerank_project_spark.operators.pagerank import build_vertices
-
     if iterations < 1:
         raise ValueError("hits requires iterations >= 1")
     verts = build_vertices(edges, vertices).persist()
@@ -85,8 +85,6 @@ def hits(
         # endpoints outside the vertex table would still feed the L2 norms
         # before the final left join drops them — the reported vectors
         # would not be unit over the output set (same guard as pagerank)
-        from pagerank_project_spark.operators.vids import assert_endpoints_covered
-
         assert_endpoints_covered(edges, verts)
     e = edges.select("src", "dst").distinct().persist()
     e.count()  # materialize the loop-invariant edge cache once

@@ -41,6 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pagerank_project_spark.operators.components import undirected_edges
+from pagerank_project_spark.operators.vids import assert_endpoints_covered, build_vertices
 
 
 @dataclass
@@ -72,15 +73,11 @@ def kcore(
     max_iterations: int = 100,
     validate_vertices: bool = True,
 ) -> KCoreResult:
-    from pagerank_project_spark.operators.pagerank import build_vertices
-
     verts = build_vertices(edges, vertices)
     if vertices is not None and validate_vertices:
         # an endpoint outside the vertex table still inflates its
         # neighbors' h-indices before the final left join drops it —
         # silently wrong coreness (same guard as pagerank/hits)
-        from pagerank_project_spark.operators.vids import assert_endpoints_covered
-
         assert_endpoints_covered(edges, verts)
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # pre-partition the loop-invariant symmetric edge cache on the gather

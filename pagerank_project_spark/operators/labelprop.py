@@ -17,7 +17,9 @@ Physical design (same substrate as PageRank/CC):
   undirected build, shared with CC's sorted path and
   ``prepare_undirected`` — so vid comparisons ARE string-order
   comparisons: the min-label tie-break stays oracle-exact while the loop
-  shuffles only fixed-width keys.
+  shuffles only fixed-width keys. (xxhash64 vids were measured too: their
+  cache does not delta-compress, so each superstep ran ~20% slower, and
+  hash-order tie-breaks differ from the oracle's.)
 - the build is ONE driver action: one collect of per-range-partition
   (count, Σknown) gives the sorted offsets, n and the endpoints missing
   from a supplied vertex table. The encode joins, the symmetrize and the
@@ -34,8 +36,7 @@ Physical design (same substrate as PageRank/CC):
   order-preserving cast (labels bitwise unchanged, pinned by test) that
   halves the cache's DRAM stream and every loop shuffle's key bytes; the
   cache stream is the measured late-superstep bandwidth cap at sf16
-  (BENCH/BASELINE.md). Above the limit (or in hash vid_mode) everything
-  stays long.
+  (BENCH/BASELINE.md). Above the limit everything stays long.
 - per superstep: neighbor-label rows ∪ own-label keeper rows (count 0,
   so isolated vertices keep their label and occupied vertices never beat
   a real neighbor count) → groupBy(vid, lbl).sum → argmax via one Window
@@ -45,6 +46,8 @@ Physical design (same substrate as PageRank/CC):
   the returned labels are the committed final snapshot (byte-for-byte
   the decode of the final state), so the caller's action reads parquet
   instead of running a second decode plan.
+- the snapshot decode and the resume re-encode are ``vids.decode_pair`` /
+  ``vids.encode_pair``, the pair CC uses too.
 - resumable: with a checkpoint_store, the latest written iteration is
   re-encoded and the loop continues from latest+1 (symmetric with
   connected_components) — a restarted run never replays or duplicates
@@ -60,8 +63,8 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 
 from pagerank_project_spark.operators.vids import (
-    assert_endpoints_covered,
-    canonical_pairs,
+    decode_pair,
+    encode_pair,
     symmetric_pairs,
     undirected_build,
 )
@@ -90,8 +93,6 @@ def label_propagation(
     num_partitions: int | None = None,
     checkpoint_store=None,
     validate_vertices: bool = True,
-    vmap: DataFrame | None = None,
-    vid_mode: str = "sorted",
     frontier: bool = False,
     frontier_threshold: float = 0.0,
     prepared_und=None,
@@ -104,39 +105,11 @@ def label_propagation(
     ``prepared_und``: a plans.prepared_graph.PreparedUndirected — the
     prepare-once artifact holding the STRING-SORTED vid map and the baked
     canonical symmetric edge table (bucketed by src, so the per-superstep
-    cache persists with ZERO shuffle). Mutually exclusive with ``edges``/
-    ``vmap``/``vid_mode='hash'``; labels are bitwise the direct sorted
-    path's (pinned by test and by the shared SQL oracle). This removes
+    cache persists with ZERO shuffle). Mutually exclusive with ``edges``;
+    labels are bitwise the direct path's (pinned by test and by the shared SQL oracle). This removes
     exactly the one-time tails — validate, encode, symmetrize+distinct,
     cache repartition — that the sf16 scaling analysis measured as the
     whole-run cap (BENCH/BASELINE.md).
-
-    ``vmap``: optional pre-built (id, vid) map from
-    ``vids.string_sorted_vids`` over the same vertex universe, so callers
-    running CC + LPA on one graph pay the ranking jobs once (the endpoint
-    check and n are then separate counts).
-
-    ``vid_mode``: 'sorted' (default) assigns vids in STRING-sorted order —
-    the min-label tie-break is then exactly min-STRING, which the SQL
-    oracle pins. 'hash' assigns vids inline as xxhash64(id)
-    (collision-checked; falls back to sorted) — zero setup shuffles, no
-    encode joins; tie-breaks then use the hash order instead of the
-    string order (still a deterministic, partition/retry-invariant
-    function of the data, but where neighbor-label frequencies TIE the
-    adopted label — and hence the final partition — may differ from
-    sorted mode: both are valid sync-LPA outcomes under different total
-    orders).
-
-    MEASURED TRADE-OFF (sf16, 131M symmetric rows, BENCH/BASELINE.md
-    round 4): unlike CC star (which rewrites its edge set every round),
-    LPA STREAMS one long-lived symmetric edge cache every superstep, and
-    the vid encoding sets that cache's compressibility — compact sorted
-    vids delta-compress while random xxhash64 vids do not, so 'sorted'
-    measured BOTH a cheaper cache fill and ~20% faster supersteps despite
-    its costlier encode. 'sorted' is therefore the default and the
-    production recommendation; 'hash' remains for encode-dominated
-    shapes (few supersteps over a small edge set with a huge vertex
-    dictionary).
 
     ``frontier``: exact work-reduction for long (run-toward-convergence)
     runs. A vertex's winner can only change when some neighbor's label
@@ -187,15 +160,8 @@ def label_propagation(
     the loop's (pytest-pinned). Default off: short fixed-k runs at small
     scale (the oracle/driver-contract shape) don't amortize the pilot;
     recommended for production-length runs on large caches."""
-    from pagerank_project_spark.operators.pagerank import build_vertices
-
-    if vid_mode not in ("sorted", "hash"):
-        raise ValueError(f"unknown vid_mode {vid_mode!r}; one of ['sorted', 'hash']")
     if (edges is None) == (prepared_und is None):
         raise ValueError("pass exactly one of edges / prepared_und")
-    if prepared_und is not None and (vmap is not None or vid_mode == "hash"):
-        raise ValueError("prepared_und bakes the sorted vid map; "
-                         "vmap/vid_mode='hash' cannot be combined with it")
     phases: dict = {}
     # the whole call runs with AQE off: its per-stage re-planning makes
     # every build shuffle its own Spark job and buys nothing in a call
@@ -224,35 +190,17 @@ def label_propagation(
 
         nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
         t_ph = time.time()
-        canon = cache = None
-        n = 0
-        if vid_mode == "hash" and vmap is None:
-            verts = build_vertices(edges, vertices)
-            if vertices is not None and validate_vertices:
-                assert_endpoints_covered(edges, verts)
-                validate_vertices = False  # the collision fallback must not re-check
-            chk = verts.agg(
-                F.count("*").alias("n"), F.count_distinct(F.xxhash64("id")).alias("nv")
-            ).first()
-            if chk["nv"] == chk["n"]:  # no collision → inline encode, zero joins
-                n = chk["n"]
-                vmap = verts.select("id", F.xxhash64("id").alias("vid"))
-                canon = canonical_pairs(
-                    edges.select(F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst"))
-                )
-        if canon is None:
-            # vids in STRING-sorted order so vid tie-breaks ≡ min-string
-            # tie-breaks; narrowed to int32 when the dense vids fit
-            ub = undirected_build(edges, vertices, nparts, validate_vertices, vmap)
-            vmap, canon, cache, n = ub.vmap, ub.canon, ub.cache, ub.n
+        # vids in STRING-sorted order so vid tie-breaks ≡ min-string
+        # tie-breaks; narrowed to int32 when the dense vids fit
+        ub = undirected_build(edges, vertices, nparts, validate_vertices)
         phases["encode"] = round(time.time() - t_ph, 3)
         # Symmetrize AFTER the encode, canonically, on vid pairs: the
         # string-side symmetrize shuffled 2× the rows at ~5× the bytes
         # through its distinct (measured as the dominant cache_fill term at
         # sf16). Persisted lazily: superstep 1 fills the cache.
-        und = symmetric_pairs(canon).repartition(nparts, "src").persist()
+        und = symmetric_pairs(ub.canon).repartition(nparts, "src").persist()
         return _run_loop(
-            spark, und, vmap, cache, n, nparts, iterations, checkpoint_store, frontier,
+            spark, und, ub.vmap, ub.cache, ub.n, nparts, iterations, checkpoint_store, frontier,
             frontier_threshold, phases, warm_start,
         )
     finally:
@@ -313,11 +261,8 @@ def _run_loop(
     if checkpoint_store is not None and checkpoint_store.latest_iteration() is not None:
         # resume: re-encode the checkpointed (id, label) strings → (vid, lbl)
         start_iter = checkpoint_store.latest_iteration()
-        st = checkpoint_store.read_state(spark, start_iter)
-        labels = (
-            st.join(vmap.select("id", "vid"), "id")
-            .join(vmap.select(F.col("id").alias("label"), F.col("vid").alias("lbl")), "label")
-            .select(F.col("vid").cast(vid_t).alias("vid"), F.col("lbl").cast(vid_t).alias("lbl"))
+        labels = encode_pair(checkpoint_store.read_state(spark, start_iter), vmap).select(
+            F.col("vid").cast(vid_t).alias("vid"), F.col("lbl").cast(vid_t).alias("lbl")
         )
     else:
         labels = vmap.select(
@@ -397,7 +342,7 @@ def _run_loop(
                 frontier_sizes.append(changed_count)
                 if checkpoint_store is not None:
                     checkpoint_store.write_iteration(
-                        _decode(labels, vmap), iteration=it, metrics={}
+                        decode_pair(labels, vmap, "label"), iteration=it, metrics={}
                     )
                 iter_secs.append(round(time.time() - t_it, 3))
                 if changed_count == 0:
@@ -454,20 +399,20 @@ def _run_loop(
         if checkpoint_store is not None:
             # without frontier, this write is the superstep's one
             # materializing action: it fills the label checkpoint
-            checkpoint_store.write_iteration(_decode(labels, vmap), iteration=it, metrics={})
+            checkpoint_store.write_iteration(decode_pair(labels, vmap, "label"), iteration=it, metrics={})
         iter_secs.append(round(time.time() - t_it, 3))
         if frontier and changed_count == 0:
             break  # fixpoint: every further superstep is identity
 
     und.unpersist()
     if checkpoint_store is not None and it > 0:
-        # the committed final snapshot IS _decode(labels, vmap), already
-        # computed: reading it back saves the caller a second decode plan
+        # the committed final snapshot IS the decode of the final labels,
+        # already computed: reading it back saves the caller a second decode
         out = checkpoint_store.read_state(spark, it)
         if cache is not None:
             cache.unpersist()
     else:
-        out = _decode(labels, vmap)
+        out = decode_pair(labels, vmap, "label")
     return LPAResult(
         labels=out,
         iterations=it,
@@ -476,21 +421,3 @@ def _run_loop(
         frontier_sizes=frontier_sizes or None,
     )
 
-
-def _decode(labels: DataFrame, vmap: DataFrame) -> DataFrame:
-    # shuffle_hash: an SMJ here would sort both |V|-sized sides twice —
-    # hash joins keep the decode sort-free (the LPA whole-run tail).
-    # Widen narrowed int vids back to the vmap's long explicitly (the join
-    # would coerce anyway; explicit keeps the shuffle keys unambiguous).
-    labels = labels.select(
-        F.col("vid").cast("long").alias("vid"), F.col("lbl").cast("long").alias("lbl")
-    )
-    out = (
-        labels.join(vmap.select("vid", "id").hint("shuffle_hash"), "vid")
-        .join(
-            vmap.select(F.col("vid").alias("lbl"), F.col("id").alias("label")).hint("shuffle_hash"),
-            "lbl",
-        )
-        .select("id", "label")
-    )
-    return out

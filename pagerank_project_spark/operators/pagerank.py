@@ -54,6 +54,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from pagerank_project_spark.config import PageRankConfig
+from pagerank_project_spark.operators import vids
 
 # broadcast dimension/rank tables only when |V| is below this bound.
 # Measured at 4M vertices (sf4): building the broadcast HashedRelation is
@@ -74,17 +75,6 @@ class PageRankResult:
     n_edges: int
     setup_sec: float = 0.0  # one-time graph build (encode/weight/partition)
     iter_secs: list[float] = None  # wall per superstep (first 1-2 incl. codegen warmup)
-
-
-def build_vertices(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
-    """Vertex universe: provided table (id) or distinct src ∪ dst."""
-    if vertices is not None:
-        return vertices.select("id").distinct()
-    return (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
 
 
 def apply_filter_ratio(edges: DataFrame, n_vertices: int, ratio: float) -> DataFrame:
@@ -150,13 +140,11 @@ def _v_sums() -> list[Column]:
 def _guard(vmap: DataFrame, n: int, l1: float | None, missing: int = 0) -> None:
     """The set-up guards in their historical order; the persisted map is
     released before raising."""
-    from pagerank_project_spark.operators.vids import endpoints_missing_error
-
     err = None
     if n == 0:
         err = ValueError("empty graph")
     elif missing:
-        err = endpoints_missing_error(missing)
+        err = vids.endpoints_missing_error(missing)
     elif not l1 or l1 <= 0:
         err = AssertionError("personalization vector is all-zero (pagerank.py:94)")
     if err is not None:
@@ -203,13 +191,11 @@ def build_graph(
     executor OOM). Collisions (birthday bound ~2e-7 at 4M vertices) fall
     back to the string-sorted rank, the only branch that adds jobs.
     """
-    from pagerank_project_spark.operators import vids
-
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges
     if filter_ratio is not None:
         # the filter's threshold needs n before the build can start
-        e = apply_filter_ratio(e, build_vertices(edges, vertices).count(), filter_ratio)
+        e = apply_filter_ratio(e, vids.build_vertices(edges, vertices).count(), filter_ratio)
     wt = F.lit(1.0) if weight_col is None else F.when(
         F.col(weight_col) > 0, F.col(weight_col).cast("double")
     ).otherwise(F.raise_error(F.format_string(
@@ -229,7 +215,7 @@ def build_graph(
             .agg(F.max("_known").alias("_known"))
         )
     else:
-        universe = build_vertices(edges, vertices).withColumn("_known", F.lit(1))
+        universe = vids.build_vertices(edges, vertices).withColumn("_known", F.lit(1))
     vmap = (
         vids.hashed_vids(universe.join(out, "id", "left"))
         .select(

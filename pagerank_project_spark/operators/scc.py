@@ -43,9 +43,17 @@ Scale shape (house superstep discipline throughout):
 - no driver-side iteration over components: roots, colors, and backward
   frontiers are all DataFrames.
 
+Encoding (the vid layer, ``operators/vids.py``): the loop always runs on
+LONG vids — min over STRING ids compiles to a per-superstep
+SortAggregate, min over longs to a map-side-combined HashAggregate.
+``vids.hash_encode`` gives xxhash64 vids with one collision-check job; on
+a collision the ids are ranked by ``vids.string_sorted_vids`` and the
+edges re-encoded by ``vids.encode_pair``, as PageRank does.
+
 Determinism: colors are min-vid, tie-breaks structural — the labeling
-is a pure function of the graph (scc label = min vid in the component,
-matching the CC operator's min-label convention).
+is a pure function of the graph. Whatever the vid order, the group labels
+are renamed ONCE at decode to the min STRING member id
+(``vids.relabel_min_id``, the CC convention).
 """
 
 from __future__ import annotations
@@ -53,6 +61,15 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from pagerank_project_spark.operators.vids import (
+    assert_endpoints_covered,
+    build_vertices,
+    encode_pair,
+    hash_encode,
+    relabel_min_id,
+    string_sorted_vids,
+)
 
 
 @dataclass
@@ -258,40 +275,22 @@ def strongly_connected_components(
     identical either way (pinned by test); the contraction costs
     O(log max-chain) pointer-doubling supersteps once.
     """
-    from pagerank_project_spark.operators.pagerank import build_vertices
-    from pagerank_project_spark.operators.vids import assert_endpoints_covered
-
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = build_vertices(edges, vertices)
     if vertices is not None:
         # same contract as label_propagation/CC: a caller-supplied vertex
         # table missing edge endpoints would silently drop those labels at
-        # the hashed-path vmap decode join (while the string fallback would
-        # emit them) — refuse loudly instead of diverging by code path
-        assert_endpoints_covered(edges, verts)
+        # the vmap decode join — refuse loudly instead
+        assert_endpoints_covered(edges, build_vertices(edges, vertices))
 
-    # run the loop on xxhash64 LONG vids (the CC/LPA lesson, re-confirmed
-    # by this operator's own plan capture: min over STRING ids compiles to
-    # a per-superstep SortAggregate, the memory-bandwidth-bound shape the
-    # engine avoids everywhere else; min over LONG is a map-side-combined
-    # HashAggregate). Component labels are hash-min mid-run and relabelled
-    # to min-STRING member id ONCE at decode, so the output contract is
-    # unchanged bitwise. Collision-checked; falls back to raw strings.
-    chk = verts.agg(
-        F.count("*").alias("n"), F.count_distinct(F.xxhash64("id")).alias("nv")
-    ).first()
-    hashed = chk["nv"] == chk["n"]
-    if hashed:
-        # a plain projection — rebuilt on demand at decode, no cache needed
-        vmap = verts.select("id", F.xxhash64("id").alias("vid"))
-        enc_edges = edges.select(
-            F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
-        )
-        enc_verts = vmap.select(F.col("vid").alias("id"))
-    else:
-        vmap = None
-        enc_edges = edges.select("src", "dst")
-        enc_verts = verts.select("id")
+    # LONG vids for the loop (module doc): hashed — a plain projection,
+    # rebuilt on demand at decode — or, on a collision, string-sorted
+    # ranks (persisted by string_sorted_vids, read again at decode)
+    enc = hash_encode(edges, vertices)
+    if enc is None:
+        vmap = string_sorted_vids(build_vertices(edges, vertices), "id", nparts)
+        enc = vmap, encode_pair(edges.select("src", "dst"), vmap).toDF("src", "dst")
+    vmap, enc_edges = enc
+    enc_verts = vmap.select(F.col("vid").alias("id"))
 
     base = (
         enc_edges.filter(F.col("src") != F.col("dst"))
@@ -650,26 +649,12 @@ def strongly_connected_components(
             )
         )
         labels = labels.unionByName(exp).unionByName(cycles)
-        if not hashed:
-            # a chain member can undercut its group's root id; restore the
-            # scc = min-member-id contract (the hashed path's decode step
-            # below already relabels every group to its min STRING member)
-            rep = labels.groupBy("scc").agg(F.min("id").alias("_min"))
-            labels = labels.join(rep.hint("shuffle_hash"), "scc").select(
-                "id", F.col("_min").alias("scc")
-            )
-    if hashed:
-        # one-time decode: hash-min group labels → min-STRING member id
-        # (the CC relabel pattern), restoring the documented contract
-        dec = (
-            labels.select(F.col("id").alias("vid"), F.col("scc").alias("_g"))
-            .join(vmap.hint("shuffle_hash"), "vid")
-            .select("id", "_g")
-        )
-        rep = dec.groupBy("_g").agg(F.min("id").alias("scc"))
-        labels = dec.join(rep.hint("shuffle_hash"), "_g").select("id", "scc")
+    # one-time decode: min-vid group labels → min-STRING member id (a
+    # chain member can also undercut its group's root), restoring the
+    # documented contract
+    dec = labels.toDF("vid", "lbl").join(vmap.hint("shuffle_hash"), "vid").select("id", "lbl")
     return SCCResult(
-        labels=labels,
+        labels=relabel_min_id(dec, "scc"),
         rounds=rounds,
         phase_secs={k: round(v, 3) for k, v in phase_secs.items()},
         coloring_supersteps=coloring_supersteps,

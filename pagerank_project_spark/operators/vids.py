@@ -1,12 +1,15 @@
-"""Distributed dictionary encoding: string vertex id → dense long vid.
+"""The vid layer: string vertex id ⇄ dense long vid, shared by every
+graph operator. Everything that builds, encodes or decodes a vid map
+lives here, once:
 
-Two encoders and the undirected build, shared by every graph operator:
-
+- ``build_vertices``: the vertex universe — a supplied table's ids, or
+  the distinct edge endpoints.
 - ``hashed_vids``: vid = xxhash64(id) — zero extra jobs, deterministic
-  under partition recompute, order-AGNOSTIC. Right for PageRank's
-  relational path where vid order never surfaces. Collisions (birthday
-  bound ~2e-7 at 4M vertices) are detected by the caller and fall back to
-  ``string_sorted_vids``.
+  under partition recompute, order-AGNOSTIC. ``hash_encode`` builds the
+  map and the join-free encoded edges with ONE collision-check job (CC
+  star, SCC); PageRank fuses the same check into its build aggregate.
+  Collisions (birthday bound ~2e-7 at 4M vertices) fall back to
+  ``string_sorted_vids`` (PageRank, SCC) or ``undirected_build`` (CC).
 - ``string_sorted_vids``: vid = 1-based rank of id in ascending string
   order, 1..n DENSE, computed WITHOUT a global single-task sort:
 
@@ -21,9 +24,15 @@ Two encoders and the undirected build, shared by every graph operator:
   filled by the count collect for exactly that reason). At 10^12
   vertices every stage of this is parallel: no task ever sees more than
   one range partition.
-- ``undirected_build``: the one undirected build (LPA, CC's string-sorted
-  path, ``prepare_undirected``) — universe, endpoint guard, sorted vids,
-  encode joins, int32 narrowing and canonical pairs in ONE driver action.
+- ``undirected_build``: the one undirected build (LPA, CC propagation and
+  CC's collision fallback, ``prepare_undirected``) — universe, endpoint
+  guard, sorted vids, encode joins, int32 narrowing and canonical pairs
+  in ONE driver action.
+- the decode family: ``decode_pair`` (vid, lbl) → (id, label) for label
+  outputs and checkpoint writes, ``encode_pair`` its inverse for resume,
+  and ``relabel_min_id``, which renames each label group to its min
+  string id whatever the vid order (hashed vids, or groups a chain
+  member undercuts).
 
 Why string-sorted DENSE vids matter (not just any unique longs):
 
@@ -59,9 +68,36 @@ import os as _os
 INT_VID_LIMIT = int(_os.environ.get("SPARK_GRAFT_INT_VID_LIMIT", 2_147_483_000))
 
 
+def build_vertices(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
+    """Vertex universe: provided table (id) or distinct src ∪ dst."""
+    if vertices is not None:
+        return vertices.select("id").distinct()
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
 def hashed_vids(verts: DataFrame, id_col: str = "id") -> DataFrame:
     """(id, …) → + vid = xxhash64(id). Caller must collision-check."""
     return verts.withColumn("vid", F.xxhash64(id_col))
+
+
+def hash_encode(
+    edges: DataFrame, vertices: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame] | None:
+    """(vmap (id, vid), encoded edges (src, dst)) with hashed vids, or None
+    when two ids of the universe collide. ONE driver action (count vs
+    count-distinct vid); both returns are plain projections — the edges
+    encode with no join, so nothing is dropped and the caller guards a
+    supplied vertex table itself."""
+    vmap = hashed_vids(build_vertices(edges, vertices)).select("id", "vid")
+    chk = vmap.agg(F.count("*").alias("n"), F.count_distinct("vid").alias("nv")).first()
+    if chk["nv"] != chk["n"]:
+        return None
+    enc = hashed_vids(edges.select("src", "dst"), "src").select(F.col("vid").alias("src"), "dst")
+    return vmap, hashed_vids(enc, "dst").select("src", F.col("vid").alias("dst"))
 
 
 def _ranked(rows: DataFrame, nparts: int) -> DataFrame:
@@ -143,7 +179,7 @@ class UndirectedBuild:
     vmap: DataFrame  # (id string, vid long): string-sorted dense vids 1..n
     canon: DataFrame  # canonical_pairs of the encoded edges; int vids when narrowed
     n: int
-    cache: DataFrame | None  # the persisted rank table under vmap; None for a supplied vmap
+    cache: DataFrame  # the persisted rank table under vmap
 
 
 def undirected_build(
@@ -151,7 +187,6 @@ def undirected_build(
     vertices: DataFrame | None = None,
     num_partitions: int | None = None,
     validate_vertices: bool = True,
-    vmap: DataFrame | None = None,
     narrow: bool = True,
     require_vertices: bool = False,
 ) -> UndirectedBuild:
@@ -167,8 +202,6 @@ def undirected_build(
     and the encode joins and the caller's edge cache run inside the
     caller's first superstep.
 
-    ``vmap``: a caller-built map over the same universe (from
-    ``string_sorted_vids``); the endpoint check is then a separate count.
     ``narrow``: store dense vids as int32 when n < INT_VID_LIMIT — an
     order-preserving cast, so labels stay bitwise the long path's.
     ``require_vertices``: raise "empty graph" when n == 0 (checked before
@@ -176,32 +209,26 @@ def undirected_build(
     """
     spark = SparkSession.getActiveSession()
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    cache = None
-    if vmap is not None:
-        if vertices is not None and validate_vertices:
-            assert_endpoints_covered(edges, vertices.select("id").distinct())
-        n = vmap.count()
+    ends = edges.select(F.col("src").alias("id")).unionByName(edges.select(F.col("dst").alias("id")))
+    if vertices is None:
+        rows = ends.select("id", F.lit(1).alias("_known"))
+    elif validate_vertices:
+        rows = ends.select("id", F.lit(0).alias("_known")).unionByName(
+            vertices.select("id", F.lit(1).alias("_known"))
+        )
     else:
-        ends = edges.select(F.col("src").alias("id")).unionByName(edges.select(F.col("dst").alias("id")))
-        if vertices is None:
-            rows = ends.select("id", F.lit(1).alias("_known"))
-        elif validate_vertices:
-            rows = ends.select("id", F.lit(0).alias("_known")).unionByName(
-                vertices.select("id", F.lit(1).alias("_known"))
-            )
-        else:
-            rows = vertices.select("id", F.lit(1).alias("_known"))
-        cache = _ranked(rows, nparts)
-        vid, n_rows, n = _rank_stats(cache, nparts)
-        err = None
-        if require_vertices and n == 0:
-            err = ValueError("empty graph")
-        elif n_rows != n:
-            err = endpoints_missing_error(n_rows - n)
-        if err is not None:
-            cache.unpersist()
-            raise err
-        vmap = cache.select("id", vid)
+        rows = vertices.select("id", F.lit(1).alias("_known"))
+    cache = _ranked(rows, nparts)
+    vid, n_rows, n = _rank_stats(cache, nparts)
+    err = None
+    if require_vertices and n == 0:
+        err = ValueError("empty graph")
+    elif n_rows != n:
+        err = endpoints_missing_error(n_rows - n)
+    if err is not None:
+        cache.unpersist()
+        raise err
+    vmap = cache.select("id", vid)
     enc = (
         edges.select("src", "dst")
         .join(vmap.select(F.col("id").alias("src"), F.col("vid").alias("_s")), "src")
@@ -210,6 +237,50 @@ def undirected_build(
     vid_t = "int" if narrow and n < INT_VID_LIMIT else "long"
     enc = enc.select(F.col("_s").cast(vid_t).alias("src"), F.col("_t").cast(vid_t).alias("dst"))
     return UndirectedBuild(vmap, canonical_pairs(enc), n, cache)
+
+
+def decode_pair(pairs: DataFrame, vmap: DataFrame, label: str) -> DataFrame:
+    """Two vid columns (vertex, label) → (id, ``label``) strings: a label
+    output, or a checkpoint snapshot (LPA and CC propagation run this
+    inside every superstep's write). shuffle_hash: an SMJ would sort both
+    |V|-sized sides twice. Narrowed int vids widen back to the map's long
+    explicitly (the join would coerce anyway; explicit keeps the shuffle
+    keys unambiguous)."""
+    pairs = pairs.toDF("vid", "lbl").select(
+        F.col("vid").cast("long").alias("vid"), F.col("lbl").cast("long").alias("lbl")
+    )
+    return (
+        pairs.join(vmap.select("vid", "id").hint("shuffle_hash"), "vid")
+        .join(
+            vmap.select(F.col("vid").alias("lbl"), F.col("id").alias(label)).hint("shuffle_hash"),
+            "lbl",
+        )
+        .select("id", label)
+    )
+
+
+def encode_pair(pairs: DataFrame, vmap: DataFrame) -> DataFrame:
+    """Two string-id columns → (vid, lbl): the inverse of ``decode_pair``,
+    which re-encodes a checkpoint snapshot on resume (and SCC's edges after
+    a hash collision). Inner joins: ids outside the map drop out."""
+    return (
+        pairs.toDF("id", "_lid")
+        .join(vmap.select("id", "vid").hint("shuffle_hash"), "id")
+        .join(
+            vmap.select(F.col("id").alias("_lid"), F.col("vid").alias("lbl")).hint("shuffle_hash"),
+            "_lid",
+        )
+        .select("vid", "lbl")
+    )
+
+
+def relabel_min_id(lab: DataFrame, label: str) -> DataFrame:
+    """(id, lbl) → (id, ``label``): every lbl group renamed to its min
+    string id — the component contract whatever order the group keys
+    have. One groupBy + one shuffle_hash join-back; ``lab`` feeds both, so
+    a caller whose ``lab`` is an expensive plan checkpoints it first."""
+    rep = lab.groupBy("lbl").agg(F.min("id").alias(label))
+    return lab.join(rep.hint("shuffle_hash"), "lbl").select("id", label)
 
 
 def endpoints_missing_error(missing: int) -> ValueError:

@@ -183,5 +183,3 @@ def test_lpa_prepared_und_bitwise_equal_and_guards(spark, tmp_path):
         label_propagation(spark, edges, iterations=2, prepared_und=pg)
     with _pytest.raises(ValueError, match="exactly one"):
         label_propagation(spark, iterations=2)
-    with _pytest.raises(ValueError, match="bakes the sorted"):
-        label_propagation(spark, iterations=2, prepared_und=pg, vid_mode="hash")

@@ -384,28 +384,6 @@ def test_cc_hash_path_vertices_guard(spark):
     assert res.converged  # opt-out keeps the documented-unsafe behavior
 
 
-# --- shared vmap across graph ops -------------------------------------------
-
-
-def test_shared_vmap_matches_per_op_encode(spark, small_rows):
-    from pagerank_project_spark.operators.labelprop import label_propagation
-    from pagerank_project_spark.operators.pagerank import build_vertices
-    from pagerank_project_spark.operators.vids import string_sorted_vids
-
-    e = edges_df(spark, small_rows)
-    verts = build_vertices(e, None)
-    vmap = string_sorted_vids(verts, "id", 8)
-
-    cc_a = connected_components(spark, e, driver_finish_edges=0)
-    cc_b = connected_components(spark, e, driver_finish_edges=0, vmap=vmap)
-    assert sorted(map(tuple, cc_a.labels.collect())) == sorted(map(tuple, cc_b.labels.collect()))
-
-    lpa_a = label_propagation(spark, e, iterations=3)
-    lpa_b = label_propagation(spark, e, iterations=3, vmap=vmap)
-    assert sorted(map(tuple, lpa_a.labels.collect())) == sorted(map(tuple, lpa_b.labels.collect()))
-    vmap.unpersist()
-
-
 # --- bucketed streaming-degree MERGE ----------------------------------------
 
 

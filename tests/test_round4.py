@@ -260,13 +260,13 @@ def test_pii_scrub_known_counts(spark):
 
 
 # --------------------------------------------------------------------------
-# LPA hash-vid production mode
+# LPA structure / the hash encode
 # --------------------------------------------------------------------------
 
-def test_lpa_hash_mode_deterministic_and_structurally_sane(spark):
-    """hash vid_mode: deterministic across partition counts, finds the
-    same community STRUCTURE as sorted mode on a tie-free fixture (two
-    4-cliques bridged by one edge), and falls back safely."""
+def test_lpa_two_cliques_structure_and_partition_invariance(spark):
+    """Two 4-cliques bridged by one edge: LPA finds the two cliques (the
+    bridge is absorbed), and the labels do not depend on the partition
+    count."""
     from pagerank_project_spark.operators.labelprop import label_propagation
 
     cliq = lambda names: [(a, b) for a in names for b in names if a < b]  # noqa: E731
@@ -281,28 +281,27 @@ def test_lpa_hash_mode_deterministic_and_structurally_sane(spark):
             d[r["label"]].add(r["id"])
         return sorted(sorted(v) for v in d.values())
 
-    sorted_parts = parts(label_propagation(spark, e, iterations=4))
-    hash_parts = parts(label_propagation(spark, e, iterations=4, vid_mode="hash"))
-    assert sorted_parts == hash_parts  # two cliques, bridge absorbed
+    assert parts(label_propagation(spark, e, iterations=4)) == [
+        ["a1", "a2", "a3", "a4"], ["b1", "b2", "b3", "b4"],
+    ]
 
-    # determinism: partition count must not change hash-mode output
-    h2 = label_propagation(spark, e, iterations=4, vid_mode="hash", num_partitions=2)
-    h8 = label_propagation(spark, e, iterations=4, vid_mode="hash", num_partitions=8)
-    assert sorted(map(tuple, h2.labels.collect())) == sorted(map(tuple, h8.labels.collect()))
+    l2 = label_propagation(spark, e, iterations=4, num_partitions=2)
+    l8 = label_propagation(spark, e, iterations=4, num_partitions=8)
+    assert sorted(map(tuple, l2.labels.collect())) == sorted(map(tuple, l8.labels.collect()))
 
 
-def test_lpa_hash_mode_zero_encode_joins(spark):
-    """The hash path must not join a vmap to encode edges: the symmetric
-    edge view's plan contains no join at all."""
-    from pagerank_project_spark.operators.components import undirected_edges
-    from pyspark.sql import functions as F
+def test_hash_encode_zero_encode_joins(spark):
+    """The shared hash encode must not join a vmap to encode edges: the
+    encoded edges' plan contains no join at all."""
+    from pagerank_project_spark.operators.vids import hash_encode
 
     e = edges_df(spark, [("a", "b"), ("b", "c")])
-    enc = undirected_edges(e).select(
-        F.xxhash64("src").alias("src"), F.xxhash64("dst").alias("dst")
-    )
+    vmap, enc = hash_encode(e)
     plan = enc._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan
+    assert sorted(r["vid"] for r in vmap.collect()) == sorted(
+        {r["src"] for r in enc.collect()} | {r["dst"] for r in enc.collect()}
+    )
 
 
 # --------------------------------------------------------------------------

@@ -1,0 +1,121 @@
+"""The vid layer (``operators/vids.py``) under the operators that hash:
+the collision fallbacks of CC star and SCC, forced through the
+``vids.hashed_vids`` seam and checked against networkx on F1 and sf0.001,
+their endpoint guard under a collision, and CC's salted hub join."""
+
+from __future__ import annotations
+
+import re
+
+import networkx as nx
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from pagerank_project_spark.operators import components as cc_mod
+from pagerank_project_spark.operators import scc as scc_mod
+from pagerank_project_spark.operators import vids as vids_mod
+from pagerank_project_spark.operators.components import connected_components
+from pagerank_project_spark.operators.extract import extract_edges, vertices_from_files
+from pagerank_project_spark.operators.scc import strongly_connected_components
+
+
+def _min_labels(comps) -> dict[str, str]:
+    return {v: min(c) for c in comps for v in c}
+
+
+def _oracle(op: str, rows, ids) -> dict[str, str]:
+    g = nx.DiGraph() if op == "scc" else nx.Graph()
+    g.add_nodes_from(ids)
+    g.add_edges_from(rows)
+    if op == "scc":
+        return _min_labels(nx.strongly_connected_components(g))
+    return _min_labels(nx.connected_components(g))
+
+
+def _run(spark, op: str, edges, verts) -> dict[str, str]:
+    if op == "scc":
+        res = strongly_connected_components(spark, edges, vertices=verts)
+        return {r["id"]: r["scc"] for r in res.labels.collect()}
+    res = connected_components(spark, edges, vertices=verts)
+    return {r["id"]: r["component"] for r in res.labels.collect()}
+
+
+def _collide(monkeypatch) -> list[int]:
+    """Every id hashes to the same vid, so each hash encode must fall back;
+    returns a list that records each call of the operators' fallback."""
+    monkeypatch.setattr(
+        vids_mod, "hashed_vids", lambda verts, id_col="id": verts.withColumn("vid", F.lit(7).cast("long"))
+    )
+    calls: list[int] = []
+    for mod, name in ((cc_mod, "undirected_build"), (scc_mod, "string_sorted_vids")):
+        def spy(*args, _real=getattr(mod, name), **kwargs):
+            calls.append(1)
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(mod, name, spy)
+    return calls
+
+
+@pytest.fixture(scope="module")
+def f1_graph(spark, small_rows):
+    """F1 edges; the universe is derived from the edges."""
+    ids = sorted({x for r in small_rows for x in r})
+    return spark.createDataFrame(pd.DataFrame(small_rows, columns=["src", "dst"])), None, small_rows, ids
+
+
+@pytest.fixture(scope="module")
+def sf0001_graph(spark, sf0001_fixture):
+    """Extracted sf0.001 edges with the file universe (isolated files included)."""
+    files = spark.read.parquet(f"{sf0001_fixture}/source_table/data")
+    edges = extract_edges(files).select("src", "dst").persist()
+    verts = vertices_from_files(files).persist()
+    rows = [(r["src"], r["dst"]) for r in edges.collect()]
+    ids = sorted({r["id"] for r in verts.collect()})
+    yield edges, verts, rows, ids
+    edges.unpersist()
+    verts.unpersist()
+
+
+@pytest.mark.parametrize("graph", ["f1_graph", "sf0001_graph"])
+@pytest.mark.parametrize("op", ["cc", "scc"])
+def test_forced_collision_matches_networkx(spark, request, monkeypatch, op, graph):
+    """A vid collision sends CC star to the string-sorted undirected build
+    and SCC to string-sorted long vids; labels stay networkx's."""
+    edges, verts, rows, ids = request.getfixturevalue(graph)
+    fallbacks = _collide(monkeypatch)
+    assert _run(spark, op, edges, verts) == _oracle(op, rows, ids)
+    assert len(fallbacks) == 1
+
+
+@pytest.mark.parametrize("op", ["cc", "scc"])
+def test_forced_collision_missing_endpoint_raises(spark, monkeypatch, op):
+    """Under a collision, a vertex table that lacks an endpoint still
+    raises the shared endpoint-guard message."""
+    _collide(monkeypatch)
+    edges = spark.createDataFrame([("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string")
+    verts = spark.createDataFrame([("a",), ("b",)], "id string")  # missing c
+    msg = re.escape(str(vids_mod.endpoints_missing_error(1)))
+    with pytest.raises(ValueError, match=msg):
+        _run(spark, op, edges, verts)
+
+
+def test_salted_hub_join_matches_networkx(spark, monkeypatch, small_rows):
+    """With no hub broadcast budget every skew-safe star op joins its hub
+    minimums through the salted (center, salt) join; labels stay
+    networkx's."""
+    monkeypatch.setattr(cc_mod, "HUB_BROADCAST_LIMIT", 0)
+    salted = []
+    real = cc_mod._join_mins
+
+    def spy(rows, mins, hub_threshold, spark_, salted_flag):
+        salted.append(salted_flag)
+        return real(rows, mins, hub_threshold, spark_, salted_flag)
+
+    monkeypatch.setattr(cc_mod, "_join_mins", spy)
+    edges = spark.createDataFrame(pd.DataFrame(small_rows, columns=["src", "dst"]))
+    res = connected_components(spark, edges, driver_finish_edges=0, skew_threshold=1)
+    got = {r["id"]: r["component"] for r in res.labels.collect()}
+    assert res.converged
+    assert salted and all(salted)
+    assert got == _oracle("cc", small_rows, {x for r in small_rows for x in r})

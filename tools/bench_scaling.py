@@ -246,27 +246,22 @@ elif op in ("lpa_prepared", "lpa_prepared_slots"):
                 "sec_per_iter": med, "phase_secs": res.phase_secs, "decode_sec": decode_sec,
                 "whole_run_eps": round(n_edges * lpa_iters / dt, 1),
                 "edges_per_sec_per_superstep": round(n_edges / med, 1)})
-elif op in ("lpa", "lpa_hash", "lpa_prod"):
+elif op in ("lpa", "lpa_prod"):
     from pagerank_project_spark.operators.labelprop import label_propagation
-    # 'lpa' = the ledger row: sorted vids (compact 0..n vids delta-compress
-    # in the symmetric edge cache — measured smaller cache AND faster
-    # superstep scans than incompressible xxhash64 vids; see BASELINE.md
-    # round-4 LPA analysis). 'lpa_hash' = the hash-encode diagnostic.
-    # 'lpa_prod' = production-length run (12 supersteps) amortizing the
-    # one-time cache-fill/validate tails, sorted vids.
+    # 'lpa' = the ledger row (4 supersteps). 'lpa_prod' = production-length
+    # run (12 supersteps) amortizing the one-time cache-fill/validate tails.
     lpa_iters = 12 if op == "lpa_prod" else 4
-    lpa_mode = "hash" if op == "lpa_hash" else "sorted"
     # production-length runs amortize the warm_start pilot (see the
     # lpa_prepared cells); the 4-superstep ledger row stays pilot-free
     res = label_propagation(spark, edges, vertices=verts, iterations=lpa_iters,
-                            vid_mode=lpa_mode, warm_start=(op == "lpa_prod"))
+                            warm_start=(op == "lpa_prod"))
     t_dec = time.time()
     res.labels.select(F.count("*")).collect()
     decode_sec = round(time.time() - t_dec, 2)
     dt = time.time() - t0
     steady = sorted(res.iter_secs[1:]) or res.iter_secs
     med = steady[len(steady) // 2]
-    out.update({"iters": lpa_iters, "vid_mode": lpa_mode, "wall_sec": round(dt, 2),
+    out.update({"iters": lpa_iters, "wall_sec": round(dt, 2),
                 "iter_secs": res.iter_secs,
                 "sec_per_iter": med, "phase_secs": res.phase_secs, "decode_sec": decode_sec,
                 "whole_run_eps": round(n_edges * lpa_iters / dt, 1),
@@ -592,8 +587,8 @@ round), LPA streams ONE long-lived 131M-row symmetric cache every
 superstep, and the vid encoding sets that cache's compressibility —
 compact string-sorted vids delta-compress, random xxhash64 vids don't,
 so hash mode paid a bigger cache (slower fill AND ~20% slower superstep
-scans: 103 vs 82 s/iter at 1×4) to save a 35 s encode. Sorted stays the
-default; vid_mode='hash' remains for encode-dominated shapes.
+scans: 103 vs 82 s/iter at 1×4) to save a 35 s encode. Sorted is the
+only encoding LPA keeps.
 (b) CANONICAL LONG-PAIR SYMMETRIZE — the old flow shuffled the
 symmetrized STRING multiset through its distinct before vids existed;
 encoding first and deduping greatest/least LONG pairs (canon ∪ reverse
