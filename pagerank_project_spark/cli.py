@@ -54,8 +54,8 @@ def build_parser() -> argparse.ArgumentParser:
                    help="--algorithm ppr: drop state entries under this rank after "
                         "each superstep (forward-push-style cap; default exact)")
     p.add_argument("--lpa_frontier", action="store_true",
-                   help="LPA: exact frontier gather + fixpoint early stop "
-                        "(run-toward-convergence shape)")
+                   help="LPA: stop at the fixpoint and report the changed-label "
+                        "count per superstep (run-toward-convergence shape)")
     p.add_argument("--lpa_warm_start", action="store_true",
                    help="LPA: one throwaway 1%%-sampled pilot superstep before "
                         "superstep 1 so the JIT/codegen session tail is paid at "

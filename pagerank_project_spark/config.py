@@ -1,10 +1,11 @@
 """Engine configuration.
 
-``PageRankConfig`` mirrors the reference CLI surface (pagerank.py:261-285:
---data --personalization_vector_query --search_query --filter_ratio --alpha
---max_iterations --epsilon --max_results --power --sum_weight) plus the
-Spark-side knobs the reference has no concept of (partitioning, salting,
-checkpointing, physical strategy, normalization mode).
+``PageRankConfig`` holds the reference CLI's power-method knobs
+(pagerank.py:261-285: --alpha --max_iterations --epsilon --filter_ratio)
+plus the Spark-side knobs the reference has no concept of (partitioning,
+salting, checkpointing, physical strategy, normalization mode). The
+reference's input, personalization and search flags are CLI arguments
+that ``cli.py`` passes on directly.
 
 Normalization modes (SURVEY.md §5.2 — the reference README goldens pin
 *different* semantics than the committed code):
@@ -46,12 +47,6 @@ class PageRankConfig:
     max_iterations: int = 1000
     epsilon: float = 1e-6
     filter_ratio: float | None = None
-    max_nnz: int | None = None
-    personalization_query: str | None = None
-    search_query: str = ""
-    max_results: int = 10
-    sum_weight: float = 0.03
-    power: int = 30
     # semantics
     mode: str = "reference"  # reference | l2l2 | standard | l2l1
     convergence: str = "l2_residual"  # l2_residual (reference) | l1_delta (bench)

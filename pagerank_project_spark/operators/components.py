@@ -98,11 +98,10 @@ Checkpoint state is algorithm-specific (labels for propagation, the
 contracted edge set for star); a store written by one algorithm refuses
 to resume under the other.
 
-The whole call, build included, runs with AQE off (restored in
-``finally``): re-planning per stage made every build shuffle its own
-Spark job, so a star call is now three (collision check, canonical-edge
-fill, driver finish). Cost at scale: AQE's skew-join no longer splits a
-hub partition of the sorted path's encode joins. A warm call (same
+The whole call, build included, runs in ``session.engine_call`` (AQE
+off): re-planning per stage made every build shuffle its own Spark job,
+so a star call is now three (collision check, canonical-edge fill,
+driver finish). A warm call (same
 graph, same session) compiles no generated class, because
 ``session.get_spark`` sizes Spark's codegen cache to the engine; sessions
 built elsewhere keep Spark's 100-entry default.
@@ -125,6 +124,7 @@ from pagerank_project_spark.operators.vids import (
     symmetric_pairs,
     undirected_build,
 )
+from pagerank_project_spark.session import engine_call
 
 logger = logging.getLogger(__name__)
 
@@ -566,13 +566,7 @@ def connected_components(
 
     phases: dict = {}
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # the whole call runs with AQE off: its per-stage re-planning makes
-    # every build shuffle its own Spark job and buys nothing in a call
-    # whose shape and partitioning are fixed. Restored even when a step
-    # raises — AQE must not stay disabled for the caller's session.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with engine_call(spark):
         # Encode (see module doc): star mode hashes (zero setup shuffles)
         # unless the collision check fails; propagation needs
         # order-preserving string-sorted vids.
@@ -625,8 +619,6 @@ def connected_components(
             labels, it, converged, iter_secs = _run_propagation(
                 spark, canon, vmap, nparts, max_iterations, checkpoint_store, start_iter, phases
             )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
     canon.unpersist()
     return ComponentsResult(

@@ -40,6 +40,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pagerank_project_spark.operators.vids import assert_endpoints_covered, build_vertices
+from pagerank_project_spark.session import engine_call
 
 
 @dataclass
@@ -80,18 +81,16 @@ def hits(
 ) -> HITSResult:
     if iterations < 1:
         raise ValueError("hits requires iterations >= 1")
-    verts = build_vertices(edges, vertices).persist()
-    if vertices is not None and validate_vertices:
-        # endpoints outside the vertex table would still feed the L2 norms
-        # before the final left join drops them — the reported vectors
-        # would not be unit over the output set (same guard as pagerank)
-        assert_endpoints_covered(edges, verts)
-    e = edges.select("src", "dst").distinct().persist()
-    e.count()  # materialize the loop-invariant edge cache once
+    with engine_call(spark):
+        verts = build_vertices(edges, vertices).persist()
+        if vertices is not None and validate_vertices:
+            # endpoints outside the vertex table would still feed the L2 norms
+            # before the final left join drops them — the reported vectors
+            # would not be unit over the output set (same guard as pagerank)
+            assert_endpoints_covered(edges, verts)
+        e = edges.select("src", "dst").distinct().persist()
+        e.count()  # materialize the loop-invariant edge cache once
 
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
         hub = verts.select("id", F.lit(1.0).alias("s"))
         auth = None
         for _ in range(iterations):
@@ -99,8 +98,6 @@ def hits(
             auth, _ = _normalized(araw)
             hraw = _gather(e, auth, "dst", "src").localCheckpoint(eager=True)
             hub, _ = _normalized(hraw)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
     scores = (
         verts.join(auth.withColumnRenamed("s", "auth"), "id", "left")

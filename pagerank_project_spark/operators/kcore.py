@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pagerank_project_spark.operators.components import undirected_edges
 from pagerank_project_spark.operators.vids import assert_endpoints_covered, build_vertices
+from pagerank_project_spark.session import engine_call
 
 
 @dataclass
@@ -73,24 +74,22 @@ def kcore(
     max_iterations: int = 100,
     validate_vertices: bool = True,
 ) -> KCoreResult:
-    verts = build_vertices(edges, vertices)
-    if vertices is not None and validate_vertices:
-        # an endpoint outside the vertex table still inflates its
-        # neighbors' h-indices before the final left join drops it —
-        # silently wrong coreness (same guard as pagerank/hits)
-        assert_endpoints_covered(edges, verts)
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # pre-partition the loop-invariant symmetric edge cache on the gather
-    # key: every iteration's join then reads the cache partitioning
-    # directly — zero edge-side Exchange inside the loop (docs/PLANS.md §5)
-    und = undirected_edges(edges).repartition(nparts, "dst").persist()
-    und.count()
+    with engine_call(spark):
+        verts = build_vertices(edges, vertices)
+        if vertices is not None and validate_vertices:
+            # an endpoint outside the vertex table still inflates its
+            # neighbors' h-indices before the final left join drops it —
+            # silently wrong coreness (same guard as pagerank/hits)
+            assert_endpoints_covered(edges, verts)
+        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # pre-partition the loop-invariant symmetric edge cache on the gather
+        # key: every iteration's join then reads the cache partitioning
+        # directly — zero edge-side Exchange inside the loop (docs/PLANS.md §5)
+        und = undirected_edges(edges).repartition(nparts, "dst").persist()
+        und.count()
 
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    converged = False
-    it = 0
-    try:
+        converged = False
+        it = 0
         c = (
             und.groupBy(F.col("src").alias("id"))
             .agg(F.count("*").alias("core"))
@@ -113,8 +112,6 @@ def kcore(
             if changed == 0:
                 converged = True
                 break
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
     cores = verts.join(c, "id", "left").select(
         "id", F.coalesce(F.col("core"), F.lit(0)).alias("core")
@@ -127,11 +124,9 @@ def kcore_fixed(spark: SparkSession, edges: DataFrame, iterations: int) -> DataF
     """Exactly ``iterations`` h-index supersteps (no convergence test) —
     the oracle-comparable fixed-k twin, mirroring `kcore`'s dataflow."""
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    und = undirected_edges(edges).repartition(nparts, "dst").persist()
-    und.count()
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with engine_call(spark):
+        und = undirected_edges(edges).repartition(nparts, "dst").persist()
+        und.count()
         c = (
             und.groupBy(F.col("src").alias("id"))
             .agg(F.count("*").alias("core"))
@@ -139,7 +134,5 @@ def kcore_fixed(spark: SparkSession, edges: DataFrame, iterations: int) -> DataF
         )
         for _ in range(iterations):
             c = _h_step(und, c).localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
     und.unpersist()
     return c

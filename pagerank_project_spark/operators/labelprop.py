@@ -24,9 +24,8 @@ Physical design (same substrate as PageRank/CC):
   (count, Σknown) gives the sorted offsets, n and the endpoints missing
   from a supplied vertex table. The encode joins, the symmetrize and the
   edge cache are lazy; superstep 1 fills the cache.
-- the whole call runs with AQE off (restored in ``finally``): re-planning
-  per stage made every build shuffle its own Spark job. Cost at scale:
-  AQE's skew-join no longer splits a hub partition of the encode joins.
+- the whole call runs in ``session.engine_call`` (AQE off): re-planning
+  per stage made every build shuffle its own Spark job.
 - a warm call (same graph, same session) compiles no generated class:
   ``session.get_spark`` sizes Spark's codegen cache to the engine
   (``CODEGEN_CACHE_ENTRIES``). Sessions built elsewhere keep Spark's
@@ -68,12 +67,7 @@ from pagerank_project_spark.operators.vids import (
     symmetric_pairs,
     undirected_build,
 )
-
-# frontier mode only engages its filtered gather when the touched set is
-# small enough to broadcast as a semi-join filter over the edge cache
-# (~8 bytes/vid → 40 MB at the limit); above it the superstep falls back
-# to the full gather, which is the right plan anyway at that frontier size
-FRONTIER_BROADCAST_LIMIT = 5_000_000
+from pagerank_project_spark.session import engine_call
 
 
 @dataclass
@@ -94,7 +88,6 @@ def label_propagation(
     checkpoint_store=None,
     validate_vertices: bool = True,
     frontier: bool = False,
-    frontier_threshold: float = 0.0,
     prepared_und=None,
     warm_start: bool = False,
 ) -> LPAResult:
@@ -111,37 +104,13 @@ def label_propagation(
     cache repartition — that the sf16 scaling analysis measured as the
     whole-run cap (BENCH/BASELINE.md).
 
-    ``frontier``: exact work-reduction for long (run-toward-convergence)
-    runs. A vertex's winner can only change when some neighbor's label
-    changed in the PREVIOUS superstep, so once the per-superstep changed
-    set falls under ``frontier_threshold``·|V| the gather is restricted
-    to touched = N(changed): the edge cache is filtered by a BROADCAST
-    semi-join on touched (a codegen'd hash filter riding the cache scan
-    — the cache itself never re-shuffles), and only Σ indeg(touched)
-    rows enter the freq shuffle + argmax instead of all E — untouched
-    vertices carry their label forward. The result is BITWISE the
-    default path's (pinned by tests): untouched vertices would have
-    recomputed identical freq tables. When a superstep changes nothing
-    the run stops early (every further superstep is provably identity,
-    so the labels still equal the full-K run; ``iterations`` reports the
-    superstep that hit the fixpoint). Costs that remain per superstep:
-    one extra cache stream to build the touched set, and the Θ(V) state
-    carry/checkpoint. Default off: fixed-k oracle runs are short and the
-    changed set only collapses near convergence.
-
-    MEASURED (sf1, 4.1M edges / 1M vertices, local[16], 12 supersteps):
-    labels bitwise equal, but mid-churn engagement is a NET LOSS — the
-    changed set stalled at ~2% (sync LPA keeps churning on this graph)
-    and filtered supersteps ran 7-9 s vs the full path's 1.1 s: two full
-    cache streams (touched build + filtered gather) plus the extra
-    union-repartition state carry and per-superstep count cost more than
-    the E-row gather they avoid at this cache size. Hence the default
-    ``frontier_threshold=0.0``: frontier=True gives ONLY the
-    provably-identity early STOP (skipping whole supersteps once nothing
-    changes) — the filtered gather never engages unless the caller opts
-    in with a positive threshold, because the measured sync-LPA churn
-    stall (~2%) sits exactly in the regime an 0.05 default would engage
-    the 7-9x-slower filtered path.
+    ``frontier``: stop early at the fixpoint. Each superstep also counts
+    the vertices whose label changed (``frontier_sizes``); when a
+    superstep changes nothing the run stops, because every further
+    superstep is provably identity, so the labels still equal the full-K
+    run and ``iterations`` reports the superstep that hit the fixpoint.
+    Costs one extra count per superstep. Default off: fixed-k oracle runs
+    are short and the changed set only collapses near convergence.
 
     ``warm_start``: before superstep 1, execute ONE pilot superstep of
     the exact loop plan shape (cache scan → shuffle_hash join → union →
@@ -163,13 +132,7 @@ def label_propagation(
     if (edges is None) == (prepared_und is None):
         raise ValueError("pass exactly one of edges / prepared_und")
     phases: dict = {}
-    # the whole call runs with AQE off: its per-stage re-planning makes
-    # every build shuffle its own Spark job and buys nothing in a call
-    # whose shape and partitioning are fixed. Restored even when a step
-    # raises — AQE must not stay disabled for the caller's session.
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with engine_call(spark):
         if prepared_und is not None:
             # prepare-once path: encode/symmetrize/repartition are baked; the
             # bucketed scan's HashPartitioning(src, buckets) means the persist
@@ -184,8 +147,8 @@ def label_propagation(
                 # loop; slots-matched recovers direct superstep speed)
                 und = und.repartition(nparts, "src")
             return _run_loop(
-                spark, und.persist(), prepared_und.vmap, None, prepared_und.n, nparts, iterations,
-                checkpoint_store, frontier, frontier_threshold, phases, warm_start,
+                spark, und.persist(), prepared_und.vmap, None, nparts, iterations,
+                checkpoint_store, frontier, phases, warm_start,
             )
 
         nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -200,11 +163,9 @@ def label_propagation(
         # sf16). Persisted lazily: superstep 1 fills the cache.
         und = symmetric_pairs(ub.canon).repartition(nparts, "src").persist()
         return _run_loop(
-            spark, und, ub.vmap, ub.cache, ub.n, nparts, iterations, checkpoint_store, frontier,
-            frontier_threshold, phases, warm_start,
+            spark, und, ub.vmap, ub.cache, nparts, iterations, checkpoint_store, frontier,
+            phases, warm_start,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
 
 def _pilot_superstep(und: DataFrame, vmap: DataFrame, nparts: int) -> None:
@@ -242,12 +203,10 @@ def _run_loop(
     und: DataFrame,
     vmap: DataFrame,
     cache: DataFrame | None,
-    n_verts: int,
     nparts: int,
     iterations: int,
     checkpoint_store,
     frontier: bool,
-    frontier_threshold: float,
     phases: dict,
     warm_start: bool = False,
 ) -> LPAResult:
@@ -273,8 +232,6 @@ def _run_loop(
     it = start_iter
     iter_secs: list[float] = []
     frontier_sizes: list[int] = []
-    changed = None  # (vid) rows whose label changed last superstep; None = all/unknown
-    changed_count = n_verts
     if warm_start:
         t_ws = time.time()
         _pilot_superstep(und, vmap, nparts)
@@ -283,72 +240,6 @@ def _run_loop(
     w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("lbl"))
     for it in range(start_iter + 1, iterations + 1):
         t_it = time.time()
-        if (
-            frontier
-            and changed is not None
-            and changed_count <= frontier_threshold * n_verts
-            and changed_count <= FRONTIER_BROADCAST_LIMIT
-        ):
-            # --- frontier superstep (exact; see docstring) -------------
-            touched = (
-                und.join(
-                    changed.select(F.col("vid").alias("src")).hint("shuffle_hash"), "src"
-                )
-                .select(F.col("dst").alias("vid"))
-                .distinct()
-                .persist()
-            )
-            tc = touched.count()
-            if tc <= FRONTIER_BROADCAST_LIMIT:
-                filt = und.join(
-                    F.broadcast(touched.select(F.col("vid").alias("dst"))), "dst", "semi"
-                )
-                # build side = the filtered Σ indeg(touched)-row edge set;
-                # the vid-partitioned label state streams exchange-free
-                nbr = (
-                    labels.select(F.col("vid").alias("_sv"), "lbl")
-                    .join(
-                        filt.select(F.col("src").alias("_sv"), "dst").hint("shuffle_hash"),
-                        "_sv",
-                    )
-                    .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
-                )
-                # no keeper rows: touched vertices are non-isolated by
-                # construction (they have the edge from the changed
-                # neighbor), and a cnt-0 own-label row can never beat a
-                # cnt>=1 neighbor row — identical winner either way
-                freq = nbr.groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
-                winner = (
-                    freq.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .select("vid", "lbl")
-                )
-                new_aff = winner.join(
-                    labels.select("vid", F.col("lbl").alias("_old")).hint("shuffle_hash"),
-                    "vid",
-                ).select("vid", "lbl", (F.col("lbl") != F.col("_old")).alias("chg"))
-                carry = labels.join(
-                    F.broadcast(touched), "vid", "anti"
-                ).select("vid", "lbl", F.lit(False).alias("chg"))
-                labels = (
-                    new_aff.unionByName(carry)
-                    .repartition(nparts, "vid")
-                    .localCheckpoint(eager=False)
-                )
-                changed_count = labels.filter("chg").count()  # materializes
-                changed = labels.filter("chg").select("vid")
-                labels = labels.select("vid", "lbl")
-                touched.unpersist()
-                frontier_sizes.append(changed_count)
-                if checkpoint_store is not None:
-                    checkpoint_store.write_iteration(
-                        decode_pair(labels, vmap, "label"), iteration=it, metrics={}
-                    )
-                iter_secs.append(round(time.time() - t_it, 3))
-                if changed_count == 0:
-                    break  # fixpoint: every further superstep is identity
-                continue
-            touched.unpersist()  # too big to broadcast → full gather
         # shuffle_hash on the LABEL side (pagerank.py's superstep rule):
         # un-hinted, Catalyst either auto-broadcasts the checkpointed
         # |V|-row label vector (driver-serial HashedRelation build per
@@ -381,17 +272,15 @@ def _run_loop(
         )
         if frontier:
             # both sides leave vid-partitioned operators → zero-exchange
-            # hash join; chg feeds the next superstep's frontier test
+            # hash join; the chg count is the early-stop test
             labels = winner.join(
                 labels.select("vid", F.col("lbl").alias("_old")).hint("shuffle_hash"),
                 "vid",
             ).select(
                 "vid", "lbl", (F.col("lbl") != F.col("_old")).alias("chg")
             ).localCheckpoint(eager=False)
-            changed_count = labels.filter("chg").count()  # materializes
-            changed = labels.filter("chg").select("vid")
+            frontier_sizes.append(labels.filter("chg").count())  # materializes
             labels = labels.select("vid", "lbl")
-            frontier_sizes.append(changed_count)
         else:
             labels = winner.localCheckpoint(eager=False)
             if checkpoint_store is None:
@@ -401,7 +290,7 @@ def _run_loop(
             # materializing action: it fills the label checkpoint
             checkpoint_store.write_iteration(decode_pair(labels, vmap, "label"), iteration=it, metrics={})
         iter_secs.append(round(time.time() - t_it, 3))
-        if frontier and changed_count == 0:
+        if frontier and frontier_sizes[-1] == 0:
             break  # fixpoint: every further superstep is identity
 
     und.unpersist()

@@ -7,8 +7,8 @@ the normalization mode parameterized (SURVEY.md §5.2): per-iteration
 mode = (l1, l2), the committed-code semantics.
 
 Architecture (SURVEY.md §3.3): the driver composes one DataFrame DAG per
-superstep; Catalyst picks the physical plan (AQE is off for the whole
-call, see ``pagerank``). Per iteration:
+superstep; Catalyst picks the physical plan (the whole call runs in
+``session.engine_call``, AQE off). Per iteration:
 
   d  = Σ rank_i over dangling i                  (folded into prev stats)
   q_i = (α·d + (1−α)) · v_i                      (expression)
@@ -55,6 +55,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from pagerank_project_spark.config import PageRankConfig
 from pagerank_project_spark.operators import vids
+from pagerank_project_spark.session import engine_call
 
 # broadcast dimension/rank tables only when |V| is below this bound.
 # Measured at 4M vertices (sf4): building the broadcast HashedRelation is
@@ -95,19 +96,6 @@ def apply_filter_ratio(edges: DataFrame, n_vertices: int, ratio: float) -> DataF
         edges.join(indeg, "dst", "inner")
         .filter(F.col("_indeg") < F.lit(float(ratio) * n_vertices))
         .drop("_indeg")
-    )
-
-
-def weighted_edges(edges: DataFrame, n_vertices: int | None = None) -> DataFrame:
-    """w = 1/outdeg(src) per edge (pagerank.py:50-61): one map-side-combined
-    groupBy on src, then a join that broadcasts only when |V| permits.
-    PageRank folds the same normalizer into its vertex map (``build_graph``)."""
-    outdeg = edges.groupBy("src").agg(F.count("*").alias("_outdeg"))
-    if n_vertices is None or n_vertices <= BROADCAST_VERTEX_LIMIT:
-        outdeg = F.broadcast(outdeg)
-    return (
-        edges.join(outdeg, "src", "inner")
-        .select("src", "dst", (F.lit(1.0) / F.col("_outdeg")).alias("w"))
     )
 
 
@@ -295,14 +283,7 @@ def pagerank(
                          "pass weight_col to prepare_graph, not the query")
 
     nparts = cfg.num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # AQE's per-stage re-planning costs ~30% per superstep (measured at sf1)
-    # and a Spark job per shuffle stage, and buys nothing in a call whose
-    # shape and partitioning are fixed — disable it for the build and the
-    # hot loop, restore the caller's setting after (also when a step
-    # raises: AQE must not stay disabled for the caller's session).
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with engine_call(spark):
         if prepared is None:
             g = build_graph(
                 spark, edges, vertices, nparts, cfg.validate_vertices, cfg.filter_ratio, weight_col, v_expr
@@ -322,8 +303,6 @@ def pagerank(
             g = GraphBuild(vmap, prepared.edges, prepared.n, prepared.m, s["l1"], s["l2"], s["dang"])
         bucketed = prepared is not None and prepared.buckets == nparts
         return _run_loop(spark, cfg, g, nparts, t_start, checkpoint_store, bucketed)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
 
 
 def _run_loop(spark, cfg, g, nparts, t_start, checkpoint_store, bucketed) -> PageRankResult:
@@ -424,8 +403,15 @@ def _iterate(
     spark, cfg, cur, ew, hubs, n, d, alpha, start_iter, residuals, iter_secs,
     checkpoint_store, vmap,
 ):
-    """The hot loop. Exactly ONE Spark job per superstep on the fused path;
-    returns (converged, next_iteration, final_state)."""
+    """The hot loop: ONE action per superstep without a checkpoint store;
+    returns (converged, next_iteration, final_state).
+
+    Spark jobs and stages per superstep (marginal over supersteps 4-6 on
+    the sf0.001 graph, local[4], stages as perfbench's tracer counts them,
+    skipped ones included): 2 jobs / 5 stages on the broadcast rank side
+    (n ≤ BROADCAST_VERTEX_LIMIT, the broadcast exchange is its own job),
+    1 / 4 on the shuffle-hash side, 5 / 10 with a checkpoint store (the
+    ``active`` aggregate and the snapshot write are their own actions)."""
     converged = False
     it = start_iter
     for it in range(start_iter, start_iter + cfg.max_iterations):
@@ -475,7 +461,7 @@ def _iterate(
         # lineage (plan references the previous state several times →
         # exponential plan growth without truncation; measured 2 GB plan
         # strings by iteration ~30), and (c) returns all driver scalars.
-        # ONE Spark job, ONE shuffle per iteration in the hot loop.
+        # ONE action, ONE shuffle per iteration in the hot loop.
         joined = (
             part_full.unionByName(base)
             .groupBy("id")
@@ -515,7 +501,7 @@ def _iterate(
             # to fp summation error — so when |s−1| ≤ 1e-9 the un-normalized
             # Σ|x'−x| from the SAME single action differs from the exact
             # value by ≤ Σ|x'|·|1/s−1| ≤ |1−s| ≤ 1e-9 ≪ ε: use it directly
-            # (ONE Spark job per superstep, the north_rule scaling path).
+            # (no second action per superstep, the north_rule scaling path).
             # Outside that regime (reference mode's L2-normalized v, or the
             # x0=1/√n first iteration) fall back to the exact cache-scan agg.
             if abs(s - 1.0) <= 1e-9:

@@ -32,9 +32,9 @@ Scale shape (the pagerank.py superstep discipline, composite-keyed):
   out-degree spine plus a groupBy(seed) — |seeds| output rows by
   construction (user-bounded, not graph-sized), rejoined on the seed
   spine before entering the scatter union;
-- one lazy localCheckpoint per superstep truncates lineage; AQE is
-  disabled inside the loop and restored in ``finally`` (same rationale
-  and measurement as pagerank.py).
+- one lazy localCheckpoint per superstep truncates lineage; the whole
+  call, seed spine and cone included, runs in ``session.engine_call``
+  (AQE off).
 
 Fixed-iteration mode only: PPR is consumed as a feature/candidate
 generator where a fixed k (walk length) is the contract; fixed k also
@@ -47,6 +47,19 @@ sparse support.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from pagerank_project_spark.session import engine_call
+
+
+def weighted_edges(edges: DataFrame) -> DataFrame:
+    """w = 1/outdeg(src) per edge (pagerank.py:50-61): one map-side-combined
+    groupBy on src joined back on src. PageRank folds the same normalizer
+    into its vertex map (``pagerank.build_graph``)."""
+    outdeg = edges.groupBy("src").agg(F.count("*").alias("_outdeg"))
+    return (
+        edges.join(outdeg, "src", "inner")
+        .select("src", "dst", (F.lit(1.0) / F.col("_outdeg")).alias("w"))
+    )
 
 
 def ppr_batch(
@@ -98,66 +111,54 @@ def ppr_batch(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    from pagerank_project_spark.operators.pagerank import BROADCAST_VERTEX_LIMIT, weighted_edges
-
-    ed = edges.select("src", "dst")
-    # the seed spine is materialized FIRST and is the ONLY evaluation of
-    # ``seeds``: the cone below derives from the persisted spine, so a
-    # nondeterministic seeds plan (e.g. df.sample) cannot diverge between
-    # the cone filter and the restart/dangling terms
-    spine = seeds.select(F.col("id").alias("seed")).distinct().persist()
-    spine.count()
-    if cone:
-        # (iterations-1)-hop out-cone of the seeds; keeping ALL out-edges
-        # of cone members preserves outdeg and danglingness exactly.
-        # Expansion joins only the NEW frontier each hop (already-visited
-        # vertices re-derive nothing); the cumulative cone only feeds the
-        # final semi filter.
-        frontier = (
-            spine.select(F.col("seed").alias("src"))
-            .repartition(nparts, "src")
-            .localCheckpoint(eager=False)
-        )
-        cone_v = frontier
-        for _ in range(iterations - 1):
-            nxt = (
-                ed.join(frontier.hint("shuffle_hash"), "src")
-                .select(F.col("dst").alias("src"))
-                .distinct()
-            )
-            frontier = nxt.join(
-                cone_v.hint("shuffle_hash"), "src", "left_anti"
-            ).localCheckpoint(eager=False)
-            if frontier.count() == 0:
-                break
-            cone_v = (
-                cone_v.unionByName(frontier)
+    with engine_call(spark):
+        ed = edges.select("src", "dst")
+        # the seed spine is materialized FIRST and is the ONLY evaluation of
+        # ``seeds``: the cone below derives from the persisted spine, so a
+        # nondeterministic seeds plan (e.g. df.sample) cannot diverge between
+        # the cone filter and the restart/dangling terms
+        spine = seeds.select(F.col("id").alias("seed")).distinct().persist()
+        spine.count()
+        if cone:
+            # (iterations-1)-hop out-cone of the seeds; keeping ALL out-edges
+            # of cone members preserves outdeg and danglingness exactly.
+            # Expansion joins only the NEW frontier each hop (already-visited
+            # vertices re-derive nothing); the cumulative cone only feeds the
+            # final semi filter.
+            frontier = (
+                spine.select(F.col("seed").alias("src"))
                 .repartition(nparts, "src")
                 .localCheckpoint(eager=False)
             )
-        ed = ed.join(cone_v.hint("shuffle_hash"), "src", "semi")
+            cone_v = frontier
+            for _ in range(iterations - 1):
+                nxt = (
+                    ed.join(frontier.hint("shuffle_hash"), "src")
+                    .select(F.col("dst").alias("src"))
+                    .distinct()
+                )
+                frontier = nxt.join(
+                    cone_v.hint("shuffle_hash"), "src", "left_anti"
+                ).localCheckpoint(eager=False)
+                if frontier.count() == 0:
+                    break
+                cone_v = (
+                    cone_v.unionByName(frontier)
+                    .repartition(nparts, "src")
+                    .localCheckpoint(eager=False)
+                )
+            ed = ed.join(cone_v.hint("shuffle_hash"), "src", "semi")
 
-    # reference 1/outdeg transition semantics via the shared builder;
-    # n_vertices is unknown here, so force the non-broadcast path (never
-    # auto-broadcast a graph-sized outdeg table)
-    w = (
-        weighted_edges(ed, n_vertices=BROADCAST_VERTEX_LIMIT + 1)
-        .repartition(nparts, "src")
-        .persist()
-    )
-    w.count()
-    # danglingness spine off the cached w (one distinct, reused every
-    # superstep — not a per-superstep groupBy over the raw edge table)
-    out_src = w.select("src").distinct().persist()
-    out_src.count()
+        w = weighted_edges(ed).repartition(nparts, "src").persist()
+        w.count()
+        # danglingness spine off the cached w (one distinct, reused every
+        # superstep — not a per-superstep groupBy over the raw edge table)
+        out_src = w.select("src").distinct().persist()
+        out_src.count()
 
-    state = spine.select("seed", F.col("seed").alias("id"), F.lit(1.0).alias("rank"))
-    state = state.repartition(nparts, "seed", "id").localCheckpoint(eager=False)
+        state = spine.select("seed", F.col("seed").alias("id"), F.lit(1.0).alias("rank"))
+        state = state.repartition(nparts, "seed", "id").localCheckpoint(eager=False)
 
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
         for _ in range(iterations):
             contrib = (
                 w.join(
@@ -182,16 +183,14 @@ def ppr_batch(
             if prune_below is not None:
                 state = state.filter(F.col("rank") >= prune_below)
             state = state.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-    # materialize the final (lazily checkpointed) state BEFORE evicting the
-    # caches it streams — unpersisting first would make every later action
-    # recompute the transition table per superstep
-    state.count()
-    w.unpersist()
-    spine.unpersist()
-    out_src.unpersist()
-    return state
+        # materialize the final (lazily checkpointed) state BEFORE evicting the
+        # caches it streams — unpersisting first would make every later action
+        # recompute the transition table per superstep
+        state.count()
+        w.unpersist()
+        spine.unpersist()
+        out_src.unpersist()
+        return state
 
 
 def ppr_topk(

@@ -38,7 +38,8 @@ Scale shape (house superstep discipline throughout):
   it geometrically on real graphs, the CC-star lineage pattern);
 - every propagation superstep is join(frontier/state, edges) with a
   ``shuffle_hash`` hint + ONE map-side-combined min/distinct aggregate,
-  AQE off inside loops, lazy localCheckpoint lineage truncation;
+  lazy localCheckpoint lineage truncation; the whole call, build
+  included, runs in ``session.engine_call`` (AQE off);
 - the trim degree check is two map-side-combined groupBys;
 - no driver-side iteration over components: roots, colors, and backward
   frontiers are all DataFrames.
@@ -70,6 +71,7 @@ from pagerank_project_spark.operators.vids import (
     relabel_min_id,
     string_sorted_vids,
 )
+from pagerank_project_spark.session import engine_call
 
 
 @dataclass
@@ -243,7 +245,6 @@ def strongly_connected_components(
     trim_passes: int = 3,
     max_propagation_iters: int | None = None,
     num_partitions: int | None = None,
-    verbose: bool = False,
     substeps_per_sync: int = 4,
     chain_contract: bool = False,
 ) -> SCCResult:
@@ -276,120 +277,314 @@ def strongly_connected_components(
     O(log max-chain) pointer-doubling supersteps once.
     """
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if vertices is not None:
-        # same contract as label_propagation/CC: a caller-supplied vertex
-        # table missing edge endpoints would silently drop those labels at
-        # the vmap decode join — refuse loudly instead
-        assert_endpoints_covered(edges, build_vertices(edges, vertices))
+    with engine_call(spark):
+        if vertices is not None:
+            # same contract as label_propagation/CC: a caller-supplied vertex
+            # table missing edge endpoints would silently drop those labels at
+            # the vmap decode join — refuse loudly instead
+            assert_endpoints_covered(edges, build_vertices(edges, vertices))
 
-    # LONG vids for the loop (module doc): hashed — a plain projection,
-    # rebuilt on demand at decode — or, on a collision, string-sorted
-    # ranks (persisted by string_sorted_vids, read again at decode)
-    enc = hash_encode(edges, vertices)
-    if enc is None:
-        vmap = string_sorted_vids(build_vertices(edges, vertices), "id", nparts)
-        enc = vmap, encode_pair(edges.select("src", "dst"), vmap).toDF("src", "dst")
-    vmap, enc_edges = enc
-    enc_verts = vmap.select(F.col("vid").alias("id"))
+        # LONG vids for the loop (module doc): hashed — a plain projection,
+        # rebuilt on demand at decode — or, on a collision, string-sorted
+        # ranks (persisted by string_sorted_vids, read again at decode)
+        enc = hash_encode(edges, vertices)
+        if enc is None:
+            vmap = string_sorted_vids(build_vertices(edges, vertices), "id", nparts)
+            enc = vmap, encode_pair(edges.select("src", "dst"), vmap).toDF("src", "dst")
+        vmap, enc_edges = enc
+        enc_verts = vmap.select(F.col("vid").alias("id"))
 
-    base = (
-        enc_edges.filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(nparts, "src")
-        .persist()
-    )
-    anchored = cycles = None
-    n_chain = 0
-    if chain_contract:
-        base.count()
-        contracted, anchored, cycles, n_chain = contract_degree1_chains(
-            spark, base, num_partitions=nparts
+        base = (
+            enc_edges.filter(F.col("src") != F.col("dst"))
+            .distinct()
+            .repartition(nparts, "src")
+            .persist()
         )
-        if verbose:
-            print(f"[scc] chain contraction removed {n_chain} deg-1/1 vertices", flush=True)
-    if n_chain:
-        # the loop runs on the contracted graph; chain vertices leave the
-        # vertex universe here and re-enter at the expansion step below
-        active0 = contracted.repartition(nparts, "src").persist()
-        active0.count()
-        base.unpersist()
-    else:
-        active0 = base
-    active = active0
-    n_active = active.count()
-    unassigned = enc_verts
-    if n_chain:
-        chain_ids = anchored.select("id").unionByName(cycles.select("id"))
-        unassigned = unassigned.join(chain_ids.hint("shuffle_hash"), "id", "left_anti")
-    unassigned = unassigned.repartition(nparts, "id").localCheckpoint(eager=False)
-    assigned_parts: list[DataFrame] = []
-    active_rev = None
-    # per-superstep iterate caches (stats-reset pattern, see coloring loop);
-    # swept at each round end and in the finally block — unpersist is
-    # idempotent so double entries are harmless
-    live_caches: list[DataFrame] = []
+        anchored = cycles = None
+        n_chain = 0
+        if chain_contract:
+            base.count()
+            contracted, anchored, cycles, n_chain = contract_degree1_chains(
+                spark, base, num_partitions=nparts
+            )
+        if n_chain:
+            # the loop runs on the contracted graph; chain vertices leave the
+            # vertex universe here and re-enter at the expansion step below
+            active0 = contracted.repartition(nparts, "src").persist()
+            active0.count()
+            base.unpersist()
+        else:
+            active0 = base
+        active = active0
+        n_active = active.count()
+        unassigned = enc_verts
+        if n_chain:
+            chain_ids = anchored.select("id").unionByName(cycles.select("id"))
+            unassigned = unassigned.join(chain_ids.hint("shuffle_hash"), "id", "left_anti")
+        unassigned = unassigned.repartition(nparts, "id").localCheckpoint(eager=False)
+        assigned_parts: list[DataFrame] = []
+        active_rev = None
+        # per-superstep iterate caches (stats-reset pattern, see coloring loop);
+        # swept at each round end and in the finally block — unpersist is
+        # idempotent so double entries are harmless
+        live_caches: list[DataFrame] = []
 
-    def _fold_assigned() -> None:
-        # keep the final union plan bounded: a deep input (high max_rounds,
-        # many trim passes) appends one part per pass/round, and a linear
-        # 80-branch unionByName chain pays quadratic analysis on the final
-        # plan — fold into ONE lazily-checkpointed part every few branches
-        # (localCheckpoint truncates the logical plan to a LogicalRDD
-        # immediately, even when eager=False)
-        if len(assigned_parts) >= 8:
-            folded = assigned_parts[0]
-            for p in assigned_parts[1:]:
-                folded = folded.unionByName(p)
-            assigned_parts.clear()
-            assigned_parts.append(folded.localCheckpoint(eager=False))
+        def _fold_assigned() -> None:
+            # keep the final union plan bounded: a deep input (high max_rounds,
+            # many trim passes) appends one part per pass/round, and a linear
+            # 80-branch unionByName chain pays quadratic analysis on the final
+            # plan — fold into ONE lazily-checkpointed part every few branches
+            # (localCheckpoint truncates the logical plan to a LogicalRDD
+            # immediately, even when eager=False)
+            if len(assigned_parts) >= 8:
+                folded = assigned_parts[0]
+                for p in assigned_parts[1:]:
+                    folded = folded.unionByName(p)
+                assigned_parts.clear()
+                assigned_parts.append(folded.localCheckpoint(eager=False))
 
-    import time as _time
+        import time as _time
 
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    rounds = 0
-    phase_secs = {"trim": 0.0, "coloring": 0.0, "backward": 0.0, "remove": 0.0}
-    coloring_supersteps = 0
-    bfs_supersteps = 0
-    try:
-        while n_active > 0:
-            rounds += 1
-            _t_ph = _time.time()
-            if rounds > max_rounds:
-                raise RuntimeError(
-                    f"SCC did not settle within {max_rounds} outer rounds "
-                    f"({n_active} active edges left); raise max_rounds"
-                )
+        rounds = 0
+        phase_secs = {"trim": 0.0, "coloring": 0.0, "backward": 0.0, "remove": 0.0}
+        coloring_supersteps = 0
+        bfs_supersteps = 0
+        try:
+            while n_active > 0:
+                rounds += 1
+                _t_ph = _time.time()
+                if rounds > max_rounds:
+                    raise RuntimeError(
+                        f"SCC did not settle within {max_rounds} outer rounds "
+                        f"({n_active} active edges left); raise max_rounds"
+                    )
 
-            # --- 1. trim: no-in or no-out vertices are singleton SCCs ----
-            for _ in range(trim_passes):
-                srcs = active.select(F.col("src").alias("id")).distinct()
-                dsts = active.select(F.col("dst").alias("id")).distinct()
-                both = srcs.join(dsts.hint("shuffle_hash"), "id")  # has in AND out
-                trimmed = (
-                    srcs.unionByName(dsts)
+                # --- 1. trim: no-in or no-out vertices are singleton SCCs ----
+                for _ in range(trim_passes):
+                    srcs = active.select(F.col("src").alias("id")).distinct()
+                    dsts = active.select(F.col("dst").alias("id")).distinct()
+                    both = srcs.join(dsts.hint("shuffle_hash"), "id")  # has in AND out
+                    trimmed = (
+                        srcs.unionByName(dsts)
+                        .distinct()
+                        .join(both.hint("shuffle_hash"), "id", "left_anti")
+                        .localCheckpoint(eager=False)
+                    )
+                    n_trim = trimmed.count()
+                    if n_trim == 0:
+                        break
+                    assigned_parts.append(trimmed.select("id", F.col("id").alias("scc")))
+                    _fold_assigned()
+                    unassigned = unassigned.join(
+                        trimmed.hint("shuffle_hash"), "id", "left_anti"
+                    ).localCheckpoint(eager=False)
+                    active = (
+                        active.join(
+                            trimmed.select(F.col("id").alias("src")).hint("shuffle_hash"),
+                            "src",
+                            "left_anti",
+                        )
+                        .join(
+                            trimmed.select(F.col("id").alias("dst")).hint("shuffle_hash"),
+                            "dst",
+                            "left_anti",
+                        )
+                        .repartition(nparts, "src")
+                        .localCheckpoint(eager=False)
+                    )
+                    n_active = active.count()
+                phase_secs["trim"] += _time.time() - _t_ph
+                if n_active == 0:
+                    break
+                _t_ph = _time.time()
+
+                # --- 2. forward coloring to fixpoint, POINTER-JUMPED ----------
+                # color(v) = min id that reaches v; endpoints of active edges
+                # only (vertices outside active are trim/isolated leftovers).
+                # Each superstep does BOTH the edge-push min AND a pointer
+                # jump color(v) ← min(color(v), color(color(v))) — valid
+                # because reachability composes through the pointer (color(v)
+                # reaches v, color(color(v)) reaches color(v)), monotone, and
+                # it collapses the fixpoint from O(reachability depth) to
+                # O(log depth) supersteps (the CC pointer-jumping lesson —
+                # a depth-10⁶ chain needs ~20 rounds, not 10⁶).
+                in_active = (
+                    active.select(F.col("src").alias("id"))
+                    .unionByName(active.select(F.col("dst").alias("id")))
                     .distinct()
-                    .join(both.hint("shuffle_hash"), "id", "left_anti")
+                )
+                color = in_active.select("id", F.col("id").alias("color"))
+                color = color.repartition(nparts, "id").localCheckpoint(eager=False)
+                prop_iters = 0
+                # Spark 4's Dataset.localCheckpoint carries the origin plan's
+                # ESTIMATED stats onto the LogicalRDD (rewriteStatsAndConstraints),
+                # and the size-only visitor multiplies child sizes at every join —
+                # so a checkpointed SELF-join chain SQUARES the carried sizeInBytes
+                # each superstep (bit-length doubles; measured 11→609 bits in 6
+                # steps). Past ~20 supersteps the driver burns minutes multiplying
+                # million-digit BigIntegers inside every stats/planning call. Fix:
+                # persist each iterate and let the (already-present) n_changed
+                # count materialize it BEFORE checkpointing — a materialized
+                # InMemoryRelation reports its REAL accumulated size, so the
+                # checkpoint carries small true stats and the chain stays flat.
+                # Zero extra jobs; the previous iterate's cache is dropped as soon
+                # as its checkpoint has materialized (the next count).
+                def _color_substep(cur: DataFrame) -> DataFrame:
+                    pushed = (
+                        active.join(
+                            cur.select(F.col("id").alias("src"), "color").hint("shuffle_hash"),
+                            "src",
+                        )
+                        .select(F.col("dst").alias("id"), "color")
+                    )
+                    stepped = (
+                        cur.unionByName(pushed)
+                        .groupBy("id")
+                        .agg(F.min("color").alias("color"))
+                        .localCheckpoint(eager=False)
+                    )
+                    # pointer jump: every color value IS an in_active id, so the
+                    # inner self-join is total on the jumped side
+                    jumped = (
+                        stepped.select("id", F.col("color").alias("_p"))
+                        .join(
+                            stepped.select(F.col("id").alias("_p"), F.col("color").alias("_pc")).hint("shuffle_hash"),
+                            "_p",
+                        )
+                        .select("id", F.least("_p", "_pc").alias("color"))
+                    )
+                    return jumped.groupBy("id").agg(F.min("color").alias("color"))
+
+                prev_cache = None
+                while True:
+                    batch = max(1, substeps_per_sync)
+                    if max_propagation_iters is not None:
+                        left = max_propagation_iters - prop_iters
+                        if left <= 0:
+                            raise RuntimeError(
+                                f"forward coloring exceeded the max_propagation_iters={max_propagation_iters} cost cap"
+                            )
+                        batch = min(batch, left)
+                    nxt = color
+                    for _ in range(batch):
+                        nxt = _color_substep(nxt)
+                    prop_iters += batch
+                    new_color = nxt.persist()
+                    n_changed = (
+                        new_color.join(
+                            color.withColumnRenamed("color", "_old").hint("shuffle_hash"), "id"
+                        )
+                        .filter(F.col("color") != F.col("_old"))
+                        .count()
+                    )
+                    color = new_color.localCheckpoint(eager=False)
+                    if prev_cache is not None:
+                        prev_cache.unpersist()
+                    prev_cache = new_color
+                    live_caches.append(new_color)
+                    if n_changed == 0:
+                        break
+                coloring_supersteps += prop_iters
+                phase_secs["coloring"] += _time.time() - _t_ph
+                _t_ph = _time.time()
+
+                # --- 3+4. backward phase, also pointer-jumped -----------------
+                # Within color class c (root r = c = min id of the class),
+                # v ∈ SCC(c) iff v reaches c over edges whose BOTH endpoints
+                # have color c. m(v) = min id reachable FROM v within the
+                # class satisfies m(v) ≥ c with equality iff v reaches c, so
+                # the old frontier BFS (O(SCC diameter) supersteps) becomes
+                # the same doubled min-propagation, pulled along forward edges
+                # (values flow dst→src) with the m(v) ← min(m(v), m(m(v)))
+                # jump — O(log diameter) supersteps.
+                ge = (
+                    active.join(
+                        color.select(F.col("id").alias("src"), F.col("color").alias("_sc")).hint("shuffle_hash"),
+                        "src",
+                    )
+                    .join(
+                        color.select(F.col("id").alias("dst"), F.col("color").alias("_dc")).hint("shuffle_hash"),
+                        "dst",
+                    )
+                    .filter(F.col("_sc") == F.col("_dc"))
+                    .select("src", "dst")
+                    .repartition(nparts, "dst")
+                    .persist()
+                )
+                active_rev = ge  # tracked for the finally-block unpersist
+                ge.count()
+                m = color.select("id", F.col("id").alias("m"))
+                m = m.repartition(nparts, "id").localCheckpoint(eager=False)
+                # same persist-before-checkpoint stats reset and sub-step
+                # batching as the coloring loop (the m(m(v)) jump is a
+                # self-join too, and the fixpoint is depth-bound the same way)
+                def _m_substep(cur: DataFrame) -> DataFrame:
+                    pulled = (
+                        ge.join(
+                            cur.select(F.col("id").alias("dst"), "m").hint("shuffle_hash"), "dst"
+                        )
+                        .select(F.col("src").alias("id"), "m")
+                    )
+                    stepped = (
+                        cur.unionByName(pulled)
+                        .groupBy("id")
+                        .agg(F.min("m").alias("m"))
+                        .localCheckpoint(eager=False)
+                    )
+                    jumped = (
+                        stepped.select("id", F.col("m").alias("_p"))
+                        .join(
+                            stepped.select(F.col("id").alias("_p"), F.col("m").alias("_pm")).hint("shuffle_hash"),
+                            "_p",
+                        )
+                        .select("id", F.least("_p", "_pm").alias("m"))
+                    )
+                    return jumped.groupBy("id").agg(F.min("m").alias("m"))
+
+                prev_cache = None
+                while True:
+                    batch = max(1, substeps_per_sync)
+                    nxt = m
+                    for _ in range(batch):
+                        nxt = _m_substep(nxt)
+                    bfs_supersteps += batch
+                    new_m = nxt.persist()
+                    n_changed = (
+                        new_m.join(m.withColumnRenamed("m", "_old").hint("shuffle_hash"), "id")
+                        .filter(F.col("m") != F.col("_old"))
+                        .count()
+                    )
+                    m = new_m.localCheckpoint(eager=False)
+                    if prev_cache is not None:
+                        prev_cache.unpersist()
+                    prev_cache = new_m
+                    live_caches.append(new_m)
+                    if n_changed == 0:
+                        break
+                settled = (
+                    m.join(color.hint("shuffle_hash"), "id")
+                    .filter(F.col("m") == F.col("color"))
+                    .select("id", "color")
                     .localCheckpoint(eager=False)
                 )
-                n_trim = trimmed.count()
-                if verbose:
-                    print(f"[scc] round {rounds} trim pass: trimmed={n_trim}", flush=True)
-                if n_trim == 0:
-                    break
-                assigned_parts.append(trimmed.select("id", F.col("id").alias("scc")))
+                ge.unpersist()
+                active_rev = None
+                phase_secs["backward"] += _time.time() - _t_ph
+                _t_ph = _time.time()
+
+                assigned_parts.append(settled.select("id", F.col("color").alias("scc")))
                 _fold_assigned()
                 unassigned = unassigned.join(
-                    trimmed.hint("shuffle_hash"), "id", "left_anti"
+                    settled.select("id").hint("shuffle_hash"), "id", "left_anti"
                 ).localCheckpoint(eager=False)
                 active = (
                     active.join(
-                        trimmed.select(F.col("id").alias("src")).hint("shuffle_hash"),
+                        settled.select(F.col("id").alias("src")).hint("shuffle_hash"),
                         "src",
                         "left_anti",
                     )
                     .join(
-                        trimmed.select(F.col("id").alias("dst")).hint("shuffle_hash"),
+                        settled.select(F.col("id").alias("dst")).hint("shuffle_hash"),
                         "dst",
                         "left_anti",
                     )
@@ -397,269 +592,59 @@ def strongly_connected_components(
                     .localCheckpoint(eager=False)
                 )
                 n_active = active.count()
-            phase_secs["trim"] += _time.time() - _t_ph
-            if n_active == 0:
-                break
-            _t_ph = _time.time()
-
-            # --- 2. forward coloring to fixpoint, POINTER-JUMPED ----------
-            # color(v) = min id that reaches v; endpoints of active edges
-            # only (vertices outside active are trim/isolated leftovers).
-            # Each superstep does BOTH the edge-push min AND a pointer
-            # jump color(v) ← min(color(v), color(color(v))) — valid
-            # because reachability composes through the pointer (color(v)
-            # reaches v, color(color(v)) reaches color(v)), monotone, and
-            # it collapses the fixpoint from O(reachability depth) to
-            # O(log depth) supersteps (the CC pointer-jumping lesson —
-            # a depth-10⁶ chain needs ~20 rounds, not 10⁶).
-            in_active = (
-                active.select(F.col("src").alias("id"))
-                .unionByName(active.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            color = in_active.select("id", F.col("id").alias("color"))
-            color = color.repartition(nparts, "id").localCheckpoint(eager=False)
-            prop_iters = 0
-            # Spark 4's Dataset.localCheckpoint carries the origin plan's
-            # ESTIMATED stats onto the LogicalRDD (rewriteStatsAndConstraints),
-            # and the size-only visitor multiplies child sizes at every join —
-            # so a checkpointed SELF-join chain SQUARES the carried sizeInBytes
-            # each superstep (bit-length doubles; measured 11→609 bits in 6
-            # steps). Past ~20 supersteps the driver burns minutes multiplying
-            # million-digit BigIntegers inside every stats/planning call. Fix:
-            # persist each iterate and let the (already-present) n_changed
-            # count materialize it BEFORE checkpointing — a materialized
-            # InMemoryRelation reports its REAL accumulated size, so the
-            # checkpoint carries small true stats and the chain stays flat.
-            # Zero extra jobs; the previous iterate's cache is dropped as soon
-            # as its checkpoint has materialized (the next count).
-            def _color_substep(cur: DataFrame) -> DataFrame:
-                pushed = (
-                    active.join(
-                        cur.select(F.col("id").alias("src"), "color").hint("shuffle_hash"),
-                        "src",
-                    )
-                    .select(F.col("dst").alias("id"), "color")
-                )
-                stepped = (
-                    cur.unionByName(pushed)
-                    .groupBy("id")
-                    .agg(F.min("color").alias("color"))
-                    .localCheckpoint(eager=False)
-                )
-                # pointer jump: every color value IS an in_active id, so the
-                # inner self-join is total on the jumped side
-                jumped = (
-                    stepped.select("id", F.col("color").alias("_p"))
-                    .join(
-                        stepped.select(F.col("id").alias("_p"), F.col("color").alias("_pc")).hint("shuffle_hash"),
-                        "_p",
-                    )
-                    .select("id", F.least("_p", "_pc").alias("color"))
-                )
-                return jumped.groupBy("id").agg(F.min("color").alias("color"))
-
-            prev_cache = None
-            while True:
-                batch = max(1, substeps_per_sync)
-                if max_propagation_iters is not None:
-                    left = max_propagation_iters - prop_iters
-                    if left <= 0:
-                        raise RuntimeError(
-                            f"forward coloring exceeded the max_propagation_iters={max_propagation_iters} cost cap"
-                        )
-                    batch = min(batch, left)
-                nxt = color
-                for _ in range(batch):
-                    nxt = _color_substep(nxt)
-                prop_iters += batch
-                new_color = nxt.persist()
-                n_changed = (
-                    new_color.join(
-                        color.withColumnRenamed("color", "_old").hint("shuffle_hash"), "id"
-                    )
-                    .filter(F.col("color") != F.col("_old"))
-                    .count()
-                )
-                color = new_color.localCheckpoint(eager=False)
-                if prev_cache is not None:
-                    prev_cache.unpersist()
-                prev_cache = new_color
-                live_caches.append(new_color)
-                if verbose and prop_iters % 20 < batch:
-                    print(f"[scc] round {rounds} coloring sub-step {prop_iters}: "
-                          f"changed_in_batch={n_changed}", flush=True)
-                if n_changed == 0:
-                    break
-            coloring_supersteps += prop_iters
-            phase_secs["coloring"] += _time.time() - _t_ph
-            _t_ph = _time.time()
-
-            # --- 3+4. backward phase, also pointer-jumped -----------------
-            # Within color class c (root r = c = min id of the class),
-            # v ∈ SCC(c) iff v reaches c over edges whose BOTH endpoints
-            # have color c. m(v) = min id reachable FROM v within the
-            # class satisfies m(v) ≥ c with equality iff v reaches c, so
-            # the old frontier BFS (O(SCC diameter) supersteps) becomes
-            # the same doubled min-propagation, pulled along forward edges
-            # (values flow dst→src) with the m(v) ← min(m(v), m(m(v)))
-            # jump — O(log diameter) supersteps.
-            ge = (
-                active.join(
-                    color.select(F.col("id").alias("src"), F.col("color").alias("_sc")).hint("shuffle_hash"),
-                    "src",
-                )
-                .join(
-                    color.select(F.col("id").alias("dst"), F.col("color").alias("_dc")).hint("shuffle_hash"),
-                    "dst",
-                )
-                .filter(F.col("_sc") == F.col("_dc"))
-                .select("src", "dst")
-                .repartition(nparts, "dst")
-                .persist()
-            )
-            active_rev = ge  # tracked for the finally-block unpersist
-            ge.count()
-            m = color.select("id", F.col("id").alias("m"))
-            m = m.repartition(nparts, "id").localCheckpoint(eager=False)
-            # same persist-before-checkpoint stats reset and sub-step
-            # batching as the coloring loop (the m(m(v)) jump is a
-            # self-join too, and the fixpoint is depth-bound the same way)
-            def _m_substep(cur: DataFrame) -> DataFrame:
-                pulled = (
-                    ge.join(
-                        cur.select(F.col("id").alias("dst"), "m").hint("shuffle_hash"), "dst"
-                    )
-                    .select(F.col("src").alias("id"), "m")
-                )
-                stepped = (
-                    cur.unionByName(pulled)
-                    .groupBy("id")
-                    .agg(F.min("m").alias("m"))
-                    .localCheckpoint(eager=False)
-                )
-                jumped = (
-                    stepped.select("id", F.col("m").alias("_p"))
-                    .join(
-                        stepped.select(F.col("id").alias("_p"), F.col("m").alias("_pm")).hint("shuffle_hash"),
-                        "_p",
-                    )
-                    .select("id", F.least("_p", "_pm").alias("m"))
-                )
-                return jumped.groupBy("id").agg(F.min("m").alias("m"))
-
-            prev_cache = None
-            while True:
-                batch = max(1, substeps_per_sync)
-                nxt = m
-                for _ in range(batch):
-                    nxt = _m_substep(nxt)
-                bfs_supersteps += batch
-                new_m = nxt.persist()
-                n_changed = (
-                    new_m.join(m.withColumnRenamed("m", "_old").hint("shuffle_hash"), "id")
-                    .filter(F.col("m") != F.col("_old"))
-                    .count()
-                )
-                m = new_m.localCheckpoint(eager=False)
-                if prev_cache is not None:
-                    prev_cache.unpersist()
-                prev_cache = new_m
-                live_caches.append(new_m)
-                if n_changed == 0:
-                    break
-            settled = (
-                m.join(color.hint("shuffle_hash"), "id")
-                .filter(F.col("m") == F.col("color"))
-                .select("id", "color")
-                .localCheckpoint(eager=False)
-            )
-            ge.unpersist()
-            active_rev = None
-            phase_secs["backward"] += _time.time() - _t_ph
-            _t_ph = _time.time()
-
-            assigned_parts.append(settled.select("id", F.col("color").alias("scc")))
-            _fold_assigned()
-            unassigned = unassigned.join(
-                settled.select("id").hint("shuffle_hash"), "id", "left_anti"
-            ).localCheckpoint(eager=False)
-            active = (
-                active.join(
-                    settled.select(F.col("id").alias("src")).hint("shuffle_hash"),
-                    "src",
-                    "left_anti",
-                )
-                .join(
-                    settled.select(F.col("id").alias("dst")).hint("shuffle_hash"),
-                    "dst",
-                    "left_anti",
-                )
-                .repartition(nparts, "src")
-                .localCheckpoint(eager=False)
-            )
-            n_active = active.count()
-            # the count above materialized every checkpoint that read this
-            # round's iterate caches — drop the leftovers (the last iterate
-            # of each fixpoint loop; earlier ones were dropped in-loop)
+                # the count above materialized every checkpoint that read this
+                # round's iterate caches — drop the leftovers (the last iterate
+                # of each fixpoint loop; earlier ones were dropped in-loop)
+                for c in live_caches:
+                    c.unpersist()
+                live_caches.clear()
+                phase_secs["remove"] += _time.time() - _t_ph
+        finally:
+            active0.unpersist()
+            if active_rev is not None:
+                active_rev.unpersist()
             for c in live_caches:
                 c.unpersist()
             live_caches.clear()
-            phase_secs["remove"] += _time.time() - _t_ph
-            if verbose:
-                print(
-                    f"[scc] round {rounds}: active={n_active} "
-                    f"coloring_ss={coloring_supersteps} bfs_ss={bfs_supersteps} "
-                    f"phases={ {k: round(v, 1) for k, v in phase_secs.items()} }",
-                    flush=True,
-                )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        active0.unpersist()
-        if active_rev is not None:
-            active_rev.unpersist()
-        for c in live_caches:
-            c.unpersist()
-        live_caches.clear()
 
-    # leftovers (isolated all along, or stranded by removals) are singletons
-    labels = unassigned.select("id", F.col("id").alias("scc"))
-    for part in assigned_parts:
-        labels = labels.unionByName(part)
-    if n_chain:
-        # re-expand the contracted chains: a chain vertex joins SCC(entry)
-        # iff scc(entry) == scc(exit) — the contracted (entry, exit) edge
-        # makes entry⇝exit free, so label equality ⟺ exit⇝entry ⟺ the
-        # whole chain lies on a cycle through both anchors — else it is a
-        # singleton; pure-cycle members arrive pre-labelled min-cycle-id
-        exp = (
-            anchored.join(
-                labels.select(F.col("id").alias("entry"), F.col("scc").alias("_su")).hint("shuffle_hash"),
-                "entry",
+        # leftovers (isolated all along, or stranded by removals) are singletons
+        labels = unassigned.select("id", F.col("id").alias("scc"))
+        for part in assigned_parts:
+            labels = labels.unionByName(part)
+        if n_chain:
+            # re-expand the contracted chains: a chain vertex joins SCC(entry)
+            # iff scc(entry) == scc(exit) — the contracted (entry, exit) edge
+            # makes entry⇝exit free, so label equality ⟺ exit⇝entry ⟺ the
+            # whole chain lies on a cycle through both anchors — else it is a
+            # singleton; pure-cycle members arrive pre-labelled min-cycle-id
+            exp = (
+                anchored.join(
+                    labels.select(F.col("id").alias("entry"), F.col("scc").alias("_su")).hint("shuffle_hash"),
+                    "entry",
+                )
+                .join(
+                    labels.select(F.col("id").alias("exit"), F.col("scc").alias("_sw")).hint("shuffle_hash"),
+                    "exit",
+                )
+                .select(
+                    "id",
+                    F.when(F.col("_su") == F.col("_sw"), F.col("_su"))
+                    .otherwise(F.col("id"))
+                    .alias("scc"),
+                )
             )
-            .join(
-                labels.select(F.col("id").alias("exit"), F.col("scc").alias("_sw")).hint("shuffle_hash"),
-                "exit",
-            )
-            .select(
-                "id",
-                F.when(F.col("_su") == F.col("_sw"), F.col("_su"))
-                .otherwise(F.col("id"))
-                .alias("scc"),
-            )
+            labels = labels.unionByName(exp).unionByName(cycles)
+        # one-time decode: min-vid group labels → min-STRING member id (a
+        # chain member can also undercut its group's root), restoring the
+        # documented contract
+        dec = labels.toDF("vid", "lbl").join(vmap.hint("shuffle_hash"), "vid").select("id", "lbl")
+        return SCCResult(
+            labels=relabel_min_id(dec, "scc"),
+            rounds=rounds,
+            phase_secs={k: round(v, 3) for k, v in phase_secs.items()},
+            coloring_supersteps=coloring_supersteps,
+            bfs_supersteps=bfs_supersteps,
         )
-        labels = labels.unionByName(exp).unionByName(cycles)
-    # one-time decode: min-vid group labels → min-STRING member id (a
-    # chain member can also undercut its group's root), restoring the
-    # documented contract
-    dec = labels.toDF("vid", "lbl").join(vmap.hint("shuffle_hash"), "vid").select("id", "lbl")
-    return SCCResult(
-        labels=relabel_min_id(dec, "scc"),
-        rounds=rounds,
-        phase_secs={k: round(v, 3) for k, v in phase_secs.items()},
-        coloring_supersteps=coloring_supersteps,
-        bfs_supersteps=bfs_supersteps,
-    )
 
 
 def condensation(edges: DataFrame, labels: DataFrame) -> DataFrame:
@@ -704,65 +689,63 @@ def dag_levels(
 
     Scale shape: the edge set is hash-partitioned on src once and
     persisted; each superstep is one shuffle_hash join + one map-side-
-    combined max; lazy localCheckpoint truncation; AQE off in the loop.
+    combined max; lazy localCheckpoint truncation; the whole call runs
+    in ``session.engine_call`` (AQE off).
     """
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ed = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(nparts, "src")
-        .persist()
-    )
-    ed.count()
-    # edge endpoints are ALWAYS levelled; ``vertices`` only ADDS isolated
-    # nodes (a vertices arg missing endpoints must not silently truncate
-    # relaxation — the grown test could then converge early and wrongly)
-    nodes = ed.select(F.col("src").alias("id")).unionByName(
-        ed.select(F.col("dst").alias("id"))
-    )
-    if vertices is not None:
-        nodes = nodes.unionByName(vertices.select("id"))
-    level = nodes.distinct().withColumn("level", F.lit(0))
-    level = level.repartition(nparts, "id").localCheckpoint(eager=False)
-
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        it = 0
-        while True:
-            it += 1
-            pushed = (
-                ed.join(
-                    level.select(F.col("id").alias("src"), "level").hint("shuffle_hash"),
-                    "src",
+    with engine_call(spark):
+        ed = (
+            edges.select("src", "dst")
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+            .repartition(nparts, "src")
+            .persist()
+        )
+        ed.count()
+        # edge endpoints are ALWAYS levelled; ``vertices`` only ADDS isolated
+        # nodes (a vertices arg missing endpoints must not silently truncate
+        # relaxation — the grown test could then converge early and wrongly)
+        nodes = ed.select(F.col("src").alias("id")).unionByName(
+            ed.select(F.col("dst").alias("id"))
+        )
+        if vertices is not None:
+            nodes = nodes.unionByName(vertices.select("id"))
+        level = nodes.distinct().withColumn("level", F.lit(0))
+        level = level.repartition(nparts, "id").localCheckpoint(eager=False)
+        try:
+            it = 0
+            while True:
+                it += 1
+                pushed = (
+                    ed.join(
+                        level.select(F.col("id").alias("src"), "level").hint("shuffle_hash"),
+                        "src",
+                    )
+                    .select(F.col("dst").alias("id"), (F.col("level") + 1).alias("level"))
                 )
-                .select(F.col("dst").alias("id"), (F.col("level") + 1).alias("level"))
-            )
-            new_level = (
-                level.unionByName(pushed)
-                .groupBy("id")
-                .agg(F.max("level").alias("level"))
-                .localCheckpoint(eager=False)
-            )
-            grown = (
-                new_level.join(
-                    level.withColumnRenamed("level", "_old").hint("shuffle_hash"), "id"
+                new_level = (
+                    level.unionByName(pushed)
+                    .groupBy("id")
+                    .agg(F.max("level").alias("level"))
+                    .localCheckpoint(eager=False)
                 )
-                .filter(F.col("level") > F.col("_old"))
-                .count()
-            )
-            level = new_level
-            if grown == 0:
-                break
-            # a depth-D DAG grows on supersteps 1..D and confirms on D+1,
-            # so the budget bounds GROWTH supersteps, not the confirm pass
-            if it > max_iterations:
-                raise RuntimeError(
-                    f"dag_levels still relaxing after {max_iterations} supersteps — "
-                    "the input graph has a cycle (or raise max_iterations)"
+                grown = (
+                    new_level.join(
+                        level.withColumnRenamed("level", "_old").hint("shuffle_hash"), "id"
+                    )
+                    .filter(F.col("level") > F.col("_old"))
+                    .count()
                 )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        ed.unpersist()
+                level = new_level
+                if grown == 0:
+                    break
+                # a depth-D DAG grows on supersteps 1..D and confirms on D+1,
+                # so the budget bounds GROWTH supersteps, not the confirm pass
+                if it > max_iterations:
+                    raise RuntimeError(
+                        f"dag_levels still relaxing after {max_iterations} supersteps — "
+                        "the input graph has a cycle (or raise max_iterations)"
+                    )
+        finally:
+            ed.unpersist()
     return level

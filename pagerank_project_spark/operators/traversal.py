@@ -13,8 +13,8 @@ Scale design (superstep discipline shared with pagerank/labelprop):
   an explicit ``shuffle_hash`` hint — the cache streams, only the state
   shuffles, no per-superstep sort of the edge side;
 - one action per superstep (the frontier/walk count doubles as the
-  termination test), lazy localCheckpoint truncates lineage, AQE is
-  disabled inside the loop and restored in ``finally``;
+  termination test), lazy localCheckpoint truncates lineage, and the
+  whole call runs in ``session.engine_call`` (AQE off);
 - BFS shuffles the SETTLED set only through the left_anti dedup join
   (build side hinted), so per-round cost is O(|frontier expansion| +
   |settled|) — the textbook frontier algorithm, not |V| full relaxation;
@@ -28,6 +28,8 @@ Scale design (superstep discipline shared with pagerank/labelprop):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from pagerank_project_spark.session import engine_call
 
 
 def bfs_distances(
@@ -45,20 +47,18 @@ def bfs_distances(
     seed validity; distances to them are still correct).
     """
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ed = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(nparts, "src")
-        .persist()
-    )
-    ed.count()
-    settled = seeds.select("id").distinct().withColumn("dist", F.lit(0))
-    settled = settled.repartition(nparts, "id").localCheckpoint(eager=False)
-    frontier = settled
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with engine_call(spark):
+        ed = (
+            edges.select("src", "dst")
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+            .repartition(nparts, "src")
+            .persist()
+        )
+        ed.count()
+        settled = seeds.select("id").distinct().withColumn("dist", F.lit(0))
+        settled = settled.repartition(nparts, "id").localCheckpoint(eager=False)
+        frontier = settled
         for k in range(1, max_iterations + 1):
             nxt = (
                 ed.join(
@@ -75,8 +75,6 @@ def bfs_distances(
             if frontier.count() == 0:
                 break
             settled = settled.unionByName(frontier).localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
     ed.unpersist()
     return settled
 
@@ -111,29 +109,27 @@ def random_walks(
     → (walk_id, step, id): step 0 is the start vertex.
     """
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ed = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(nparts, "src")
-        .persist()
-    )
-    ed.count()
-    base = starts.select("id").distinct()
-    if num_walks > 1:
-        base = base.select(
-            "id", F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("_i")
-        ).select(
-            F.concat_ws("#", F.col("id"), F.col("_i")).alias("walk_id"),
-            F.col("id").alias("cur"),
+    with engine_call(spark):
+        ed = (
+            edges.select("src", "dst")
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+            .repartition(nparts, "src")
+            .persist()
         )
-    else:
-        base = base.select(F.col("id").alias("walk_id"), F.col("id").alias("cur"))
-    cur = base.repartition(nparts, "walk_id").localCheckpoint(eager=False)
-    snapshots = [cur.select("walk_id", F.lit(0).alias("step"), F.col("cur").alias("id"))]
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+        ed.count()
+        base = starts.select("id").distinct()
+        if num_walks > 1:
+            base = base.select(
+                "id", F.explode(F.sequence(F.lit(0), F.lit(num_walks - 1))).alias("_i")
+            ).select(
+                F.concat_ws("#", F.col("id"), F.col("_i")).alias("walk_id"),
+                F.col("id").alias("cur"),
+            )
+        else:
+            base = base.select(F.col("id").alias("walk_id"), F.col("id").alias("cur"))
+        cur = base.repartition(nparts, "walk_id").localCheckpoint(eager=False)
+        snapshots = [cur.select("walk_id", F.lit(0).alias("step"), F.col("cur").alias("id"))]
         for t in range(1, steps + 1):
             cand = ed.join(
                 cur.select("walk_id", F.col("cur").alias("src")).hint("shuffle_hash"), "src"
@@ -155,8 +151,6 @@ def random_walks(
             snapshots.append(
                 cur.select("walk_id", F.lit(t).alias("step"), F.col("cur").alias("id"))
             )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
     out = snapshots[0]
     for s in snapshots[1:]:
         out = out.unionByName(s)

@@ -7,11 +7,15 @@ a stable partitioning across iterations (SURVEY.md §4: AQE coalescing must
 not drift the co-partitioning of edges and ranks between iterations — we
 pin `spark.sql.shuffle.partitions` and rely on persisted repartitioned
 DataFrames whose InMemoryRelation preserves outputPartitioning).
+
+``engine_call`` is the one execution policy of every iterative operator:
+each public operator runs its whole call, build included, inside it.
 """
 
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -68,3 +72,36 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# The conf of one operator call; ``engine_call`` restores the caller's values.
+# Spark 4.1's union output partitioning goes off with AQE: without AQE's
+# re-planning, Spark 4.1.2 failed to plan ppr_batch's cone-filtered weight
+# build over the extracted code graph, a union of edge kinds
+# ("PartitioningCollection requires all of its partitionings have the same
+# numPartitions"). Off, a union reports no output partitioning, as in 4.0.
+_CALL_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.unionOutputPartitioning": "false",
+}
+
+
+@contextmanager
+def engine_call(spark: SparkSession):
+    """Run one operator call with AQE off. The caller's settings are
+    restored on exit, also when the call raises; a nested call restores
+    the values its enclosing call set.
+
+    AQE's per-stage re-planning costs ~30% per PageRank superstep (measured
+    at sf1) and makes every shuffle of a build its own Spark job, and it
+    buys nothing in a call whose plan shapes and partitioning are fixed.
+    Cost at scale: AQE's skew-join no longer splits a hub partition of the
+    build's encode joins."""
+    before = {k: spark.conf.get(k) for k in _CALL_CONF}
+    for k, v in _CALL_CONF.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)

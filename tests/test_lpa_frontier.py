@@ -7,7 +7,6 @@ import random
 import pandas as pd
 import pytest
 
-from pagerank_project_spark.operators import labelprop as lp_mod
 from pagerank_project_spark.operators.labelprop import label_propagation
 
 
@@ -56,9 +55,7 @@ def test_frontier_bitwise_equal_random_graphs(spark):
         edges = spark.createDataFrame(_random_edges(seed, 40, 120), "src string, dst string")
         for k in (3, 6):
             full = label_propagation(spark, edges, iterations=k)
-            fr = label_propagation(
-                spark, edges, iterations=k, frontier=True, frontier_threshold=1.0
-            )
+            fr = label_propagation(spark, edges, iterations=k, frontier=True)
             assert _labels(fr) == _labels(full)
 
 
@@ -73,9 +70,7 @@ def test_frontier_bitwise_equal_hub_and_isolated(spark):
         [(v,) for v in {x for p in edges for x in p} | {"lonely"}], "id string"
     )
     full = label_propagation(spark, e, vertices=verts, iterations=5)
-    fr = label_propagation(
-        spark, e, vertices=verts, iterations=5, frontier=True, frontier_threshold=1.0
-    )
+    fr = label_propagation(spark, e, vertices=verts, iterations=5, frontier=True)
     assert _labels(fr) == _labels(full)
     assert ("lonely", "lonely") in _labels(fr)
 
@@ -86,7 +81,7 @@ def test_frontier_early_stop_matches_full_run(spark):
     edges = [("a", "b"), ("b", "c"), ("c", "a"), ("x", "y"), ("y", "z"), ("z", "x")]
     e = spark.createDataFrame(edges, "src string, dst string")
     full = label_propagation(spark, e, iterations=10)
-    fr = label_propagation(spark, e, iterations=10, frontier=True, frontier_threshold=1.0)
+    fr = label_propagation(spark, e, iterations=10, frontier=True)
     assert _labels(fr) == _labels(full)
     assert fr.iterations < 10
     assert fr.frontier_sizes is not None and fr.frontier_sizes[-1] == 0
@@ -94,36 +89,24 @@ def test_frontier_early_stop_matches_full_run(spark):
 
 def test_frontier_sizes_shrink_to_zero(spark):
     edges = spark.createDataFrame(_random_edges(7, 30, 80), "src string, dst string")
-    fr = label_propagation(spark, edges, iterations=12, frontier=True, frontier_threshold=1.0)
+    fr = label_propagation(spark, edges, iterations=12, frontier=True)
     sizes = fr.frontier_sizes
     assert sizes is not None and len(sizes) >= 1
     # either it hit the fixpoint (last size 0) or ran all 12 (oscillation)
     assert sizes[-1] == 0 or len(sizes) == 12
 
 
-def test_frontier_threshold_zero_never_filters(spark):
-    """threshold 0 keeps every superstep on the full path — result and
-    iteration count identical to the default."""
-    edges = spark.createDataFrame(_random_edges(3, 25, 70), "src string, dst string")
-    full = label_propagation(spark, edges, iterations=4)
-    fr = label_propagation(spark, edges, iterations=4, frontier=True, frontier_threshold=0.0)
-    assert _labels(fr) == _labels(full)
-
-
-@pytest.mark.parametrize("limit", [0, 3])
-def test_frontier_broadcast_limit_fallback_matches_oracle(spark, monkeypatch, limit):
-    """FRONTIER_BROADCAST_LIMIT gates the filtered gather twice: on the
-    changed count (0 keeps every superstep on the full gather) and on the
-    touched set (3: this graph's changed sets shrink to 3 and 2 in
-    supersteps 6-7, and their neighborhoods are too big to broadcast, so
-    the full gather runs instead). Both fallbacks must give the
-    non-frontier labels and the DuckDB oracle's."""
+@pytest.mark.parametrize("k", [4, 8])
+def test_frontier_early_stop_matches_oracle(spark, k):
+    """On this graph the changed sets shrink to 3 and 2 in supersteps 6-7:
+    frontier mode's changed-count and early stop must give the
+    non-frontier labels and the DuckDB oracle's, before (k=4) and after
+    (k=8) the sets shrink."""
     rows = _random_edges(7, 30, 80)
     edges = spark.createDataFrame(rows, "src string, dst string")
-    full = label_propagation(spark, edges, iterations=8)
-    monkeypatch.setattr(lp_mod, "FRONTIER_BROADCAST_LIMIT", limit)
-    fr = label_propagation(spark, edges, iterations=8, frontier=True, frontier_threshold=1.0)
-    assert _labels(fr) == _labels(full) == _duckdb_lpa(rows, 8)
+    full = label_propagation(spark, edges, iterations=k)
+    fr = label_propagation(spark, edges, iterations=k, frontier=True)
+    assert _labels(fr) == _labels(full) == _duckdb_lpa(rows, k)
 
 
 def test_cli_ppr_sample_and_frontier(capsys, small_csv):

@@ -1,6 +1,6 @@
 """Round-5 regression tests: ADVICE items (SCC endpoint coverage,
-neighbor-sample string-id contract, LPA frontier default) + the SCC
-assigned-parts union fold + md5-deterministic LSH/ANN reformulations."""
+neighbor-sample string-id contract) + the SCC assigned-parts union fold +
+md5-deterministic LSH/ANN reformulations."""
 
 from __future__ import annotations
 
@@ -46,17 +46,6 @@ def test_sample_adjacency_rejects_non_string_ids(spark):
     e = spark.createDataFrame([(1, 2), (1, 3)], "src long, dst long")
     with pytest.raises(TypeError, match="string"):
         sample_adjacency(e, k=1)
-
-
-def test_lpa_frontier_default_threshold_is_early_stop_only():
-    """ADVICE r4 (low): frontier=True must default to the provably-identity
-    early stop ONLY (threshold 0.0) — the filtered gather measured 7-9x
-    slower in the sync-LPA churn regime an 0.05 default would engage."""
-    import inspect
-
-    from pagerank_project_spark.operators.labelprop import label_propagation
-
-    assert inspect.signature(label_propagation).parameters["frontier_threshold"].default == 0.0
 
 
 def test_minhash_signature_matches_duckdb(spark):

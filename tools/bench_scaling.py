@@ -614,9 +614,8 @@ changed-neighbor gather (broadcast semi-join filter over the cache,
 untouched vertices carry labels) was built, pinned bitwise-equal, and
 A/B'd at sf1/12 supersteps: with sync-LPA churn stalled at ~2% the
 filtered path ran 7-9 s/superstep vs 1.1 s full — two cache streams
-plus the state carry outweigh the skipped gather — so it ships default
-OFF, scoped to run-to-convergence jobs where its provably-identity
-fixpoint EARLY STOP (not the filter) is the win.
+plus the state carry outweigh the skipped gather — so it was removed;
+frontier=True keeps only the provably-identity fixpoint EARLY STOP.
 
 PREPARED UNDIRECTED LPA (round 5 — rows lpa_prepared64_* /
 lpa_prepared_* / lpa_prepared_slots_* in scaling.json; 12 supersteps,

@@ -7,9 +7,11 @@ Usage: python tools/explain_plans.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import Window, functions as F  # noqa: E402
 
@@ -18,13 +20,10 @@ def fmt(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-def main() -> None:
+def capture(spark) -> list[tuple[str, str, str]]:
+    """(title, what to verify, formatted plan) for each hot path."""
     from pagerank_project_spark.datagen import ensure_fixture
-    from pagerank_project_spark.session import get_spark
 
-    spark = get_spark(app_name="plans", cores=8, shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sections: list[tuple[str, str, str]] = []
 
     # --- 1. PageRank superstep, shuffle regime (|V| > broadcast limit) -----
@@ -417,8 +416,17 @@ exists anywhere in the plan.""",
   above the limit).""",
         fmt(lp_winner),
     ))
+    return sections
 
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+
+def main() -> None:
+    from pagerank_project_spark.session import engine_call, get_spark
+
+    spark = get_spark(app_name="plans", cores=8, shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    with engine_call(spark):  # the operators' call context
+        sections = capture(spark)
+    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as f:
         f.write(
             "# Physical plans of the hot paths (generated by tools/explain_plans.py)\n\n"
             "Captured on local[8], AQE off (loop configuration). Regenerate after\n"
