@@ -12,9 +12,9 @@ superstep; Catalyst picks the physical plan (the whole call runs in
 
   d  = Σ rank_i over dangling i                  (folded into prev stats)
   q_i = (α·d + (1−α)) · v_i                      (expression)
-  x' = α · Pᵀx + q                               (join + groupBy-sum,
-                                                  zero-row preservation via
-                                                  left join + coalesce)
+  x' = α · Pᵀx + q                               (join, then union with
+                                                  one teleport row per vertex
+                                                  + ONE groupBy-sum)
   x' /= ‖x'‖                                     (scalar from stats action)
   stop when ‖x'−x‖₂ < ε                          (decomposed: one agg row)
 
@@ -35,8 +35,8 @@ Scale notes (100 TB / 1000-executor design):
 - the edge table is the sparse matrix (COO ≡ relational triple); it is
   hash-repartitioned by ``src`` ONCE and persisted — iterations reuse the
   partitioning, only the (|V|-sized) rank vector moves.
-- rank-vector join side: broadcast when |V| small enough (driver knows n),
-  else shuffle join co-partitioned with the persisted edges.
+- rank-vector join side: always a hint-forced shuffled hash join
+  co-partitioned with the persisted edges (one Spark job per superstep).
 - the groupBy(dst) scatter is shuffle-reduced (map-side partial agg), so a
   high in-degree hub contributes one partial row per partition — skew-safe
   without salting (see operators/superstep_csr.py for the explicitly
@@ -56,14 +56,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pagerank_project_spark.config import PageRankConfig
 from pagerank_project_spark.operators import vids
 from pagerank_project_spark.session import engine_call
-
-# broadcast dimension/rank tables only when |V| is below this bound.
-# Measured at 4M vertices (sf4): building the broadcast HashedRelation is
-# SERIAL (~1M rows/s) and repeats every iteration → 4-6 s/superstep and
-# negative core-scaling, while the co-partitioned shuffle join (state is
-# already hash-partitioned on the join key) runs in ~1 s and scales.
-# Broadcast only pays off for genuinely small graphs.
-BROADCAST_VERTEX_LIMIT = 100_000
 
 
 @dataclass
@@ -85,13 +77,8 @@ def apply_filter_ratio(edges: DataFrame, n_vertices: int, ratio: float) -> DataF
     post-filter count — reference computes it from the final dict size,
     pagerank.py:45). Vertex set is unchanged (filtered nodes stay as
     isolated vertices and still receive teleport mass).
-    Physical: broadcast the (≤|V|-row, 2-col) in-degree table when |V|
-    permits, else a shuffle join (the filter and the groupBy share the dst
-    partitioning, so only one extra shuffle).
     """
     indeg = edges.groupBy("dst").agg(F.count("*").alias("_indeg"))
-    if n_vertices <= BROADCAST_VERTEX_LIMIT:
-        indeg = F.broadcast(indeg)
     return (
         edges.join(indeg, "dst", "inner")
         .filter(F.col("_indeg") < F.lit(float(ratio) * n_vertices))
@@ -368,14 +355,11 @@ def _run_loop(spark, cfg, g, nparts, t_start, checkpoint_store, bucketed) -> Pag
 
     alpha = cfg.alpha
     residuals: list[float] = []
-    converged = False
-    it = start_iter
     setup_sec = time.time() - t_start
     iter_secs: list[float] = []
 
     converged, it, cur = _iterate(
-        spark, cfg, cur, ew, hubs, n, d, alpha, start_iter, residuals, iter_secs,
-        checkpoint_store, vmap,
+        cfg, cur, ew, hubs, d, alpha, start_iter, residuals, iter_secs, checkpoint_store, vmap
     )
 
     # decode back to string vertex ids (op-9, pagerank.py:68,77-78)
@@ -399,43 +383,36 @@ def _run_loop(spark, cfg, g, nparts, t_start, checkpoint_store, bucketed) -> Pag
     )
 
 
-def _iterate(
-    spark, cfg, cur, ew, hubs, n, d, alpha, start_iter, residuals, iter_secs,
-    checkpoint_store, vmap,
-):
+def _iterate(cfg, cur, ew, hubs, d, alpha, start_iter, residuals, iter_secs, checkpoint_store, vmap):
     """The hot loop: ONE action per superstep without a checkpoint store;
     returns (converged, next_iteration, final_state).
 
     Spark jobs and stages per superstep (marginal over supersteps 4-6 on
     the sf0.001 graph, local[4], stages as perfbench's tracer counts them,
-    skipped ones included): 2 jobs / 5 stages on the broadcast rank side
-    (n ≤ BROADCAST_VERTEX_LIMIT, the broadcast exchange is its own job),
-    1 / 4 on the shuffle-hash side, 5 / 10 with a checkpoint store (the
-    ``active`` aggregate and the snapshot write are their own actions)."""
+    skipped ones included): 1 job / 4 stages without a checkpoint store,
+    4 / 9 with one (the ``active`` aggregate and the snapshot write are
+    their own actions)."""
     converged = False
     it = start_iter
     for it in range(start_iter, start_iter + cfg.max_iterations):
         t_it = time.time()
         # SpMV gather-scatter: α·Pᵀx (pagerank.py:126-132)
-        rank_side = cur.select(F.col("id").alias("_src"), "rank")
-        broadcast_rank = n <= BROADCAST_VERTEX_LIMIT
-        if broadcast_rank and cfg.strategy != "csr":
-            rank_side = F.broadcast(rank_side)
-        elif not broadcast_rank:
-            # Above the limit the broadcast must be explicitly FORBIDDEN,
-            # not merely un-hinted: Catalyst's size estimate of the
-            # checkpointed state can fall under autoBroadcastJoinThreshold,
-            # and a driver-serial 10⁶⁺-row HashedRelation build per
-            # superstep is pure non-scaling cost (measured: this, not the
-            # job floor, dominated the round-1 N→4N efficiency miss). The
-            # SHUFFLE_HASH hint forces a shuffled hash join whose build
-            # side is the per-partition rank slice; the sorted, persisted
-            # edge cache streams through unsorted and unshuffled.
-            rank_side = rank_side.hint("shuffle_hash")
+        # The broadcast must be explicitly FORBIDDEN, not merely un-hinted:
+        # Catalyst's size estimate of the checkpointed state can fall under
+        # autoBroadcastJoinThreshold, and a broadcast rebuilds a driver-side
+        # HashedRelation of the rank vector EVERY superstep. That build is
+        # serial (~1M rows/s): measured at 4M vertices (sf4) it cost 4-6 s
+        # per superstep with negative core-scaling, against ~1 s for the
+        # co-partitioned shuffle join; on small graphs its exchange is a
+        # second Spark job per superstep. The SHUFFLE_HASH hint forces a
+        # shuffled hash join whose build side is the per-partition rank
+        # slice; the sorted, persisted edge cache streams through unsorted
+        # and unshuffled.
+        rank_side = cur.select(F.col("id").alias("_src"), "rank").hint("shuffle_hash")
         if cfg.strategy == "csr":
             from pagerank_project_spark.operators.superstep_csr import csr_partials
 
-            part = csr_partials(ew, rank_side, hubs, cfg.salt_buckets, broadcast_rank).select(
+            part = csr_partials(ew, rank_side, hubs, cfg.salt_buckets).select(
                 F.col("dst").alias("id"), (F.lit(alpha) * F.col("c")).alias("c")
             )
         else:

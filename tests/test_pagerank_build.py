@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from pagerank_project_spark.config import PageRankConfig
-from pagerank_project_spark.operators import pagerank as pr_mod
 from pagerank_project_spark.operators import vids as vids_mod
 from pagerank_project_spark.operators.extract import extract_edges, vertices_from_files
 from pagerank_project_spark.operators.pagerank import pagerank
@@ -88,16 +87,14 @@ def _force_collision(monkeypatch) -> list[int]:
 
 
 @pytest.mark.parametrize("graph", ["f1_graph", "sf0001_graph"])
-@pytest.mark.parametrize("branch", ["collision", "shuffle_hash"])
+@pytest.mark.parametrize("branch", ["collision", "default"])
 def test_forced_build_branch_matches_oracle(spark, request, monkeypatch, tmp_path, graph, branch):
-    """The xxhash-collision fallback and the shuffle-hash superstep (above
-    BROADCAST_VERTEX_LIMIT), in-run and through prepare_graph +
-    load_prepared, each within 1e-6 of the numpy oracle."""
+    """The xxhash-collision fallback and the default build, in-run and
+    through prepare_graph + load_prepared, each within 1e-6 of the numpy
+    oracle."""
     edges, verts, want = request.getfixturevalue(graph)
     if branch == "collision":
         fallbacks = _force_collision(monkeypatch)
-    else:
-        monkeypatch.setattr(pr_mod, "BROADCAST_VERTEX_LIMIT", 0)
     path = str(tmp_path / "pg")
     prepare_graph(spark, edges, path, vertices=verts, buckets=4)
     pg = load_prepared(spark, path)
@@ -119,6 +116,31 @@ def test_forced_build_branch_matches_oracle(spark, request, monkeypatch, tmp_pat
             assert max(abs(got[k] - want[mode][k]) for k in got) <= 1e-6, mode
     if branch == "collision":
         assert len(fallbacks) == 1 + len(MODES)  # every in-run build fell back too
+
+
+def test_one_job_per_superstep(spark, small_rows):
+    """The relational superstep is ONE Spark job: the rank side meets the
+    edge cache in a shuffled hash join, never through a broadcast exchange
+    (which is a job of its own). Everything outside the loop is the same
+    for both runs, so 3 and 5 unconverged supersteps differ by 2 jobs."""
+    edges = _edges_df(spark, small_rows)
+    # the first PageRank call of a session runs one more build job than
+    # every later one; a warm-up keeps it out of the counts below
+    pagerank(spark, edges, cfg=PageRankConfig(max_iterations=1))
+    sc = spark.sparkContext
+    counts = {}
+    for steps in (3, 5):
+        group = f"pagerank-jobcount-{steps}"
+        sc.setJobGroup(group, "jobs per superstep")
+        try:
+            res = pagerank(spark, edges, cfg=PageRankConfig(epsilon=0.0, max_iterations=steps))
+            res.ranks.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert res.iterations == steps
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # every job start is recorded
+        counts[steps] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert counts[5] - counts[3] == 2, counts
 
 
 # --------------------------------------------------------------------------

@@ -18,13 +18,16 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SNIPPET = r"""
-import json, sys, time
-sys.path.insert(0, "/root/repo")
+import json, os, sys, time
+sys.path.insert(0, os.getcwd())  # run as a subprocess with cwd=REPO
 from pyspark.sql import SparkSession
 from pagerank_project_spark.config import PageRankConfig
 from pagerank_project_spark.datagen import ensure_fixture
@@ -49,7 +52,7 @@ spark = (SparkSession.builder.master("local-cluster[1,4,13312]")
          .config("spark.sql.execution.arrow.pyspark.enabled", "true")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
          .config("spark.ui.enabled", "false")
-         .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+         .config("spark.executorEnv.PYTHONPATH", os.getcwd())
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 fix = ensure_fixture(sf)
@@ -84,7 +87,7 @@ def main():
         t0 = time.time()
         out = subprocess.run(
             [sys.executable, "-c", SNIPPET, str(args.sf), str(args.iters), str(batch)],
-            capture_output=True, text=True, cwd="/root/repo", timeout=5400,
+            capture_output=True, text=True, cwd=REPO, timeout=5400,
         )
         lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
         if not lines:
@@ -96,7 +99,7 @@ def main():
               f"({r['edges_per_sec_per_superstep']:,.0f} edges/s) "
               f"[{time.time() - t0:.0f}s total]", flush=True)
 
-    with open("/root/repo/BENCH/arrow_sweep.json", "w") as f:
+    with open(os.path.join(REPO, "BENCH", "arrow_sweep.json"), "w") as f:
         json.dump(results, f, indent=2)
     print("→ BENCH/arrow_sweep.json")
 

@@ -21,10 +21,12 @@ Writes BENCH/interleaved_<op>_sf<sf>.json and prints the medians.
 from __future__ import annotations
 
 import json
+import os
 import statistics
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from tools.bench_scaling import run_scale
 
 sf = sys.argv[1]
@@ -66,7 +68,7 @@ for k in ("wall_sec", "sec_per_iter"):
         out[f"eff_{k}"] = round(med(v1) / (4 * med(v4)), 3)
 
 path = f"BENCH/interleaved_{op}_sf{sf}.json"
-with open(f"/root/repo/{path}", "w") as f:
+with open(os.path.join(REPO, path), "w") as f:
     json.dump(out, f, indent=2)
 print(json.dumps({k: v for k, v in out.items() if k != "legs"}))
 print(f"wrote {path}")

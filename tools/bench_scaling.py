@@ -23,9 +23,12 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH = os.path.join(REPO, "BENCH")
+
 SCALE_SNIPPET = r"""
-import json, sys, time
-sys.path.insert(0, "/root/repo")
+import json, os, sys, time
+sys.path.insert(0, os.getcwd())  # run as a subprocess with cwd=REPO
 from pyspark.sql import SparkSession, functions as F
 from pagerank_project_spark.config import PageRankConfig
 from pagerank_project_spark.datagen import ensure_fixture
@@ -66,7 +69,7 @@ spark = (SparkSession.builder.master(f"local-cluster[{nexec},{cores_per},13312]"
          # executor-side python workers must import pagerank_project_spark
          # (the CSR path ships pandas-UDF closures); on a real cluster this
          # is the --py-files zip from tools/submit.sh
-         .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+         .config("spark.executorEnv.PYTHONPATH", os.getcwd())
          .getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
 fix = ensure_fixture(sf)
@@ -325,7 +328,7 @@ def run_scale(sf: float, nexec: int, iters: int, op: str, retries: int = 2,
         out = subprocess.run(
             [sys.executable, "-c", SCALE_SNIPPET, str(sf), str(nexec), str(iters), op,
              str(cc_pin), str(prepared_buckets)],
-            capture_output=True, text=True, cwd="/root/repo", timeout=5400,
+            capture_output=True, text=True, cwd=REPO, timeout=5400,
         )
         lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
         if lines:
@@ -340,7 +343,7 @@ def run_scale(sf: float, nexec: int, iters: int, op: str, retries: int = 2,
 def run_bench(cpus: int, sf_dir: str) -> dict:
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=sf_dir)
     out = subprocess.run([sys.executable, "bench.py"], env=env, capture_output=True,
-                         text=True, cwd="/root/repo", timeout=3600)
+                         text=True, cwd=REPO, timeout=3600)
     lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
     if not lines:
         raise RuntimeError(f"bench failed (cpus={cpus}): {out.stderr[-2000:]}")
@@ -383,8 +386,8 @@ def main():
     # merge with prior runs: CC is benched at a different sf than PR/LPA
     # (amortization point differs), so the md/json compose across invocations
     scale: dict[tuple, dict] = {}
-    if os.path.exists("/root/repo/BENCH/scaling.json"):
-        with open("/root/repo/BENCH/scaling.json") as f:
+    if os.path.exists(os.path.join(BENCH, "scaling.json")):
+        with open(os.path.join(BENCH, "scaling.json")) as f:
             for k, v in json.load(f).items():
                 op_k, nexec_k = k.rsplit("_", 1)
                 scale[(op_k, int(nexec_k))] = v
@@ -399,7 +402,7 @@ def main():
             # checkpoint the merged rows after EVERY leg: a leg is tens of
             # minutes of wall, and a crash anywhere later in main() (e.g. a
             # KeyError in a report f-string) must not lose measured data
-            with open("/root/repo/BENCH/scaling.json", "w") as f:
+            with open(os.path.join(BENCH, "scaling.json"), "w") as f:
                 json.dump({f"{k[0]}_{k[1]}": v for k, v in scale.items()}, f, indent=2)
             rate = r.get("edges_per_sec_per_superstep", r.get("whole_run_eps", 0.0))
             print(f"{op} {nexec}x4 executors: {rate:,.0f} edges/s"
@@ -412,9 +415,10 @@ def main():
         # its table (they are refreshed by full runs / the round driver)
         bench = None
         try:
-            with open("/root/repo/BENCH/local8.json") as f8, open(
-                "/root/repo/BENCH/local32.json"
-            ) as f32:
+            with (
+                open(os.path.join(BENCH, "local8.json")) as f8,
+                open(os.path.join(BENCH, "local32.json")) as f32,
+            ):
                 bench = {8: json.load(f8), 32: json.load(f32)}
         except OSError:
             pass
@@ -433,7 +437,7 @@ def main():
             return f"{b['whole_run_eps'] / (4 * a['whole_run_eps']):.2f}"
         return "—"
 
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(BENCH, exist_ok=True)
     rows = "\n".join(
         f"| {OP_LABEL[op]} | {scale[(op, 1)]['sf']:g} | {scale[(op, 1)]['n_edges']:,} "
         f"| {scale[(op, 1)]['edges_per_sec_per_superstep']:,.0f} "
@@ -492,7 +496,7 @@ def main():
 Per-query seconds (local[32]): {json.dumps(b32["queries"])}
 """
 
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(os.path.join(BENCH, "BASELINE.md"), "w") as f:
         f.write(f"""# BENCH — measured engine numbers (this sandbox)
 
 ## Scaling evidence (north_rule: N vs 4N executors, target efficiency ≥0.8)
@@ -789,12 +793,12 @@ sf32, verified leg-to-leg).
 Raw JSON: BENCH/scaling.json, BENCH/scaling_cc_sf16_pin1M.json,
 BENCH/arrow_sweep.json, BENCH/local8.json, BENCH/local32.json.
 """)
-    with open("/root/repo/BENCH/scaling.json", "w") as f:
+    with open(os.path.join(BENCH, "scaling.json"), "w") as f:
         json.dump({f"{k[0]}_{k[1]}": v for k, v in scale.items()}, f, indent=2)
     if bench:
-        with open("/root/repo/BENCH/local8.json", "w") as f:
+        with open(os.path.join(BENCH, "local8.json"), "w") as f:
             json.dump(bench[8], f, indent=2)
-        with open("/root/repo/BENCH/local32.json", "w") as f:
+        with open(os.path.join(BENCH, "local32.json"), "w") as f:
             json.dump(bench[32], f, indent=2)
     print("efficiency: " + " ".join(f"{op}={eff(op):.2f}" for op in all_ops) + " → BENCH/BASELINE.md")
 

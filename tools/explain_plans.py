@@ -26,7 +26,7 @@ def capture(spark) -> list[tuple[str, str, str]]:
 
     sections: list[tuple[str, str, str]] = []
 
-    # --- 1. PageRank superstep, shuffle regime (|V| > broadcast limit) -----
+    # --- 1. PageRank superstep (shuffled hash join on the rank side) -------
     N = 200_000
     ew = (
         spark.range(0, 4 * N)
@@ -55,7 +55,7 @@ def capture(spark) -> list[tuple[str, str, str]]:
         .agg(F.sum("c").alias("nx"), F.max("old").alias("old"))
     )
     sections.append((
-        "PageRank superstep (shuffle regime, |V| > broadcast limit)",
+        "PageRank superstep (shuffled hash join on the rank side)",
         """What to verify:
 - `ShuffledHashJoin` with the RANK side as build — NOT `BroadcastHashJoin`
   (Catalyst's estimate of the checkpointed state would auto-broadcast a
