@@ -57,7 +57,6 @@ class PageRankConfig:
     num_partitions: int | None = None  # None → spark.sql.shuffle.partitions
     salt_buckets: int = 8  # salt replication factor for hub vertices
     hub_degree_threshold: int | None = None  # None → auto (mean*32, min 256)
-    checkpoint_every: int = 1  # write state every k iterations to a checkpoint store
 
     @property
     def norm_x(self) -> str:

@@ -232,7 +232,11 @@ def write_fixture(st: SourceTable, out_dir: str) -> str:
     return out_dir
 
 
-def ensure_fixture(sf: float, base_dir: str = "/root/repo/fixtures", seed: int = 42) -> str:
+# fixtures/ next to the package, so each checkout caches its own
+FIXTURE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "fixtures")
+
+
+def ensure_fixture(sf: float, base_dir: str = FIXTURE_DIR, seed: int = 42) -> str:
     """Generate-and-cache; returns the fixture dir for this sf."""
     out = f"{base_dir}/sf{sf:g}"
     if os.path.exists(f"{out}/source_table/_manifest.json"):

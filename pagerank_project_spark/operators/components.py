@@ -88,10 +88,11 @@ two modes make different promises about intermediate state:
   string id by ``vids.relabel_min_id``. Intermediate vid order is
   therefore free, and the encode is ``vids.hash_encode``: ZERO setup
   shuffles (no vmap sort, no encode joins — at sf16 those were ~80% of
-  the measured setup wall), one collision-check job over the vertex
-  universe, and the string-sorted build on a collision (birthday bound
-  ~1e-5 at 16M vertices, ~0.05 at 1B — the fallback is not theoretical
-  at web scale, which is why it stays a tested path). The same relabel
+  the measured setup wall) and one job over the vertex universe that
+  raises the endpoint guard and checks vid collisions; on a collision
+  (birthday bound ~1e-5 at 16M vertices, ~0.05 at 1B — the fallback is
+  not theoretical at web scale, which is why it stays a tested path)
+  ``hash_encode`` itself returns string-sorted vids. The same relabel
   serves both encodings.
 
 Checkpoint state is algorithm-specific (labels for propagation, the
@@ -100,8 +101,8 @@ to resume under the other.
 
 The whole call, build included, runs in ``session.engine_call`` (AQE
 off): re-planning per stage made every build shuffle its own Spark job,
-so a star call is now three (collision check, canonical-edge fill,
-driver finish). A warm call (same
+so a star call is now three (guard and collision check, canonical-edge
+fill, driver finish). A warm call (same
 graph, same session) compiles no generated class, because
 ``session.get_spark`` sizes Spark's codegen cache to the engine; sessions
 built elsewhere keep Spark's 100-entry default.
@@ -548,12 +549,10 @@ def connected_components(
     skew_threshold: int | None = None,
     driver_finish_edges: int = 4_000_000,
 ) -> ComponentsResult:
-    """``validate_vertices`` (with a supplied ``vertices``): the string-sorted
-    path raises ValueError HERE on endpoints missing from the vertex table;
-    the hash-vid star path fuses the same complete guard into the label
-    decode (zero cost on valid input) and raises at the caller's FIRST
-    ACTION on ``labels`` instead — either way no silently-wrong result can
-    be observed. ``skew_threshold``/``driver_finish_edges`` tune the star
+    """``validate_vertices`` (with a supplied ``vertices``): raise ValueError
+    here, during the build, on edge endpoints missing from the vertex
+    table (``vids.endpoints_missing_error``), in both algorithms.
+    ``skew_threshold``/``driver_finish_edges`` tune the star
     path only (see module doc; the hub broadcast budget is
     ``HUB_BROADCAST_LIMIT``); ``skew_threshold=None`` (default) re-derives
     the hub cutoff every round as ``SKEW_TASK_RATIO × 2·|E|/nparts`` —
@@ -567,16 +566,14 @@ def connected_components(
     phases: dict = {}
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     with engine_call(spark):
-        # Encode (see module doc): star mode hashes (zero setup shuffles)
-        # unless the collision check fails; propagation needs
-        # order-preserving string-sorted vids.
+        # Encode (see module doc): star mode hashes (zero setup shuffles);
+        # propagation needs order-preserving string-sorted vids. Both
+        # builds raise the endpoint guard before anything is encoded.
         t_ph = _time.time()
-        enc = hash_encode(edges, vertices) if algorithm == "star" else None
-        if enc is not None:
-            vmap, canon = enc[0], canonical_pairs(enc[1])
+        if algorithm == "star":
+            vmap, enc = hash_encode(edges, vertices, validate_vertices, nparts)
+            canon = canonical_pairs(enc)
         else:
-            # the encode joins are INNER — the build guards missing
-            # endpoints before anything is encoded
             ub = undirected_build(edges, vertices, nparts, validate_vertices, narrow=False)
             vmap, canon = ub.vmap, ub.canon
         phases["encode"] = round(_time.time() - t_ph, 3)
@@ -588,17 +585,6 @@ def connected_components(
         t_ph = _time.time()
         stats0 = _edge_stats(canon)  # materializes the cache (and the first fingerprint)
         phases["setup_materialize"] = round(_time.time() - t_ph, 3)
-        # Hash-path endpoint-coverage guard: the hash encode never drops edges
-        # (no join), but endpoints absent from `vertices` would be silently
-        # MISSING from the label output (labels are built off the vertex
-        # table). Instead of a standalone anti-join (measured 36-89 s at sf32
-        # — a whole setup phase), the check is FUSED into the final decode
-        # join: it becomes a full_outer there and any active vertex without a
-        # vmap match trips F.raise_error at the caller's first action (see
-        # _run_star). Star contraction preserves non-isolated vertex support
-        # every round, so the final active_map still contains every
-        # non-isolated endpoint — the fused check is complete, not a sample.
-        validate_fused = enc is not None and vertices is not None and validate_vertices
 
         start_iter = 0
         if checkpoint_store is not None and checkpoint_store.latest_iteration() is not None:
@@ -613,7 +599,7 @@ def connected_components(
             labels, it, converged, iter_secs = _run_star(
                 spark, canon, stats0, vmap, nparts, max_iterations,
                 checkpoint_store, start_iter,
-                skew_threshold, driver_finish_edges, phases, validate_fused,
+                skew_threshold, driver_finish_edges, phases,
             )
         else:
             labels, it, converged, iter_secs = _run_propagation(
@@ -629,8 +615,7 @@ def connected_components(
 
 def _run_star(
     spark, canon, stats0, vmap, nparts, max_iterations,
-    checkpoint_store, start_iter, skew_threshold, driver_finish_edges,
-    phases=None, validate_fused=False,
+    checkpoint_store, start_iter, skew_threshold, driver_finish_edges, phases=None,
 ):
     import time
 
@@ -783,57 +768,6 @@ def _run_star(
     # subtree reuse across a self-join). shuffle_hash hints: both label
     # joins would otherwise SMJ-sort |V|-sized sides; hashing the smaller
     # side keeps the decode sort-free.
-    # validate_fused: the endpoint-coverage guard rides this join — active
-    # vertices with no vmap row (an edge endpoint missing from the
-    # supplied vertex table) surface as null-id rows of the full_outer and
-    # trip raise_error at the caller's first action. Fused = free when the
-    # input is valid; a standalone anti-join cost a whole setup phase.
-    _missing_msg = (
-        "edge endpoint(s) are not in the supplied vertices table; "
-        "pass vertices=None to derive the universe from the edges, or "
-        "fix the table (validate_vertices=False skips this check)"
-    )
-    if validate_fused:
-        # two complementary raise sites make the fused guard COMPLETE:
-        # (a) a missing CHILD endpoint = active src with no vmap match →
-        #     null-id row of the full_outer;
-        # (b) a missing ROOT endpoint never appears as an active src (at
-        #     the star fixed point roots are only dsts), so it surfaces as
-        #     a label group in which no member is its own root
-        #     (_selfroot: the root's own row has _root null, vid = lbl).
-        id_expr = F.when(
-            F.col("id").isNull(), F.raise_error(F.lit(_missing_msg)).cast("string")
-        ).otherwise(F.col("id"))
-        lab = (
-            vmap.join(active_map.hint("shuffle_hash"), vmap.vid == F.col("src"), "full_outer")
-            .select(
-                id_expr.alias("id"),
-                F.coalesce(F.col("_root"), F.col("vid")).alias("lbl"),
-                (F.col("vid").isNotNull() & F.col("_root").isNull()).alias("_selfroot"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        comp = lab.groupBy("lbl").agg(
-            F.min("id").alias("component"),
-            F.max(F.col("_selfroot").cast("int")).alias("_has_root"),
-        )
-        # PRUNE-PROOF raise placement: site (a) fires when `lab`
-        # materializes (localCheckpoint stores whole rows — column pruning
-        # never reaches below it); site (b) rides the JOIN KEY, which every
-        # downstream action must evaluate — a raise in the `component`
-        # projection instead would be column-pruned away by a bare
-        # labels.count() and the guard would silently pass.
-        comp_key = F.when(
-            F.col("_has_root") == 0, F.raise_error(F.lit(_missing_msg)).cast("string")
-        ).otherwise(F.col("lbl"))
-        return (
-            lab.join(
-                comp.select(comp_key.alias("lbl"), "component").hint("shuffle_hash"), "lbl"
-            ).select("id", "component"),
-            it,
-            converged,
-            iter_secs,
-        )
     lab = (
         vmap.join(active_map.hint("shuffle_hash"), vmap.vid == F.col("src"), "left")
         .select("id", F.coalesce(F.col("_root"), F.col("vid")).alias("lbl"))

@@ -39,7 +39,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pagerank_project_spark.operators.vids import assert_endpoints_covered, build_vertices
+from pagerank_project_spark.operators.vids import covered_ids
 from pagerank_project_spark.session import engine_call
 
 
@@ -82,12 +82,10 @@ def hits(
     if iterations < 1:
         raise ValueError("hits requires iterations >= 1")
     with engine_call(spark):
-        verts = build_vertices(edges, vertices).persist()
-        if vertices is not None and validate_vertices:
-            # endpoints outside the vertex table would still feed the L2 norms
-            # before the final left join drops them — the reported vectors
-            # would not be unit over the output set (same guard as pagerank)
-            assert_endpoints_covered(edges, verts)
+        # endpoints outside a vertex table would still feed the L2 norms
+        # before the final left join drops them — the reported vectors
+        # would not be unit over the output set (same guard as pagerank)
+        verts = covered_ids(edges, vertices, validate_vertices).persist()
         e = edges.select("src", "dst").distinct().persist()
         e.count()  # materialize the loop-invariant edge cache once
 

@@ -41,7 +41,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pagerank_project_spark.operators.components import undirected_edges
-from pagerank_project_spark.operators.vids import assert_endpoints_covered, build_vertices
+from pagerank_project_spark.operators.vids import covered_ids
 from pagerank_project_spark.session import engine_call
 
 
@@ -75,12 +75,10 @@ def kcore(
     validate_vertices: bool = True,
 ) -> KCoreResult:
     with engine_call(spark):
-        verts = build_vertices(edges, vertices)
-        if vertices is not None and validate_vertices:
-            # an endpoint outside the vertex table still inflates its
-            # neighbors' h-indices before the final left join drops it —
-            # silently wrong coreness (same guard as pagerank/hits)
-            assert_endpoints_covered(edges, verts)
+        # an endpoint outside a vertex table still inflates its neighbors'
+        # h-indices before the final left join drops it — silently wrong
+        # coreness (same guard as pagerank/hits)
+        verts = covered_ids(edges, vertices, validate_vertices)
         nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # pre-partition the loop-invariant symmetric edge cache on the gather
         # key: every iteration's join then reads the cache partitioning

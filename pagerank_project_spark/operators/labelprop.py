@@ -14,7 +14,7 @@ part 3):
 Physical design (same substrate as PageRank/CC):
 - ids AND labels are dictionary-encoded in the loop, with vids assigned
   in STRING-sorted order by ``vids.undirected_build`` — the one
-  undirected build, shared with CC's sorted path and
+  undirected build, shared with CC propagation and
   ``prepare_undirected`` — so vid comparisons ARE string-order
   comparisons: the min-label tie-break stays oracle-exact while the loop
   shuffles only fixed-width keys. (xxhash64 vids were measured too: their

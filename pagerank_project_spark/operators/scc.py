@@ -47,9 +47,10 @@ Scale shape (house superstep discipline throughout):
 Encoding (the vid layer, ``operators/vids.py``): the loop always runs on
 LONG vids — min over STRING ids compiles to a per-superstep
 SortAggregate, min over longs to a map-side-combined HashAggregate.
-``vids.hash_encode`` gives xxhash64 vids with one collision-check job; on
-a collision the ids are ranked by ``vids.string_sorted_vids`` and the
-edges re-encoded by ``vids.encode_pair``, as PageRank does.
+``vids.hash_encode`` gives xxhash64 vids after one job that raises the
+endpoint guard for a supplied vertex table and checks vid collisions; on
+a collision it returns string-sorted vids itself, so the call has no
+branch of its own.
 
 Determinism: colors are min-vid, tie-breaks structural — the labeling
 is a pure function of the graph. Whatever the vid order, the group labels
@@ -63,14 +64,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pagerank_project_spark.operators.vids import (
-    assert_endpoints_covered,
-    build_vertices,
-    encode_pair,
-    hash_encode,
-    relabel_min_id,
-    string_sorted_vids,
-)
+from pagerank_project_spark.operators.vids import hash_encode, relabel_min_id
 from pagerank_project_spark.session import engine_call
 
 
@@ -278,20 +272,10 @@ def strongly_connected_components(
     """
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     with engine_call(spark):
-        if vertices is not None:
-            # same contract as label_propagation/CC: a caller-supplied vertex
-            # table missing edge endpoints would silently drop those labels at
-            # the vmap decode join — refuse loudly instead
-            assert_endpoints_covered(edges, build_vertices(edges, vertices))
-
-        # LONG vids for the loop (module doc): hashed — a plain projection,
-        # rebuilt on demand at decode — or, on a collision, string-sorted
-        # ranks (persisted by string_sorted_vids, read again at decode)
-        enc = hash_encode(edges, vertices)
-        if enc is None:
-            vmap = string_sorted_vids(build_vertices(edges, vertices), "id", nparts)
-            enc = vmap, encode_pair(edges.select("src", "dst"), vmap).toDF("src", "dst")
-        vmap, enc_edges = enc
+        # LONG vids for the loop (module doc). A caller-supplied vertex
+        # table missing edge endpoints would silently drop those labels at
+        # the vmap decode join, so the encode refuses it loudly instead.
+        vmap, enc_edges = hash_encode(edges, vertices, num_partitions=nparts)
         enc_verts = vmap.select(F.col("vid").alias("id"))
 
         base = (

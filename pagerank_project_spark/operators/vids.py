@@ -2,14 +2,21 @@
 graph operator. Everything that builds, encodes or decodes a vid map
 lives here, once:
 
-- ``build_vertices``: the vertex universe — a supplied table's ids, or
-  the distinct edge endpoints.
+- ``universe``: the vertex universe as one ``(id, _known)`` row per id —
+  endpoints (known=0) ∪ a supplied vertex table (known=1) when that
+  table is validated, otherwise the table's ids or the distinct
+  endpoints. Whatever aggregate first reads it returns the endpoint
+  guard too: ``count − Σknown`` endpoints are missing from the table,
+  and ``endpoints_missing_error`` is the one error they raise
+  (PageRank's build aggregate, ``hash_encode``, ``undirected_build``,
+  ``covered_ids``). ``build_vertices`` is its unchecked id column.
 - ``hashed_vids``: vid = xxhash64(id) — zero extra jobs, deterministic
   under partition recompute, order-AGNOSTIC. ``hash_encode`` builds the
-  map and the join-free encoded edges with ONE collision-check job (CC
-  star, SCC); PageRank fuses the same check into its build aggregate.
-  Collisions (birthday bound ~2e-7 at 4M vertices) fall back to
-  ``string_sorted_vids`` (PageRank, SCC) or ``undirected_build`` (CC).
+  map and the join-free encoded edges with ONE job that checks both the
+  endpoints and vid collisions (CC star, SCC); PageRank fuses the same
+  checks into its build aggregate. Collisions (birthday bound ~2e-7 at
+  4M vertices) fall back to ``string_sorted_vids``, inside
+  ``hash_encode`` and inside PageRank's build.
 - ``string_sorted_vids``: vid = 1-based rank of id in ascending string
   order, 1..n DENSE, computed WITHOUT a global single-task sort:
 
@@ -24,10 +31,9 @@ lives here, once:
   filled by the count collect for exactly that reason). At 10^12
   vertices every stage of this is parallel: no task ever sees more than
   one range partition.
-- ``undirected_build``: the one undirected build (LPA, CC propagation and
-  CC's collision fallback, ``prepare_undirected``) — universe, endpoint
-  guard, sorted vids, encode joins, int32 narrowing and canonical pairs
-  in ONE driver action.
+- ``undirected_build``: the one undirected build (LPA, CC propagation,
+  ``prepare_undirected``) — universe, endpoint guard, sorted vids, encode
+  joins, int32 narrowing and canonical pairs in ONE driver action.
 - the decode family: ``decode_pair`` (vid, lbl) → (id, label) for label
   outputs and checkpoint writes, ``encode_pair`` its inverse for resume,
   and ``relabel_min_id``, which renames each label group to its min
@@ -61,22 +67,47 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 # halves the per-superstep DRAM stream and shuffle bytes. Above the limit
 # everything stays bigint: the 10^12-vertex deployment keeps working, it
 # just pays the wide keys. (xxhash64 vids never narrow.)
-# SPARK_GRAFT_INT_VID_LIMIT overrides (0 forces wide keys — the measured
-# A/B lever and the ops escape hatch).
-import os as _os
+INT_VID_LIMIT = 2_147_483_000
 
-INT_VID_LIMIT = int(_os.environ.get("SPARK_GRAFT_INT_VID_LIMIT", 2_147_483_000))
+
+def universe(
+    edges: DataFrame, vertices: DataFrame | None = None, validate_vertices: bool = True
+) -> DataFrame:
+    """The vertex universe as one (id, _known) row per id. With a supplied
+    ``vertices`` table that is validated it is endpoints (known=0) ∪
+    vertices (known=1), so any aggregate over it counts the endpoints the
+    table misses as ``count − Σknown`` (a UNION ALL into the aggregate, in
+    place of an anti-join); otherwise every row is known: the table's ids,
+    or the distinct edge endpoints."""
+    ends = edges.select(F.col("src").alias("id")).unionByName(edges.select(F.col("dst").alias("id")))
+    if vertices is None:
+        rows = ends.select("id", F.lit(1).alias("_known"))
+    elif validate_vertices:
+        rows = ends.select("id", F.lit(0).alias("_known")).unionByName(
+            vertices.select("id", F.lit(1).alias("_known"))
+        )
+    else:
+        rows = vertices.select("id", F.lit(1).alias("_known"))
+    return rows.groupBy("id").agg(F.max("_known").alias("_known"))
 
 
 def build_vertices(edges: DataFrame, vertices: DataFrame | None) -> DataFrame:
-    """Vertex universe: provided table (id) or distinct src ∪ dst."""
-    if vertices is not None:
-        return vertices.select("id").distinct()
-    return (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    """Vertex universe ids, unchecked: provided table (id) or distinct src ∪ dst."""
+    return universe(edges, vertices, validate_vertices=False).select("id")
+
+
+def covered_ids(
+    edges: DataFrame, vertices: DataFrame | None = None, validate_vertices: bool = True
+) -> DataFrame:
+    """``build_vertices`` after the endpoint guard: a validated vertex
+    table that misses an endpoint raises ``endpoints_missing_error`` from
+    one aggregate over the universe."""
+    if vertices is not None and validate_vertices:
+        u = universe(edges, vertices)
+        missing = u.agg(F.count("*") - F.sum("_known")).first()[0]
+        if missing:
+            raise endpoints_missing_error(missing)
+    return build_vertices(edges, vertices)
 
 
 def hashed_vids(verts: DataFrame, id_col: str = "id") -> DataFrame:
@@ -85,23 +116,34 @@ def hashed_vids(verts: DataFrame, id_col: str = "id") -> DataFrame:
 
 
 def hash_encode(
-    edges: DataFrame, vertices: DataFrame | None = None
-) -> tuple[DataFrame, DataFrame] | None:
-    """(vmap (id, vid), encoded edges (src, dst)) with hashed vids, or None
-    when two ids of the universe collide. ONE driver action (count vs
-    count-distinct vid); both returns are plain projections — the edges
-    encode with no join, so nothing is dropped and the caller guards a
-    supplied vertex table itself."""
-    vmap = hashed_vids(build_vertices(edges, vertices)).select("id", "vid")
-    chk = vmap.agg(F.count("*").alias("n"), F.count_distinct("vid").alias("nv")).first()
+    edges: DataFrame,
+    vertices: DataFrame | None = None,
+    validate_vertices: bool = True,
+    num_partitions: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(vmap (id, vid), encoded edges (src, dst)) with hashed vids, after
+    ONE driver action: an aggregate over the universe that returns the
+    endpoints a validated vertex table misses (raised first) and the
+    count-distinct vid collision check. Both returns are plain
+    projections — the edges encode with no join. On a collision the ids
+    are ranked by ``string_sorted_vids`` instead and the edges encoded by
+    ``encode_pair``."""
+    chk = hashed_vids(universe(edges, vertices, validate_vertices)).agg(
+        F.count("*").alias("n"), F.sum("_known").alias("known"), F.count_distinct("vid").alias("nv")
+    ).first()
+    if chk["n"] != chk["known"]:
+        raise endpoints_missing_error(chk["n"] - chk["known"])
+    # the guard passed, so the supplied table alone is the universe
+    verts = build_vertices(edges, vertices)
     if chk["nv"] != chk["n"]:
-        return None
+        vmap = string_sorted_vids(verts, "id", num_partitions)
+        return vmap, encode_pair(edges.select("src", "dst"), vmap).toDF("src", "dst")
     enc = hashed_vids(edges.select("src", "dst"), "src").select(F.col("vid").alias("src"), "dst")
-    return vmap, hashed_vids(enc, "dst").select("src", F.col("vid").alias("dst"))
+    return hashed_vids(verts), hashed_vids(enc, "dst").select("src", F.col("vid").alias("dst"))
 
 
 def _ranked(rows: DataFrame, nparts: int) -> DataFrame:
-    """(id, _known) rows → the distinct ids, range-partitioned by id and
+    """One (id, _known) row per id → the ids, range-partitioned by id and
     sorted within each partition, as a persisted (id, _known, _pid, _rn)
     table: ``_pid`` is the range partition, ``_rn`` the 0-based rank inside
     it. The range boundaries are sampled once, when the exchange first
@@ -110,9 +152,7 @@ def _ranked(rows: DataFrame, nparts: int) -> DataFrame:
     first action over the table fills it."""
     pid = F.spark_partition_id()
     return (
-        rows.groupBy("id")
-        .agg(F.max("_known").alias("_known"))
-        .repartitionByRange(nparts, F.col("id").asc())
+        rows.repartitionByRange(nparts, F.col("id").asc())
         .sortWithinPartitions("id")
         .select(
             "id", "_known", pid.alias("_pid"),
@@ -151,7 +191,9 @@ def string_sorted_vids(
     unpersists)."""
     spark = SparkSession.getActiveSession()
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ranked = _ranked(verts.select(F.col(id_col).alias("id"), F.lit(1).alias("_known")), nparts)
+    ranked = _ranked(
+        verts.select(F.col(id_col).alias("id")).distinct().withColumn("_known", F.lit(1)), nparts
+    )
     vid, _, _ = _rank_stats(ranked, nparts)
     out = ranked.select(F.col("id").alias(id_col), vid).persist()
     out.count()
@@ -190,14 +232,13 @@ def undirected_build(
     narrow: bool = True,
     require_vertices: bool = False,
 ) -> UndirectedBuild:
-    """The undirected graph build shared by LPA, CC's string-sorted path
-    and ``prepare_undirected``: string-sorted vids, the encode joins, the
+    """The undirected graph build shared by LPA, CC propagation and
+    ``prepare_undirected``: string-sorted vids, the encode joins, the
     optional int32 narrowing and the canonical pairs — in ONE driver action.
 
-    The universe is endpoints (known=0) ∪ vertices (known=1) when a
-    supplied vertex table is validated, as in ``pagerank.build_graph``.
-    One collect of per-range-partition (count, Σknown) gives the offsets,
-    n = Σknown and the missing endpoints (count − Σknown). Nothing else is
+    The vertices are ranked over ``universe``, so one collect of
+    per-range-partition (count, Σknown) gives the offsets, n = Σknown and
+    the missing endpoints (count − Σknown). Nothing else is
     materialized: the rank table under ``vmap`` is filled by that collect,
     and the encode joins and the caller's edge cache run inside the
     caller's first superstep.
@@ -209,16 +250,7 @@ def undirected_build(
     """
     spark = SparkSession.getActiveSession()
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ends = edges.select(F.col("src").alias("id")).unionByName(edges.select(F.col("dst").alias("id")))
-    if vertices is None:
-        rows = ends.select("id", F.lit(1).alias("_known"))
-    elif validate_vertices:
-        rows = ends.select("id", F.lit(0).alias("_known")).unionByName(
-            vertices.select("id", F.lit(1).alias("_known"))
-        )
-    else:
-        rows = vertices.select("id", F.lit(1).alias("_known"))
-    cache = _ranked(rows, nparts)
+    cache = _ranked(universe(edges, vertices, validate_vertices), nparts)
     vid, n_rows, n = _rank_stats(cache, nparts)
     err = None
     if require_vertices and n == 0:
@@ -261,8 +293,9 @@ def decode_pair(pairs: DataFrame, vmap: DataFrame, label: str) -> DataFrame:
 
 def encode_pair(pairs: DataFrame, vmap: DataFrame) -> DataFrame:
     """Two string-id columns → (vid, lbl): the inverse of ``decode_pair``,
-    which re-encodes a checkpoint snapshot on resume (and SCC's edges after
-    a hash collision). Inner joins: ids outside the map drop out."""
+    which re-encodes a checkpoint snapshot on resume (and the edges after
+    a hash collision in ``hash_encode``). Inner joins: ids outside the map
+    drop out."""
     return (
         pairs.toDF("id", "_lid")
         .join(vmap.select("id", "vid").hint("shuffle_hash"), "id")
@@ -290,18 +323,3 @@ def endpoints_missing_error(missing: int) -> ValueError:
         "(validate_vertices=False skips this check)"
     )
 
-
-def assert_endpoints_covered(edges: DataFrame, verts: DataFrame) -> None:
-    """Guard against the silent-subgraph failure: endpoints missing from a
-    user-supplied vertex table would be dropped by the encode joins, and
-    every downstream result (ranks, labels, communities) would be silently
-    wrong. One setup-time co-partitioned left_anti count."""
-    missing = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(verts.select("id"), "id", "left_anti")
-        .count()
-    )
-    if missing:
-        raise endpoints_missing_error(missing)

@@ -4,10 +4,13 @@ semantics pagerank.py:63-67), and the sha256 invariant must hold/trip."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from pagerank_project_spark import datagen
 from pagerank_project_spark.datagen import generate
 from pagerank_project_spark.operators.extract import (
     ShaInvariantError,
@@ -70,3 +73,11 @@ def test_fixture_roundtrip(spark, sf0001_fixture, st):
     assert files.count() == len(st.files)
     intended = spark.read.parquet(f"{sf0001_fixture}/intended_edges")
     assert intended.count() == len(st.edges)
+
+
+def test_fixture_default_dir_is_this_checkout(sf0001_fixture):
+    """ensure_fixture caches under fixtures/ next to the package, so a
+    second checkout never reads or writes this checkout's fixtures."""
+    checkout = os.path.dirname(os.path.dirname(os.path.abspath(datagen.__file__)))
+    assert datagen.FIXTURE_DIR == os.path.join(checkout, "fixtures")
+    assert os.path.abspath(sf0001_fixture) == os.path.join(checkout, "fixtures", "sf0.001")

@@ -352,10 +352,9 @@ def test_table_synonyms_over_cap_raises(spark):
 def test_cc_hash_path_vertices_guard(spark):
     """The hash-vid star path has no encode join to drop rows, but endpoints
     missing from a supplied vertex table would silently vanish from the
-    label output. The guard is FUSED into the decode join (free when the
-    input is valid) and trips at the caller's first action — for BOTH the
-    missing-child case and the subtler missing-ROOT case (the component's
-    min-hash vertex never appears as an active src)."""
+    label output. ``hash_encode``'s guard raises inside the call — for
+    BOTH a missing child and a missing ROOT (the component's min-hash
+    vertex, which never appears as an active src)."""
     ids = ["a", "b", "c"]
     hashes = {
         r["id"]: r["h"]
@@ -367,17 +366,10 @@ def test_cc_hash_path_vertices_guard(spark):
     child = next(i for i in ids if i != root)
     e = edges_df(spark, [("a", "b"), ("b", "c")])
 
-    for missing in (child, root):  # exercises raise sites (a) and (b)
+    for missing in (child, root):
         verts = spark.createDataFrame([(v,) for v in ids if v != missing], "id string")
-        res = connected_components(spark, e, vertices=verts)
-        with pytest.raises(Exception, match="not in the supplied vertices"):
-            res.labels.collect()
-        # the raise must also survive COLUMN PRUNING: a bare count() reads
-        # no projection, so the raise sites ride the checkpoint barrier
-        # (missing child) and the decode join key (missing root)
-        res2 = connected_components(spark, e, vertices=verts)
-        with pytest.raises(Exception, match="not in the supplied vertices"):
-            res2.labels.count()
+        with pytest.raises(ValueError, match="not in the supplied vertices"):
+            connected_components(spark, e, vertices=verts)
 
     verts = spark.createDataFrame([("a",), ("b",)], "id string")
     res = connected_components(spark, e, vertices=verts, validate_vertices=False)

@@ -1,7 +1,8 @@
 """The vid layer (``operators/vids.py``) under the operators that hash:
-the collision fallbacks of CC star and SCC, forced through the
-``vids.hashed_vids`` seam and checked against networkx on F1 and sf0.001,
-their endpoint guard under a collision, and CC's salted hub join."""
+the collision fallback of ``hash_encode`` under CC star and SCC, forced
+through the ``vids.hashed_vids`` seam and checked against networkx on F1
+and sf0.001, the endpoint guard of every operator that takes a vertex
+table, and CC's salted hub join."""
 
 from __future__ import annotations
 
@@ -17,6 +18,10 @@ from pagerank_project_spark.operators import scc as scc_mod
 from pagerank_project_spark.operators import vids as vids_mod
 from pagerank_project_spark.operators.components import connected_components
 from pagerank_project_spark.operators.extract import extract_edges, vertices_from_files
+from pagerank_project_spark.operators.hits import hits
+from pagerank_project_spark.operators.kcore import kcore
+from pagerank_project_spark.operators.labelprop import label_propagation
+from pagerank_project_spark.operators.pagerank import pagerank
 from pagerank_project_spark.operators.scc import strongly_connected_components
 
 
@@ -43,17 +48,19 @@ def _run(spark, op: str, edges, verts) -> dict[str, str]:
 
 def _collide(monkeypatch) -> list[int]:
     """Every id hashes to the same vid, so each hash encode must fall back;
-    returns a list that records each call of the operators' fallback."""
+    returns a list that records each call of the fallback,
+    ``vids.string_sorted_vids``."""
     monkeypatch.setattr(
         vids_mod, "hashed_vids", lambda verts, id_col="id": verts.withColumn("vid", F.lit(7).cast("long"))
     )
     calls: list[int] = []
-    for mod, name in ((cc_mod, "undirected_build"), (scc_mod, "string_sorted_vids")):
-        def spy(*args, _real=getattr(mod, name), **kwargs):
-            calls.append(1)
-            return _real(*args, **kwargs)
+    real = vids_mod.string_sorted_vids
 
-        monkeypatch.setattr(mod, name, spy)
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(vids_mod, "string_sorted_vids", spy)
     return calls
 
 
@@ -80,8 +87,8 @@ def sf0001_graph(spark, sf0001_fixture):
 @pytest.mark.parametrize("graph", ["f1_graph", "sf0001_graph"])
 @pytest.mark.parametrize("op", ["cc", "scc"])
 def test_forced_collision_matches_networkx(spark, request, monkeypatch, op, graph):
-    """A vid collision sends CC star to the string-sorted undirected build
-    and SCC to string-sorted long vids; labels stay networkx's."""
+    """A vid collision makes ``hash_encode`` return string-sorted vids for
+    CC star and SCC; labels stay networkx's."""
     edges, verts, rows, ids = request.getfixturevalue(graph)
     fallbacks = _collide(monkeypatch)
     assert _run(spark, op, edges, verts) == _oracle(op, rows, ids)
@@ -98,6 +105,30 @@ def test_forced_collision_missing_endpoint_raises(spark, monkeypatch, op):
     msg = re.escape(str(vids_mod.endpoints_missing_error(1)))
     with pytest.raises(ValueError, match=msg):
         _run(spark, op, edges, verts)
+
+
+# each entry runs one operator over a vertex table; the guard must raise
+# inside the call, before the caller touches its output
+GUARDED = {
+    "pagerank": lambda s, e, v: pagerank(s, e, vertices=v),
+    "cc_star": lambda s, e, v: connected_components(s, e, vertices=v),
+    "cc_propagation": lambda s, e, v: connected_components(s, e, vertices=v, algorithm="propagation"),
+    "label_propagation": lambda s, e, v: label_propagation(s, e, vertices=v, iterations=2),
+    "scc": lambda s, e, v: strongly_connected_components(s, e, vertices=v),
+    "hits": lambda s, e, v: hits(s, e, vertices=v),
+    "kcore": lambda s, e, v: kcore(s, e, vertices=v),
+}
+
+
+@pytest.mark.parametrize("name", sorted(GUARDED))
+def test_missing_endpoint_raises_in_call(spark, name):
+    """Every operator that takes a vertex table raises the one endpoint
+    guard error, with the missing count, inside the call."""
+    edges = spark.createDataFrame([("a", "b"), ("b", "a"), ("b", "c")], "src string, dst string")
+    verts = spark.createDataFrame([("a",), ("b",)], "id string")  # missing c
+    msg = re.escape(str(vids_mod.endpoints_missing_error(1)))
+    with pytest.raises(ValueError, match=f"^{msg}$"):
+        GUARDED[name](spark, edges, verts)
 
 
 def test_salted_hub_join_matches_networkx(spark, monkeypatch, small_rows):
