@@ -96,8 +96,11 @@ two modes make different promises about intermediate state:
   serves both encodings.
 
 Checkpoint state is algorithm-specific (labels for propagation, the
-contracted edge set for star); a store written by one algorithm refuses
-to resume under the other.
+contracted edge set for star) and stays in the loop's vid space: a write
+is the state as the round left it, with no decode, and a resume reads it
+back with no encode (``plans.checkpoint.VidCheckpoint``). A store written
+by the other algorithm, or for another vertex set (the build's key
+``(n, Σ xxhash64(id))`` differs), refuses to resume.
 
 The whole call, build included, runs in ``session.engine_call`` (AQE
 off): re-planning per stage made every build shuffle its own Spark job,
@@ -111,7 +114,7 @@ built elsewhere keep Spark's 100-entry default.
 from __future__ import annotations
 
 import logging
-
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -119,12 +122,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pagerank_project_spark.operators.vids import (
     canonical_pairs,
     decode_pair,
-    encode_pair,
     hash_encode,
     relabel_min_id,
     symmetric_pairs,
     undirected_build,
 )
+from pagerank_project_spark.plans.checkpoint import VidCheckpoint
 from pagerank_project_spark.session import engine_call
 
 logger = logging.getLogger(__name__)
@@ -561,49 +564,38 @@ def connected_components(
     ``driver_finish_edges=0`` forces fully-distributed rounds."""
     if algorithm not in ("star", "propagation"):
         raise ValueError(f"unknown algorithm {algorithm!r}; one of ['star', 'propagation']")
-    import time as _time
-
     phases: dict = {}
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     with engine_call(spark):
         # Encode (see module doc): star mode hashes (zero setup shuffles);
         # propagation needs order-preserving string-sorted vids. Both
         # builds raise the endpoint guard before anything is encoded.
-        t_ph = _time.time()
+        t_ph = time.time()
         if algorithm == "star":
-            vmap, enc = hash_encode(edges, vertices, validate_vertices, nparts)
+            vmap, enc, key = hash_encode(edges, vertices, validate_vertices, nparts)
             canon = canonical_pairs(enc)
         else:
             ub = undirected_build(edges, vertices, nparts, validate_vertices, narrow=False)
-            vmap, canon = ub.vmap, ub.canon
-        phases["encode"] = round(_time.time() - t_ph, 3)
+            vmap, canon, key = ub.vmap, ub.canon, ub.key
+        phases["encode"] = round(time.time() - t_ph, 3)
+        ck = VidCheckpoint(checkpoint_store, key, algorithm) if checkpoint_store is not None else None
         # ONE setup shuffle: canonical (max→min) orientation dedup'd on LONG
         # pairs (the old string-pair symmetrize+distinct shuffled 2× the rows
         # at ~5× the bytes). The symmetric view propagation needs is derived
         # from this, with no second dedup (vids.symmetric_pairs).
         canon = canon.persist()
-        t_ph = _time.time()
+        t_ph = time.time()
         stats0 = _edge_stats(canon)  # materializes the cache (and the first fingerprint)
-        phases["setup_materialize"] = round(_time.time() - t_ph, 3)
-
-        start_iter = 0
-        if checkpoint_store is not None and checkpoint_store.latest_iteration() is not None:
-            start_iter = checkpoint_store.latest_iteration()
-            stored_algo = checkpoint_store.metrics()[start_iter].get("algorithm", "propagation")
-            if stored_algo != algorithm:
-                raise ValueError(
-                    f"checkpoint store holds {stored_algo!r} state; cannot resume with algorithm={algorithm!r}"
-                )
+        phases["setup_materialize"] = round(time.time() - t_ph, 3)
 
         if algorithm == "star":
             labels, it, converged, iter_secs = _run_star(
-                spark, canon, stats0, vmap, nparts, max_iterations,
-                checkpoint_store, start_iter,
+                spark, canon, stats0, vmap, nparts, max_iterations, ck,
                 skew_threshold, driver_finish_edges, phases,
             )
         else:
             labels, it, converged, iter_secs = _run_propagation(
-                spark, canon, vmap, nparts, max_iterations, checkpoint_store, start_iter, phases
+                spark, canon, vmap, nparts, max_iterations, ck, phases
             )
 
     canon.unpersist()
@@ -615,22 +607,15 @@ def connected_components(
 
 def _run_star(
     spark, canon, stats0, vmap, nparts, max_iterations,
-    checkpoint_store, start_iter, skew_threshold, driver_finish_edges, phases=None,
+    ck, skew_threshold, driver_finish_edges, phases,
 ):
-    import time
-
-    phases = {} if phases is None else phases
+    start_iter = ck.start if ck is not None else 0
 
     if start_iter:
-        # state = the contracted edge set, stored as string pairs.
-        # Orientation of the re-encoded rows is irrelevant — both star ops
+        # state = the contracted (src, dst) vid edge set, as written.
+        # Orientation of the rows is irrelevant — both star ops
         # re-canonicalize internally and peeling only engages post-round.
-        st = checkpoint_store.read_state(spark, start_iter)
-        e = (
-            encode_pair(st, vmap).toDF("src", "dst")
-            .repartition(nparts, "src")
-            .localCheckpoint(eager=False)
-        )
+        e = ck.read(spark).repartition(nparts, "src").localCheckpoint(eager=False)
         stats = _edge_stats(e)  # materializes the resumed state
     else:
         e = canon  # persisted + materialized by the caller
@@ -641,15 +626,19 @@ def _run_star(
     settled_parts: list[DataFrame] = []
     it = start_iter
 
+    def write(state, at_iter, metrics):
+        if ck is not None:
+            # resume state must be self-contained: active ∪ settled (a
+            # resumed run simply re-contracts the settled edges)
+            for p in settled_parts:
+                state = state.unionByName(p)
+            ck.write(state, at_iter, metrics)
+
     def finish_driver(e_small, at_iter):
         t0 = time.time()
         out = _driver_finish(spark, e_small)
         iter_secs.append(round(time.time() - t0, 3))
-        if checkpoint_store is not None:
-            checkpoint_store.write_iteration(
-                decode_pair(out, vmap, "component"), iteration=at_iter,
-                metrics={"algorithm": "star", "converged": True, "driver_finish": True},
-            )
+        write(out, at_iter, {"converged": True, "driver_finish": True})
         return out
 
     def eff_threshold(n_edges: int) -> int:
@@ -696,11 +685,7 @@ def _run_star(
                 # fingerprint matched AND exact set equality confirmed
                 e = e2
                 converged = True
-                if checkpoint_store is not None:
-                    checkpoint_store.write_iteration(
-                        decode_pair(e, vmap, "component"), iteration=it,
-                        metrics={"algorithm": "star", "n_edges": stats2[0], "converged": True},
-                    )
+                write(e, it, {"n_edges": stats2[0], "converged": True})
                 break
             stalled = stats2[0] > PEEL_STALL_RATIO * stats[0]
             e, stats = e2, stats2
@@ -741,19 +726,10 @@ def _run_star(
                     break
                 thr = eff_threshold(stats[0])
                 est_sym, est_nhubs, est_big = timed_est(e, stats[0], thr)
-            if checkpoint_store is not None:
-                # resume state must be self-contained: active ∪ settled
-                # (a resumed run simply re-contracts the settled edges)
-                st = e
-                for p in settled_parts:
-                    st = st.unionByName(p)
-                checkpoint_store.write_iteration(
-                    decode_pair(st, vmap, "component"), iteration=it,
-                    metrics={
-                        "algorithm": "star", "n_edges": stats2[0], "converged": False,
-                        "path": "safe" if (safe_large or safe_small) else "window",
-                    },
-                )
+            write(e, it, {
+                "n_edges": stats2[0], "converged": False,
+                "path": "safe" if (safe_large or safe_small) else "window",
+            })
 
     # fixed point = stars (child → component-min root); roots/isolated keep self
     active_map = e.groupBy("src").agg(F.min("dst").alias("_root"))
@@ -776,23 +752,16 @@ def _run_star(
     return relabel_min_id(lab, "component"), it, converged, iter_secs
 
 
-def _run_propagation(spark, canon, vmap, nparts, max_iterations, checkpoint_store, start_iter, phases=None):
-    import time as _time
-
-    phases = {} if phases is None else phases
-    t_ph = _time.time()
+def _run_propagation(spark, canon, vmap, nparts, max_iterations, ck, phases):
+    start_iter = ck.start if ck is not None else 0
+    t_ph = time.time()
     # symmetric view, pre-partitioned on src so the per-superstep join
     # reuses this exchange (the edge side never re-shuffles in the loop)
     und = symmetric_pairs(canon).repartition(nparts, "src").persist()
     und.count()
-    phases["symmetrize"] = round(_time.time() - t_ph, 3)
-    if start_iter:
-        labels = encode_pair(checkpoint_store.read_state(spark, start_iter), vmap)
-    else:
-        labels = vmap.select("vid", F.col("vid").alias("lbl"))
+    phases["symmetrize"] = round(time.time() - t_ph, 3)
+    labels = ck.read(spark) if start_iter else vmap.select("vid", F.col("vid").alias("lbl"))
     labels = labels.repartition(nparts, "vid").localCheckpoint(eager=False)
-
-    import time
 
     converged = False
     iter_secs: list[float] = []
@@ -816,11 +785,8 @@ def _run_propagation(spark, canon, vmap, nparts, max_iterations, checkpoint_stor
         changed = new_labels.filter(F.col("lbl") != F.col("old")).count()
         iter_secs.append(round(time.time() - t_it, 3))
         labels = new_labels.select("vid", "lbl")
-        if checkpoint_store is not None:
-            checkpoint_store.write_iteration(
-                decode_pair(labels, vmap, "component"), iteration=it,
-                metrics={"algorithm": "propagation", "changed_labels": int(changed)},
-            )
+        if ck is not None:
+            ck.write(labels, it, {"changed_labels": int(changed)})
         if changed == 0:
             converged = True
             break

@@ -41,16 +41,14 @@ Physical design (same substrate as PageRank/CC):
   a real neighbor count) → groupBy(vid, lbl).sum → argmax via one Window
   partitionBy(vid) ordered by (count desc, lbl asc). Two shuffles.
 - per-superstep lazy localCheckpoint truncates lineage; one action each.
-  With a checkpoint_store that action is the snapshot write itself, and
-  the returned labels are the committed final snapshot (byte-for-byte
-  the decode of the final state), so the caller's action reads parquet
-  instead of running a second decode plan.
-- the snapshot decode and the resume re-encode are ``vids.decode_pair`` /
-  ``vids.encode_pair``, the pair CC uses too.
-- resumable: with a checkpoint_store, the latest written iteration is
-  re-encoded and the loop continues from latest+1 (symmetric with
-  connected_components) — a restarted run never replays or duplicates
-  iterations.
+  With a checkpoint_store that action is the snapshot write itself, of
+  the ``(vid, lbl)`` labels as they stand (``plans.checkpoint.VidCheckpoint``).
+- every path decodes the final labels ONCE (``vids.decode_pair``), inside
+  the call, and returns them materialized: the caller's action is a scan.
+- resumable: with a checkpoint_store whose vertex-set key matches the
+  build's, the latest written iteration is read back as written and the
+  loop continues from latest+1 (symmetric with connected_components) — a
+  restarted run never replays or duplicates iterations.
 """
 
 from __future__ import annotations
@@ -63,10 +61,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from pagerank_project_spark.operators.vids import (
     decode_pair,
-    encode_pair,
     symmetric_pairs,
     undirected_build,
 )
+from pagerank_project_spark.plans.checkpoint import VidCheckpoint
 from pagerank_project_spark.session import engine_call
 
 
@@ -92,8 +90,8 @@ def label_propagation(
     warm_start: bool = False,
 ) -> LPAResult:
     """``checkpoint_store``: a plans.checkpoint.CheckpointStore — every
-    superstep writes its (id, label) snapshot, and the returned labels
-    READ the final one (keep its files while the labels are in use).
+    superstep writes its (vid, lbl) snapshot; a store holding state for
+    another vertex set raises ValueError before superstep 1.
 
     ``prepared_und``: a plans.prepared_graph.PreparedUndirected — the
     prepare-once artifact holding the STRING-SORTED vid map and the baked
@@ -147,8 +145,8 @@ def label_propagation(
                 # loop; slots-matched recovers direct superstep speed)
                 und = und.repartition(nparts, "src")
             return _run_loop(
-                spark, und.persist(), prepared_und.vmap, None, nparts, iterations,
-                checkpoint_store, frontier, phases, warm_start,
+                spark, und.persist(), prepared_und.vmap, prepared_und.key, None, nparts,
+                iterations, checkpoint_store, frontier, phases, warm_start,
             )
 
         nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -163,16 +161,51 @@ def label_propagation(
         # sf16). Persisted lazily: superstep 1 fills the cache.
         und = symmetric_pairs(ub.canon).repartition(nparts, "src").persist()
         return _run_loop(
-            spark, und, ub.vmap, ub.cache, nparts, iterations, checkpoint_store, frontier,
-            phases, warm_start,
+            spark, und, ub.vmap, ub.key, ub.cache, nparts, iterations, checkpoint_store,
+            frontier, phases, warm_start,
         )
+
+
+def _superstep(und: DataFrame, labels: DataFrame) -> DataFrame:
+    """One superstep, lazily: (vid, lbl) labels → each vertex's winning
+    label (the loop's plan, and the warm_start pilot's)."""
+    # shuffle_hash on the LABEL side (pagerank.py's superstep rule):
+    # un-hinted, Catalyst either auto-broadcasts the checkpointed
+    # |V|-row label vector (driver-serial HashedRelation build per
+    # superstep — the round-1 pagerank non-scaling bug) or falls to
+    # an SMJ that re-SORTS the cached symmetric edge multiset every
+    # superstep. The hash join streams the pre-partitioned cache
+    # and shuffles only the label rows.
+    nbr = (
+        und.join(
+            labels.select(F.col("vid").alias("_sv"), "lbl").hint("shuffle_hash"),
+            und.src == F.col("_sv"),
+        )
+        .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
+    )
+    keeper = labels.select("vid", "lbl", F.lit(0).alias("c"))  # isolated keep own
+    freq = nbr.unionByName(keeper).groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
+    # winner pick stays the row_number Window ON PURPOSE: Spark 4
+    # compiles row_number + (rn = 1) into WindowGroupLimit with a
+    # PARTIAL stage before the exchange — ≤1 candidate row per vid
+    # per map partition crosses the wire already. A packed-bigint
+    # max(cnt<<32 | ~lbl) HashAggregate rewrite was built and
+    # A/B-measured at sf16 1x4/4x4 and was SLOWER at both legs
+    # (sec/iter 71.7->76.5 @1x4, 22.7->40.1 @4x4): it re-buys the
+    # reduction WindowGroupLimit provides and pays an extra hash
+    # table over the full freq table for it (BENCH/BASELINE.md).
+    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("lbl"))
+    return (
+        freq.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select("vid", "lbl")
+    )
 
 
 def _pilot_superstep(und: DataFrame, vmap: DataFrame, nparts: int) -> None:
     """warm_start pilot: one throwaway superstep of the exact loop plan
     shape over a 1%-sampled slice (see label_propagation docstring). The
     result is discarded; nothing here feeds the loop."""
-    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("lbl"))
     vid_t = und.schema["src"].dataType.simpleString()  # match the loop's codegen shapes
     labels = (
         vmap.select(F.col("vid").cast(vid_t).alias("vid"), F.col("vid").cast(vid_t).alias("lbl"))
@@ -180,28 +213,14 @@ def _pilot_superstep(und: DataFrame, vmap: DataFrame, nparts: int) -> None:
         .repartition(nparts, "vid")
         .localCheckpoint(eager=False)
     )
-    sund = und.sample(fraction=0.01, seed=7)
-    nbr = (
-        sund.join(
-            labels.select(F.col("vid").alias("_sv"), "lbl").hint("shuffle_hash"),
-            sund.src == F.col("_sv"),
-        )
-        .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
-    )
-    keeper = labels.select("vid", "lbl", F.lit(0).alias("c"))
-    freq = nbr.unionByName(keeper).groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
-    winner = (
-        freq.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("vid", "lbl")
-    )
-    winner.localCheckpoint(eager=False).count()
+    _superstep(und.sample(fraction=0.01, seed=7), labels).localCheckpoint(eager=False).count()
 
 
 def _run_loop(
     spark: SparkSession,
     und: DataFrame,
     vmap: DataFrame,
+    key: list[int],
     cache: DataFrame | None,
     nparts: int,
     iterations: int,
@@ -211,23 +230,19 @@ def _run_loop(
     warm_start: bool = False,
 ) -> LPAResult:
     """``cache``: the persisted table under ``vmap`` when this call built
-    it; released at the end when the returned labels no longer read it."""
+    it; released once the decoded labels are materialized. ``key``: the
+    build's vertex-set key, which tags and guards the checkpoints."""
     # the label state carries the CACHE's vid dtype (int when the dense
     # sorted vids were narrowed, long otherwise) so every loop join/shuffle
     # stays narrow and exchange-compatible with the cache's partitioning
     vid_t = und.schema["src"].dataType.simpleString()
-    start_iter = 0
-    if checkpoint_store is not None and checkpoint_store.latest_iteration() is not None:
-        # resume: re-encode the checkpointed (id, label) strings → (vid, lbl)
-        start_iter = checkpoint_store.latest_iteration()
-        labels = encode_pair(checkpoint_store.read_state(spark, start_iter), vmap).select(
-            F.col("vid").cast(vid_t).alias("vid"), F.col("lbl").cast(vid_t).alias("lbl")
-        )
-    else:
-        labels = vmap.select(
-            F.col("vid").cast(vid_t).alias("vid"), F.col("vid").cast(vid_t).alias("lbl")
-        )
-    labels = labels.repartition(nparts, "vid").localCheckpoint(eager=False)
+    ck = VidCheckpoint(checkpoint_store, key, "lpa") if checkpoint_store is not None else None
+    start_iter = ck.start if ck is not None else 0
+    # resume: the checkpoint is the (vid, lbl) state itself
+    labels = ck.read(spark) if start_iter else vmap.select("vid", F.col("vid").alias("lbl"))
+    labels = labels.select(
+        F.col("vid").cast(vid_t).alias("vid"), F.col("lbl").cast(vid_t).alias("lbl")
+    ).repartition(nparts, "vid").localCheckpoint(eager=False)
 
     it = start_iter
     iter_secs: list[float] = []
@@ -237,39 +252,9 @@ def _run_loop(
         _pilot_superstep(und, vmap, nparts)
         labels.count()  # materialize the initial checkpoint pre-superstep-1
         phases["warm_start"] = round(time.time() - t_ws, 3)
-    w = Window.partitionBy("vid").orderBy(F.desc("cnt"), F.asc("lbl"))
     for it in range(start_iter + 1, iterations + 1):
         t_it = time.time()
-        # shuffle_hash on the LABEL side (pagerank.py's superstep rule):
-        # un-hinted, Catalyst either auto-broadcasts the checkpointed
-        # |V|-row label vector (driver-serial HashedRelation build per
-        # superstep — the round-1 pagerank non-scaling bug) or falls to
-        # an SMJ that re-SORTS the cached symmetric edge multiset every
-        # superstep. The hash join streams the pre-partitioned cache
-        # and shuffles only the label rows.
-        nbr = (
-            und.join(
-                labels.select(F.col("vid").alias("_sv"), "lbl").hint("shuffle_hash"),
-                und.src == F.col("_sv"),
-            )
-            .select(F.col("dst").alias("vid"), "lbl", F.lit(1).alias("c"))
-        )
-        keeper = labels.select("vid", "lbl", F.lit(0).alias("c"))  # isolated keep own
-        freq = nbr.unionByName(keeper).groupBy("vid", "lbl").agg(F.sum("c").alias("cnt"))
-        # winner pick stays the row_number Window ON PURPOSE: Spark 4
-        # compiles row_number + (rn = 1) into WindowGroupLimit with a
-        # PARTIAL stage before the exchange — ≤1 candidate row per vid
-        # per map partition crosses the wire already. A packed-bigint
-        # max(cnt<<32 | ~lbl) HashAggregate rewrite was built and
-        # A/B-measured at sf16 1x4/4x4 and was SLOWER at both legs
-        # (sec/iter 71.7->76.5 @1x4, 22.7->40.1 @4x4): it re-buys the
-        # reduction WindowGroupLimit provides and pays an extra hash
-        # table over the full freq table for it (BENCH/BASELINE.md).
-        winner = (
-            freq.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("vid", "lbl")
-        )
+        winner = _superstep(und, labels)
         if frontier:
             # both sides leave vid-partitioned operators → zero-exchange
             # hash join; the chg count is the early-stop test
@@ -283,25 +268,21 @@ def _run_loop(
             labels = labels.select("vid", "lbl")
         else:
             labels = winner.localCheckpoint(eager=False)
-            if checkpoint_store is None:
+            if ck is None:
                 labels.count()  # materialize + truncate each superstep
-        if checkpoint_store is not None:
+        if ck is not None:
             # without frontier, this write is the superstep's one
             # materializing action: it fills the label checkpoint
-            checkpoint_store.write_iteration(decode_pair(labels, vmap, "label"), iteration=it, metrics={})
+            ck.write(labels, it)
         iter_secs.append(round(time.time() - t_it, 3))
         if frontier and frontier_sizes[-1] == 0:
             break  # fixpoint: every further superstep is identity
 
     und.unpersist()
-    if checkpoint_store is not None and it > 0:
-        # the committed final snapshot IS the decode of the final labels,
-        # already computed: reading it back saves the caller a second decode
-        out = checkpoint_store.read_state(spark, it)
-        if cache is not None:
-            cache.unpersist()
-    else:
-        out = decode_pair(labels, vmap, "label")
+    # the one decode, materialized here so the rank cache under vmap can go
+    out = decode_pair(labels, vmap, "label").localCheckpoint(eager=True)
+    if cache is not None:
+        cache.unpersist()
     return LPAResult(
         labels=out,
         iterations=it,

@@ -299,7 +299,10 @@ def _run_loop(spark, cfg, g, nparts, t_start, checkpoint_store, bucketed) -> Pag
         ew, hubs = prepare_salted_edges(g.edges, nparts, cfg.salt_buckets, cfg.hub_degree_threshold)
         ew = ew.persist()
         hubs = hubs.persist()
-        hubs.count()
+        if hubs.count() == 0:
+            # no hub: the rank side takes salt 0 with no broadcast join
+            hubs.unpersist()
+            hubs = None
     elif bucketed:
         # the bucketed scan already reports HashPartitioning(src, nparts)
         # and per-bucket sorted output — the in-run repartition+sort

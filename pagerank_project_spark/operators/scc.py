@@ -275,7 +275,7 @@ def strongly_connected_components(
         # LONG vids for the loop (module doc). A caller-supplied vertex
         # table missing edge endpoints would silently drop those labels at
         # the vmap decode join, so the encode refuses it loudly instead.
-        vmap, enc_edges = hash_encode(edges, vertices, num_partitions=nparts)
+        vmap, enc_edges, _ = hash_encode(edges, vertices, num_partitions=nparts)
         enc_verts = vmap.select(F.col("vid").alias("id"))
 
         base = (

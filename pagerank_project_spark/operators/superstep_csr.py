@@ -80,11 +80,15 @@ def prepare_salted_edges(
 
 
 def replicate_rank_for_salt(
-    rank_side: DataFrame, hubs: DataFrame, salt_buckets: int
+    rank_side: DataFrame, hubs: DataFrame | None, salt_buckets: int
 ) -> DataFrame:
     """(_src, rank) → (_src, rank, salt): hub rows × S salts, others salt 0.
     Keeps the per-iteration shuffle at |V| + (S−1)·|hubs| rows while the
-    persisted (src, salt) edge partitioning is reused un-shuffled."""
+    persisted (src, salt) edge partitioning is reused un-shuffled.
+    ``hubs=None`` (no hub): every row takes salt 0 and nothing is joined —
+    the hub list's broadcast would be a Spark job of its own."""
+    if hubs is None:
+        return rank_side.select("_src", "rank", F.lit(0).alias("salt"))
     return (
         rank_side.join(
             F.broadcast(hubs.select(F.col("src").alias("_src"), F.lit(True).alias("_h"))),
@@ -120,7 +124,7 @@ def _scatter_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def csr_partials(
-    salted_edges: DataFrame, rank_side: DataFrame, hubs: DataFrame, salt_buckets: int
+    salted_edges: DataFrame, rank_side: DataFrame, hubs: DataFrame | None, salt_buckets: int
 ) -> DataFrame:
     """One superstep's α-free PARTIAL contributions: (dst, c) with one row
     per distinct dst per Arrow batch (the caller's groupBy finishes the
@@ -128,8 +132,9 @@ def csr_partials(
 
     The gather is a salt-replicated shuffled hash join on (src, salt): the
     keys co-partition with the persisted edge layout, so edges never move.
-    Measured on the sf0.001 graph (local[4]): 2 jobs / 7 stages per
-    superstep, the hub list's broadcast being its own job.
+    Without hubs (F1 at the auto threshold) a superstep is 1 Spark job,
+    pinned by ``test_one_job_per_superstep``; the hub list's broadcast
+    adds a job of its own.
     """
     # the hint forbids an auto-broadcast of the replicated rank side — see
     # operators/pagerank.py

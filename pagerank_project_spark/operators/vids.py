@@ -17,6 +17,10 @@ lives here, once:
   checks into its build aggregate. Collisions (birthday bound ~2e-7 at
   4M vertices) fall back to ``string_sorted_vids``, inside
   ``hash_encode`` and inside PageRank's build.
+- the vertex-set key ``(n, Σ xxhash64(id))``: both kinds of vid depend
+  on the id SET alone, so equal keys mean equal vids. ``undirected_build``
+  and ``hash_encode`` return it from the aggregate they already run; it
+  guards the label loops' vid-space checkpoints.
 - ``string_sorted_vids``: vid = 1-based rank of id in ascending string
   order, 1..n DENSE, computed WITHOUT a global single-task sort:
 
@@ -34,11 +38,11 @@ lives here, once:
 - ``undirected_build``: the one undirected build (LPA, CC propagation,
   ``prepare_undirected``) — universe, endpoint guard, sorted vids, encode
   joins, int32 narrowing and canonical pairs in ONE driver action.
-- the decode family: ``decode_pair`` (vid, lbl) → (id, label) for label
-  outputs and checkpoint writes, ``encode_pair`` its inverse for resume,
-  and ``relabel_min_id``, which renames each label group to its min
-  string id whatever the vid order (hashed vids, or groups a chain
-  member undercuts).
+- the decode family: ``decode_pair`` (vid, lbl) → (id, label) for
+  final label outputs, ``encode_pair`` its inverse for ``hash_encode``'s
+  collision path, and ``relabel_min_id``, which renames each label group
+  to its min string id whatever the vid order (hashed vids, or groups a
+  chain member undercuts).
 
 Why string-sorted DENSE vids matter (not just any unique longs):
 
@@ -115,31 +119,38 @@ def hashed_vids(verts: DataFrame, id_col: str = "id") -> DataFrame:
     return verts.withColumn("vid", F.xxhash64(id_col))
 
 
+def _id_hash_sum() -> Column:
+    """Σ xxhash64(id), exact: decimal, so no int64 overflow."""
+    return F.sum(F.xxhash64("id").cast("decimal(38,0)"))
+
+
 def hash_encode(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     validate_vertices: bool = True,
     num_partitions: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(vmap (id, vid), encoded edges (src, dst)) with hashed vids, after
-    ONE driver action: an aggregate over the universe that returns the
-    endpoints a validated vertex table misses (raised first) and the
-    count-distinct vid collision check. Both returns are plain
-    projections — the edges encode with no join. On a collision the ids
-    are ranked by ``string_sorted_vids`` instead and the edges encoded by
-    ``encode_pair``."""
+) -> tuple[DataFrame, DataFrame, list[int]]:
+    """(vmap (id, vid), encoded edges (src, dst), vertex-set key) with
+    hashed vids, after ONE driver action: an aggregate over the universe
+    that returns the endpoints a validated vertex table misses (raised
+    first), the count-distinct vid collision check and the key. Both
+    frames are plain projections — the edges encode with no join. On a
+    collision the ids are ranked by ``string_sorted_vids`` instead and the
+    edges encoded by ``encode_pair``."""
     chk = hashed_vids(universe(edges, vertices, validate_vertices)).agg(
-        F.count("*").alias("n"), F.sum("_known").alias("known"), F.count_distinct("vid").alias("nv")
+        F.count("*").alias("n"), F.sum("_known").alias("known"), F.count_distinct("vid").alias("nv"),
+        _id_hash_sum().alias("h"),
     ).first()
     if chk["n"] != chk["known"]:
         raise endpoints_missing_error(chk["n"] - chk["known"])
+    key = [chk["n"], int(chk["h"] or 0)]
     # the guard passed, so the supplied table alone is the universe
     verts = build_vertices(edges, vertices)
     if chk["nv"] != chk["n"]:
         vmap = string_sorted_vids(verts, "id", num_partitions)
-        return vmap, encode_pair(edges.select("src", "dst"), vmap).toDF("src", "dst")
+        return vmap, encode_pair(edges.select("src", "dst"), vmap).toDF("src", "dst"), key
     enc = hashed_vids(edges.select("src", "dst"), "src").select(F.col("vid").alias("src"), "dst")
-    return hashed_vids(verts), hashed_vids(enc, "dst").select("src", F.col("vid").alias("dst"))
+    return hashed_vids(verts), hashed_vids(enc, "dst").select("src", F.col("vid").alias("dst")), key
 
 
 def _ranked(rows: DataFrame, nparts: int) -> DataFrame:
@@ -163,21 +174,23 @@ def _ranked(rows: DataFrame, nparts: int) -> DataFrame:
     )
 
 
-def _rank_stats(ranked: DataFrame, nparts: int) -> tuple[Column, int, int]:
-    """ONE collect of per-range-partition (count, Σknown): returns the vid
-    column (rank in string order, 1..rows), the row count and Σknown."""
+def _rank_stats(ranked: DataFrame, nparts: int) -> tuple[Column, int, int, list[int]]:
+    """ONE collect of per-range-partition (count, Σknown, Σ xxhash64(id)):
+    returns the vid column (rank in string order, 1..rows), the row count,
+    Σknown and the vertex-set key (rows, Σ xxhash64(id))."""
     stats = {
-        r["_pid"]: (r["cnt"], r["known"])
+        r["_pid"]: (r["cnt"], r["known"], r["h"])
         for r in ranked.groupBy("_pid")
-        .agg(F.count("*").alias("cnt"), F.sum("_known").alias("known"))
+        .agg(F.count("*").alias("cnt"), F.sum("_known").alias("known"), _id_hash_sum().alias("h"))
         .collect()
     }
     offsets, acc = [], 1
     for pid in range(nparts):
         offsets.append(F.lit(acc).cast("long"))
-        acc += stats.get(pid, (0, 0))[0]
+        acc += stats.get(pid, (0, 0, 0))[0]
     vid = (F.col("_rn") + F.element_at(F.array(*offsets), F.col("_pid") + 1)).alias("vid")
-    return vid, acc - 1, sum(k for _, k in stats.values())
+    key = [acc - 1, sum(int(h) for _, _, h in stats.values())]
+    return vid, acc - 1, sum(k for _, k, _ in stats.values()), key
 
 
 def string_sorted_vids(
@@ -194,7 +207,7 @@ def string_sorted_vids(
     ranked = _ranked(
         verts.select(F.col(id_col).alias("id")).distinct().withColumn("_known", F.lit(1)), nparts
     )
-    vid, _, _ = _rank_stats(ranked, nparts)
+    vid, _, _, _ = _rank_stats(ranked, nparts)
     out = ranked.select(F.col("id").alias(id_col), vid).persist()
     out.count()
     ranked.unpersist()
@@ -222,6 +235,7 @@ class UndirectedBuild:
     canon: DataFrame  # canonical_pairs of the encoded edges; int vids when narrowed
     n: int
     cache: DataFrame  # the persisted rank table under vmap
+    key: list[int]  # the vertex-set key (n, Σ xxhash64(id))
 
 
 def undirected_build(
@@ -237,8 +251,9 @@ def undirected_build(
     optional int32 narrowing and the canonical pairs — in ONE driver action.
 
     The vertices are ranked over ``universe``, so one collect of
-    per-range-partition (count, Σknown) gives the offsets, n = Σknown and
-    the missing endpoints (count − Σknown). Nothing else is
+    per-range-partition (count, Σknown, Σ xxhash64(id)) gives the offsets,
+    n = Σknown, the missing endpoints (count − Σknown) and the vertex-set
+    key. Nothing else is
     materialized: the rank table under ``vmap`` is filled by that collect,
     and the encode joins and the caller's edge cache run inside the
     caller's first superstep.
@@ -251,7 +266,7 @@ def undirected_build(
     spark = SparkSession.getActiveSession()
     nparts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     cache = _ranked(universe(edges, vertices, validate_vertices), nparts)
-    vid, n_rows, n = _rank_stats(cache, nparts)
+    vid, n_rows, n, key = _rank_stats(cache, nparts)
     err = None
     if require_vertices and n == 0:
         err = ValueError("empty graph")
@@ -268,34 +283,29 @@ def undirected_build(
     )
     vid_t = "int" if narrow and n < INT_VID_LIMIT else "long"
     enc = enc.select(F.col("_s").cast(vid_t).alias("src"), F.col("_t").cast(vid_t).alias("dst"))
-    return UndirectedBuild(vmap, canonical_pairs(enc), n, cache)
+    return UndirectedBuild(vmap, canonical_pairs(enc), n, cache, key)
 
 
 def decode_pair(pairs: DataFrame, vmap: DataFrame, label: str) -> DataFrame:
-    """Two vid columns (vertex, label) → (id, ``label``) strings: a label
-    output, or a checkpoint snapshot (LPA and CC propagation run this
-    inside every superstep's write). shuffle_hash: an SMJ would sort both
-    |V|-sized sides twice. Narrowed int vids widen back to the map's long
-    explicitly (the join would coerce anyway; explicit keeps the shuffle
-    keys unambiguous)."""
-    pairs = pairs.toDF("vid", "lbl").select(
-        F.col("vid").cast("long").alias("vid"), F.col("lbl").cast("long").alias("lbl")
-    )
+    """Two vid columns (vertex, label) → (id, ``label``) strings: a final
+    label output (checkpoints stay in vid space). shuffle_hash: an SMJ
+    would sort both |V|-sized sides twice. The map's vids take the pairs'
+    dtype (narrowed int vids are all < INT_VID_LIMIT), so pairs already
+    partitioned by vertex — a loop's label state — join without a
+    re-shuffle; widening the pairs to long would re-hash them."""
+    pairs = pairs.toDF("vid", "lbl")
+    ids = vmap.select(F.col("vid").cast(pairs.schema["vid"].dataType).alias("vid"), "id")
     return (
-        pairs.join(vmap.select("vid", "id").hint("shuffle_hash"), "vid")
-        .join(
-            vmap.select(F.col("vid").alias("lbl"), F.col("id").alias(label)).hint("shuffle_hash"),
-            "lbl",
-        )
+        pairs.join(ids.hint("shuffle_hash"), "vid")
+        .join(ids.select(F.col("vid").alias("lbl"), F.col("id").alias(label)).hint("shuffle_hash"), "lbl")
         .select("id", label)
     )
 
 
 def encode_pair(pairs: DataFrame, vmap: DataFrame) -> DataFrame:
     """Two string-id columns → (vid, lbl): the inverse of ``decode_pair``,
-    which re-encodes a checkpoint snapshot on resume (and the edges after
-    a hash collision in ``hash_encode``). Inner joins: ids outside the map
-    drop out."""
+    which encodes the edges after a hash collision in ``hash_encode``.
+    Inner joins: ids outside the map drop out."""
     return (
         pairs.toDF("id", "_lid")
         .join(vmap.select("id", "vid").hint("shuffle_hash"), "id")

@@ -12,6 +12,11 @@ is atomic-by-rename at the manifest level: an iteration is visible to
 ``latest_iteration()`` only after its manifest entry is committed, so a
 crash mid-write never yields a partial resume point. A real Iceberg
 catalog drops in behind the same four methods.
+
+The label loops (LPA, CC propagation, CC star) write their state in the
+loop's own vid space, as the superstep left it: no decode per write, no
+encode per resume. Vids are stable only for the same vertex set, so
+``VidCheckpoint`` tags every manifest entry with the build's key.
 """
 
 from __future__ import annotations
@@ -72,3 +77,33 @@ class CheckpointStore:
             int(k): v["metrics"]
             for k, v in self._read_manifest()["iterations"].items()
         }
+
+
+class VidCheckpoint:
+    """A label loop's view of a CheckpointStore. Each entry is tagged with
+    the loop's ``algorithm`` and the build's vertex-set key; opening
+    raises ValueError, before any superstep runs, when the latest entry
+    has another tag — its vids would name other vertices."""
+
+    def __init__(self, store: CheckpointStore, key: list[int], algorithm: str):
+        self.store, self.tags = store, {"algorithm": algorithm, "vid_key": key}
+        latest = store.latest_iteration()
+        self.start = latest or 0  # the iteration the loop resumes after
+        got = {} if latest is None else store.metrics()[latest]
+        if latest is not None and got.get("vid_key") != key:
+            raise ValueError(
+                f"checkpoint store {store.root} holds state for vertex-set key "
+                f"(n, sum xxhash64(id)) = {got.get('vid_key')} (None: the older "
+                f"string-id format), not this graph's {key}; start a new store"
+            )
+        if latest is not None and got["algorithm"] != algorithm:
+            raise ValueError(
+                f"checkpoint store holds {got['algorithm']!r} state; cannot resume with "
+                f"algorithm={algorithm!r}"
+            )
+
+    def read(self, spark: SparkSession) -> DataFrame:
+        return self.store.read_state(spark, self.start)
+
+    def write(self, state: DataFrame, iteration: int, metrics: dict | None = None) -> None:
+        self.store.write_iteration(state, iteration=iteration, metrics={**self.tags, **(metrics or {})})

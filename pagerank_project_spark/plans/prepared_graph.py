@@ -153,7 +153,7 @@ def load_prepared(spark: SparkSession, path: str) -> PreparedGraph:
 # Prepared UNDIRECTED graph (LPA / propagation-mode consumers)
 # --------------------------------------------------------------------------
 
-UND_VERSION = 2
+UND_VERSION = 3  # v3: the manifest holds the vertex-set key (vids.undirected_build)
 
 
 @dataclass
@@ -163,6 +163,7 @@ class PreparedUndirected:
     n: int
     m_und: int  # symmetric row count (2x the canonical pair count)
     buckets: int
+    key: list[int]  # vertex-set key (n, Σ xxhash64(id)): guards vid-space checkpoints
 
 
 def _und_table_name(path: str) -> str:
@@ -215,6 +216,7 @@ def prepare_undirected(
     manifest = {
         "version": UND_VERSION, "kind": "undirected_sorted",
         "n": ub.n, "m_und": m_und, "buckets": buckets, "table": tbl, "dtype": dtype,
+        "key": ub.key,
     }
     tmp = f"{path}/manifest.json.tmp"
     with open(tmp, "w") as f:
@@ -227,16 +229,13 @@ def prepare_undirected(
 def load_prepared_undirected(spark: SparkSession, path: str) -> PreparedUndirected:
     with open(f"{path}/manifest.json") as f:
         manifest = json.load(f)
-    if manifest.get("kind") != "undirected_sorted" or manifest.get("version") not in (1, UND_VERSION):
+    if manifest.get("kind") != "undirected_sorted" or manifest.get("version") != UND_VERSION:
         raise ValueError(
-            f"prepared dir at {path} is not an undirected_sorted v1/v{UND_VERSION} artifact"
+            f"prepared dir at {path} is not an undirected_sorted v{UND_VERSION} artifact; "
+            "prepare it again"
         )
-    tbl, buckets = manifest["table"], manifest["buckets"]
-    # v1 artifacts predate the int32 narrowing (and are bucket-sorted by src
-    # only) — they keep reading as bigint
-    dtype = manifest.get("dtype", "bigint")
+    tbl, buckets, dtype = manifest["table"], manifest["buckets"], manifest["dtype"]
     sql_t = "INT" if dtype == "int" else "BIGINT"
-    sort_spec = "src, dst" if manifest.get("version", 1) >= 2 else "src"
     if spark.catalog.tableExists(tbl) and not _catalog_entry_matches(spark, tbl, path, buckets, dtype):
         # a stale entry (another location, bucket count or vid type — e.g.
         # registered before this path was re-prepared with other vids)
@@ -244,7 +243,7 @@ def load_prepared_undirected(spark: SparkSession, path: str) -> PreparedUndirect
     if not spark.catalog.tableExists(tbl):
         spark.sql(
             f"CREATE TABLE {tbl} (src {sql_t}, dst {sql_t}) USING PARQUET "
-            f"CLUSTERED BY (src) SORTED BY ({sort_spec}) INTO {buckets} BUCKETS "
+            f"CLUSTERED BY (src) SORTED BY (src, dst) INTO {buckets} BUCKETS "
             f"LOCATION '{path}/edges'"
         )
     return PreparedUndirected(
@@ -253,4 +252,5 @@ def load_prepared_undirected(spark: SparkSession, path: str) -> PreparedUndirect
         n=manifest["n"],
         m_und=manifest["m_und"],
         buckets=buckets,
+        key=manifest["key"],
     )

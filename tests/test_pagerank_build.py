@@ -118,22 +118,26 @@ def test_forced_build_branch_matches_oracle(spark, request, monkeypatch, tmp_pat
         assert len(fallbacks) == 1 + len(MODES)  # every in-run build fell back too
 
 
-def test_one_job_per_superstep(spark, small_rows):
-    """The relational superstep is ONE Spark job: the rank side meets the
-    edge cache in a shuffled hash join, never through a broadcast exchange
-    (which is a job of its own). Everything outside the loop is the same
-    for both runs, so 3 and 5 unconverged supersteps differ by 2 jobs."""
+@pytest.mark.parametrize("strategy", ["relational", "csr"])
+def test_one_job_per_superstep(spark, small_rows, strategy):
+    """A superstep is ONE Spark job in both strategies: the rank side
+    meets the edge cache in a shuffled hash join, never through a
+    broadcast exchange (which is a job of its own) — for CSR on F1, which
+    has no hub at the auto threshold, not even the hub list's. Everything
+    outside the loop is the same for both runs, so 3 and 5 unconverged
+    supersteps differ by 2 jobs."""
     edges = _edges_df(spark, small_rows)
     # the first PageRank call of a session runs one more build job than
     # every later one; a warm-up keeps it out of the counts below
-    pagerank(spark, edges, cfg=PageRankConfig(max_iterations=1))
+    pagerank(spark, edges, cfg=PageRankConfig(max_iterations=1, strategy=strategy))
     sc = spark.sparkContext
     counts = {}
     for steps in (3, 5):
-        group = f"pagerank-jobcount-{steps}"
+        group = f"pagerank-jobcount-{strategy}-{steps}"
         sc.setJobGroup(group, "jobs per superstep")
         try:
-            res = pagerank(spark, edges, cfg=PageRankConfig(epsilon=0.0, max_iterations=steps))
+            cfg = PageRankConfig(epsilon=0.0, max_iterations=steps, strategy=strategy)
+            res = pagerank(spark, edges, cfg=cfg)
             res.ranks.collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)

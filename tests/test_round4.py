@@ -296,7 +296,7 @@ def test_hash_encode_zero_encode_joins(spark):
     from pagerank_project_spark.operators.vids import hash_encode
 
     e = edges_df(spark, [("a", "b"), ("b", "c")])
-    vmap, enc = hash_encode(e)
+    vmap, enc, _ = hash_encode(e)
     plan = enc._jdf.queryExecution().optimizedPlan().toString()
     assert "Join" not in plan
     assert sorted(r["vid"] for r in vmap.collect()) == sorted(

@@ -2,7 +2,9 @@
 the collision fallback of ``hash_encode`` under CC star and SCC, forced
 through the ``vids.hashed_vids`` seam and checked against networkx on F1
 and sf0.001, the endpoint guard of every operator that takes a vertex
-table, and CC's salted hub join."""
+table, and CC's salted hub join. Then the label loops' vid-space
+checkpoints: the vertex-set key guard, and resume after a manifest commit
+that fails."""
 
 from __future__ import annotations
 
@@ -23,6 +25,7 @@ from pagerank_project_spark.operators.kcore import kcore
 from pagerank_project_spark.operators.labelprop import label_propagation
 from pagerank_project_spark.operators.pagerank import pagerank
 from pagerank_project_spark.operators.scc import strongly_connected_components
+from pagerank_project_spark.plans.checkpoint import CheckpointStore
 
 
 def _min_labels(comps) -> dict[str, str]:
@@ -150,3 +153,90 @@ def test_salted_hub_join_matches_networkx(spark, monkeypatch, small_rows):
     assert res.converged
     assert salted and all(salted)
     assert got == _oracle("cc", small_rows, {x for r in small_rows for x in r})
+
+
+# --------------------------------------------------------------------------
+# vid-space checkpoints
+# --------------------------------------------------------------------------
+
+# each label loop, run to superstep k (None: to its end) with a store
+LOOPS = {
+    "lpa": lambda s, e, v, store, k: label_propagation(
+        s, e, vertices=v, iterations=k or 4, checkpoint_store=store
+    ),
+    "cc_propagation": lambda s, e, v, store, k: connected_components(
+        s, e, vertices=v, algorithm="propagation", max_iterations=k or 200, checkpoint_store=store
+    ),
+    # driver_finish_edges=0: every round is distributed and writes its state
+    "cc_star": lambda s, e, v, store, k: connected_components(
+        s, e, vertices=v, driver_finish_edges=0, max_iterations=k or 200, checkpoint_store=store
+    ),
+}
+
+
+def _labels(res) -> dict[str, str]:
+    return {r[0]: r[1] for r in res.labels.collect()}
+
+
+def _renamed(spark, rows):
+    """F1 with one id renamed: the same n, another vertex set."""
+    old = sorted({x for r in rows for x in r})[0]
+    new = [tuple("renamed" if x == old else x for x in r) for r in rows]
+    return spark.createDataFrame(pd.DataFrame(new, columns=["src", "dst"]))
+
+
+@pytest.mark.parametrize("loop", sorted(LOOPS))
+def test_resume_over_another_vertex_set_raises(spark, f1_graph, tmp_path, loop):
+    """A store written for F1 refuses a resume over F1 with one id renamed:
+    the vids would name other vertices."""
+    edges, _, rows, _ = f1_graph
+    store = CheckpointStore(str(tmp_path), loop)
+    LOOPS[loop](spark, edges, None, store, 2)
+    assert store.latest_iteration() == 2
+    with pytest.raises(ValueError, match=r"holds state for vertex-set key .* = \[6, \d+\]"):
+        LOOPS[loop](spark, _renamed(spark, rows), None, store, None)
+
+
+@pytest.mark.parametrize("loop", sorted(LOOPS))
+def test_resume_from_keyless_store_raises(spark, f1_graph, tmp_path, loop):
+    """A store whose manifest has no vertex-set key (the older string-id
+    format) refuses to resume."""
+    edges, _, _, _ = f1_graph
+    store = CheckpointStore(str(tmp_path), loop)
+    LOOPS[loop](spark, edges, None, store, 2)
+    manifest = store._read_manifest()
+    for entry in manifest["iterations"].values():
+        del entry["metrics"]["vid_key"]
+    store._commit_manifest(manifest)
+    with pytest.raises(ValueError, match=r"= None \(None: the older string-id format\)"):
+        LOOPS[loop](spark, edges, None, store, None)
+
+
+@pytest.mark.parametrize("graph", ["f1_graph", "sf0001_graph"])
+@pytest.mark.parametrize("loop", sorted(LOOPS))
+def test_resume_after_failed_manifest_commit(spark, request, monkeypatch, tmp_path, loop, graph):
+    """The third write's parquet lands but its manifest commit fails (its
+    superstep is 3, or 4 when CC star's driver finish follows a peel): the
+    rerun resumes from superstep 2 and equals the uninterrupted run, and
+    so does a third call over the finished store."""
+    edges, verts, _, _ = request.getfixturevalue(graph)
+    want = _labels(LOOPS[loop](spark, edges, verts, None, None))
+    commits: list[int] = []
+    real = CheckpointStore._commit_manifest
+
+    def flaky(self, manifest):
+        commits.append(max(int(k) for k in manifest["iterations"]))
+        if len(commits) == 3:
+            raise OSError("injected: manifest commit failed")
+        real(self, manifest)
+
+    monkeypatch.setattr(CheckpointStore, "_commit_manifest", flaky)
+    store = CheckpointStore(str(tmp_path), loop)
+    with pytest.raises(OSError, match="injected"):
+        LOOPS[loop](spark, edges, verts, store, None)
+    assert commits[:2] == [1, 2] and commits[2] >= 3
+    assert store.latest_iteration() == 2
+    res = LOOPS[loop](spark, edges, verts, store, None)
+    assert min(commits[3:]) > 2  # no superstep before 3 runs again
+    assert _labels(res) == want
+    assert _labels(LOOPS[loop](spark, edges, verts, store, None)) == want

@@ -1,7 +1,7 @@
 """Warm calls: a second pass of PageRank, CC and LPA over the same graph
 compiles no generated class (the session's codegen cache holds
-the engine's plans), and LPA's store-backed labels are the committed final
-snapshot — equal to a run without a store."""
+the engine's plans), and LPA's store-backed labels equal a run without a
+store, with the final (vid, lbl) snapshot a complete resume point."""
 
 from __future__ import annotations
 
@@ -111,10 +111,19 @@ def _lpa(spark, edges, verts, store):
 
 
 def test_lpa_store_labels_are_the_final_snapshot(spark, graph, tmp_path):
+    """The labels of a store-backed run equal a run without a store; the
+    final snapshot holds one (vid, lbl) row per vertex; resuming the
+    finished store runs no superstep and returns the same labels."""
     edges, verts = graph
     store = CheckpointStore(str(tmp_path), "lpa")
     with_store = set(map(tuple, _lpa(spark, edges, verts, store)))
     without = set(map(tuple, _lpa(spark, edges, verts, None)))
+    assert with_store == without
     assert store.latest_iteration() == LPA_ITERATIONS
-    snapshot = store.read_state(spark, LPA_ITERATIONS).collect()
-    assert with_store == without == set(map(tuple, snapshot))
+    snapshot = store.read_state(spark, LPA_ITERATIONS)
+    assert snapshot.columns == ["vid", "lbl"]
+    assert snapshot.count() == len(without)
+    res = label_propagation(spark, edges, vertices=verts, iterations=LPA_ITERATIONS,
+                            checkpoint_store=store)
+    assert res.iterations == LPA_ITERATIONS and res.iter_secs == []
+    assert set(map(tuple, res.labels.collect())) == without
